@@ -79,65 +79,11 @@ final case class IvfPqModel(ivf: IvfModel, pq: PqModel, coded: DataFrame,
     * round-6/vec_id ranking rule on both paths). */
   def searchMany(queries: Seq[(Long, Array[Float])], nprobe: Int, k: Int,
                  shortlist: Int = 0): DataFrame = {
-    val width = if (shortlist > 0) shortlist else defaultShortlist
-    val spark = coded.sparkSession
-    import spark.implicits._
     val qArr = queries.toArray
-    val allow = qArr.map { case (_, v) => ivf.probes(v, nprobe).toSet }
-    val union = allow.flatten.distinct.toSeq
-    val luts = qArr.map { case (_, v) => pq.lut(v) }
-    val qB = spark.sparkContext.broadcast((qArr.map(_._1), allow, luts))
-    val partial = coded.where(col("list_id").isin(union: _*))
-      .select(col("vec_id").cast("long"), col("list_id").cast("int"), col("pq_codes"))
-      .as[(Long, Int, Array[Int])]
-      .mapPartitions { it =>
-        val (qids, allowSets, ls) = qB.value
-        val worstFirst: Ordering[(Double, Long)] = Ordering.fromLessThan {
-          (a, b) => a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-        }
-        val heaps = Array.fill(qids.length)(
-          collection.mutable.PriorityQueue.empty[(Double, Long)](worstFirst))
-        it.foreach { case (id, listId, codes) =>
-          var q = 0
-          while (q < qids.length) {
-            if (allowSets(q).contains(listId)) {
-              val lut = ls(q)
-              var acc = 0.0
-              var s = 0
-              while (s < codes.length) { acc += lut(s)(codes(s)); s += 1 }
-              val sc = VecMath.round6(acc)
-              val h = heaps(q)
-              if (h.size < width) h.enqueue((sc, id))
-              else {
-                val (ws, wid) = h.head
-                if (sc > ws || (sc == ws && id < wid)) { h.dequeue(); h.enqueue((sc, id)) }
-              }
-            }
-            q += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-          h.iterator.map { case (sc, id) => (qids(q), id, sc) }
-        }
-      }
-      .toDF("qid", "vec_id", "adc_score")
-    val shortPairs = org.apache.spark.sql.graft.TopKPerKey(
-      partial, Seq(col("qid")), Seq(desc("adc_score"), col("vec_id")), width)
-    val qDf = qArr.toSeq.map { case (qid, v) => (qid, v.toSeq) }.toDF("qid", "qvec")
-    val refined = pq.corpus
-      .join(broadcast(shortPairs.select("qid", "vec_id")), "vec_id")
-      .join(broadcast(qDf), "qid")
-      .withColumn("score",
-        round(graft.functions.VectorFunctions.dot(
-          col("embedding"), col("qvec").cast("array<float>")), 6))
-    val top = org.apache.spark.sql.graft.TopKPerKey(
-      refined.select(col("qid"), col("vec_id"), col("score")),
-      Seq(col("qid")), Seq(desc("score"), col("vec_id")), k)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(desc("score"), col("vec_id"))
-    top.withColumn("rank", row_number().over(w))
-      .select(col("qid"), col("rank"), col("vec_id"), col("score"))
-      .orderBy(col("qid"), col("rank"))
+    IvfPq.searchManyCodes(coded, pq.corpus, qArr,
+      allow = qArr.map { case (_, v) => ivf.probes(v, nprobe).toSet },
+      luts = qArr.map { case (_, v) => pq.lut(v) }, biases = null,
+      width = if (shortlist > 0) shortlist else defaultShortlist, k = k)
   }
 
   /** Incremental add on the composed tier — the 100 TB serving shape's
@@ -222,6 +168,62 @@ final case class IvfPqModel(ivf: IvfModel, pq: PqModel, coded: DataFrame,
 }
 
 object IvfPq {
+
+  /** The batched scan + refine both composed tiers share: ONE scan of
+    * `coded` pruned to the union of the probed lists `allow`; per query a
+    * [[TopK]] of `width` over biases(q)(list) + Σ lut[s][code_s] (`biases`
+    * null = no bias); then ONE exact refine of the ≤|Q|·width survivors —
+    * a broadcast pair join against `corpus` with per-qid query vectors —
+    * ranked per qid. */
+  private[search] def searchManyCodes(
+      coded: DataFrame, corpus: DataFrame, qArr: Array[(Long, Array[Float])],
+      allow: Array[Set[Int]], luts: Array[Array[Array[Double]]],
+      biases: Array[Map[Int, Double]], width: Int, k: Int): DataFrame = {
+    TopK.requireK(width, "shortlist")
+    val spark = coded.sparkSession
+    import spark.implicits._
+    val union = allow.flatten.distinct.toSeq
+    val qB = spark.sparkContext.broadcast((qArr.map(_._1), allow, luts, biases))
+    val partial = coded.where(col("list_id").isin(union: _*))
+      .select(col("vec_id").cast("long"), col("list_id").cast("int"), col("pq_codes"))
+      .as[(Long, Int, Array[Int])]
+      .mapPartitions { it =>
+        val (qids, allowSets, ls, bs) = qB.value
+        val tops = Array.fill(qids.length)(new TopK(width))
+        it.foreach { case (id, listId, codes) =>
+          var q = 0
+          while (q < qids.length) {
+            if (allowSets(q).contains(listId)) {
+              val lut = ls(q)
+              var acc = if (bs == null) 0.0 else bs(q)(listId)
+              var s = 0
+              while (s < codes.length) { acc += lut(s)(codes(s)); s += 1 }
+              tops(q).offer(acc, id)
+            }
+            q += 1
+          }
+        }
+        TopK.rows(qids, tops)
+      }
+      .toDF("qid", "vec_id", "adc_score")
+    val shortPairs = org.apache.spark.sql.graft.TopKPerKey(
+      partial, Seq(col("qid")), Seq(desc("adc_score"), col("vec_id")), width)
+    val qDf = qArr.toSeq.map { case (qid, v) => (qid, v.toSeq) }.toDF("qid", "qvec")
+    val refined = corpus
+      .join(broadcast(shortPairs.select("qid", "vec_id")), "vec_id")
+      .join(broadcast(qDf), "qid")
+      .withColumn("score",
+        round(graft.functions.VectorFunctions.dot(
+          col("embedding"), col("qvec").cast("array<float>")), 6))
+    val top = org.apache.spark.sql.graft.TopKPerKey(
+      refined.select(col("qid"), col("vec_id"), col("score")),
+      Seq(col("qid")), Seq(desc("score"), col("vec_id")), k)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("qid").orderBy(desc("score"), col("vec_id"))
+    top.withColumn("rank", row_number().over(w))
+      .select(col("qid"), col("rank"), col("vec_id"), col("score"))
+      .orderBy(col("qid"), col("rank"))
+  }
 
   /** Compose from trained halves: ONE projection over the ivf-indexed
     * table derives the code column row-locally (vectors are read once,

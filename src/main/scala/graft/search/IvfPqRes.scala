@@ -83,66 +83,13 @@ final case class IvfPqResModel(ivf: IvfModel, m: Int, dsub: Int, kCodes: Int,
     * dial (spec-pinned). */
   def searchMany(queries: Seq[(Long, Array[Float])], nprobe: Int, k: Int,
                  shortlist: Int = 100): DataFrame = {
-    val spark = coded.sparkSession
-    import spark.implicits._
     val qArr = queries.toArray
     val allow = qArr.map { case (_, v) => ivf.probes(v, nprobe).toSet }
-    val union = allow.flatten.distinct.toSeq
-    val luts = qArr.map { case (_, v) => lut(v) }
-    val biases = qArr.zipWithIndex.map { case ((_, v), i) =>
-      allow(i).iterator.map(l => l -> listBias(v, l)).toMap
+    val biases = qArr.zip(allow).map { case ((_, v), lists) =>
+      lists.iterator.map(l => l -> listBias(v, l)).toMap
     }
-    val qB = spark.sparkContext.broadcast((qArr.map(_._1), allow, luts, biases))
-    val partial = coded.where(col("list_id").isin(union: _*))
-      .select(col("vec_id").cast("long"), col("list_id").cast("int"), col("pq_codes"))
-      .as[(Long, Int, Array[Int])]
-      .mapPartitions { it =>
-        val (qids, allowSets, ls, bs) = qB.value
-        val worstFirst: Ordering[(Double, Long)] = Ordering.fromLessThan {
-          (a, b) => a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-        }
-        val heaps = Array.fill(qids.length)(
-          collection.mutable.PriorityQueue.empty[(Double, Long)](worstFirst))
-        it.foreach { case (id, listId, codes) =>
-          var q = 0
-          while (q < qids.length) {
-            if (allowSets(q).contains(listId)) {
-              val l = ls(q)
-              var acc = bs(q)(listId)
-              var s = 0
-              while (s < codes.length) { acc += l(s)(codes(s)); s += 1 }
-              val sc = VecMath.round6(acc)
-              val h = heaps(q)
-              if (h.size < shortlist) h.enqueue((sc, id))
-              else {
-                val (ws, wid) = h.head
-                if (sc > ws || (sc == ws && id < wid)) { h.dequeue(); h.enqueue((sc, id)) }
-              }
-            }
-            q += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-          h.iterator.map { case (sc, id) => (qids(q), id, sc) }
-        }
-      }
-      .toDF("qid", "vec_id", "adc_score")
-    val shortPairs = org.apache.spark.sql.graft.TopKPerKey(
-      partial, Seq(col("qid")), Seq(desc("adc_score"), col("vec_id")), shortlist)
-    val qDf = qArr.toSeq.map { case (qid, v) => (qid, v.toSeq) }.toDF("qid", "qvec")
-    val refined = corpus
-      .join(broadcast(shortPairs.select("qid", "vec_id")), "vec_id")
-      .join(broadcast(qDf), "qid")
-      .withColumn("score", round(
-        dot(col("embedding"), col("qvec").cast("array<float>")), 6))
-    val top = org.apache.spark.sql.graft.TopKPerKey(
-      refined.select(col("qid"), col("vec_id"), col("score")),
-      Seq(col("qid")), Seq(desc("score"), col("vec_id")), k)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(desc("score"), col("vec_id"))
-    top.withColumn("rank", row_number().over(w))
-      .select(col("qid"), col("rank"), col("vec_id"), col("score"))
-      .orderBy(col("qid"), col("rank"))
+    IvfPq.searchManyCodes(coded, corpus, qArr, allow, qArr.map { case (_, v) => lut(v) },
+      biases, shortlist, k)
   }
 
   /** Composed-index health (IvfPqModel.stats shape, residual flavor). */

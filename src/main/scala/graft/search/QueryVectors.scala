@@ -93,7 +93,11 @@ object VecMath {
     acc
   }
 
-  /** Round half-up to 6 dp — matches Spark's `round` (BigDecimal HALF_UP). */
+  /** Round half-up to 6 dp — matches Spark's `round` (BigDecimal HALF_UP).
+    * Monotone (x ≤ y ⇒ round6(x) ≤ round6(y)), and any x with
+    * round6(x) ≥ w lies at or above w − 5e-7: the two facts that let
+    * [[TopK]] skip rounding a raw score below `worst − 1e-6` without
+    * changing any ranking. */
   def round6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 }

@@ -16,7 +16,12 @@ import org.apache.spark.storage.StorageLevel
   * equivalent of the reference's layout: one primitive row-major
   * `Array[Float]` block per partition, persisted as JVM objects, scored
   * with the same tight double-accumulated loop `VecMath.dot` uses, one
-  * bounded k-heap per block, O(P·k) driver merge.
+  * [[TopK]] per partition, O(P·k) driver merge.
+  *
+  * Ranking contract: round6(score) descending, ascending-id ties. Rounding
+  * is deferred to rows that can still rank: with k rows held, a raw score
+  * below `worst − 1e-6` is skipped unrounded — exact, since round6 is
+  * monotone and any raw value rounding to ≥ worst is ≥ worst − 5e-7.
   *
   * Scale shape: identical to the brute-force TakeOrdered (per-partition
   * heap + driver merge) — only the storage differs. At 100 TB the corpus
@@ -31,18 +36,17 @@ final class RamCorpus private (
     * Score parity with the DataFrame path: float products accumulated in
     * double, rounded to 6 dp, ties broken by ascending id. */
   def topK(qvec: Array[Float], k: Int,
-           labelPred: Option[Int => Boolean] = None): Seq[(Long, Double)] = {
-    require(qvec.length == dim, s"dot_f32: dimension mismatch (${qvec.length} vs $dim)")
-    candidates(qvec, k, labelPred, withPass = false)
-      .map { case (id, s, _) => (id, s) }
-  }
+           labelPred: Option[Int => Boolean] = None): Seq[(Long, Double)] =
+    candidates(qvec, k, labelPred, withPass = false).pairs
 
   /** Top-`rung` candidates by score over the WHOLE corpus, each tagged
     * with its predicate result — the post-filter ladder's input (rank
     * first, filter after). */
   def topCandidates(qvec: Array[Float], rung: Int,
-                    labelPred: Option[Int => Boolean]): Seq[(Long, Double, Boolean)] =
-    candidates(qvec, rung, labelPred, withPass = true)
+                    labelPred: Option[Int => Boolean]): Seq[(Long, Double, Boolean)] = {
+    val p = candidates(qvec, rung, labelPred, withPass = true)
+    p.ids.indices.map(i => (p.ids(i), p.scores(i), p.pass(i)))
+  }
 
   /** Exact top-K among a SPECIFIC id set — the compressed tier's refine
     * step served from the pinned blocks (the reference refines FAISS
@@ -50,36 +54,12 @@ final class RamCorpus private (
     * runJob scores only shortlist members, no corpus DataFrame scan.
     * Ranking contract identical to topK (round6, ascending-id ties);
     * rows failing `labelPred` are dropped BEFORE the top-K cut, matching
-    * `VectorSearch.topK(refined, qvec, k, pred)` over the same ids. */
+    * `VectorSearch.topK(refined, qvec, k, pred)` over the same ids.
+    * An empty id set or k < 1 answers empty without a job. */
   def scoreIds(qvec: Array[Float], wanted: Array[Long], k: Int,
-               labelPred: Option[Int => Boolean] = None): Seq[(Long, Double)] = {
-    require(qvec.length == dim, s"dot_f32: dimension mismatch (${qvec.length} vs $dim)")
-    val d = dim
-    val lp = labelPred
-    val wset = wanted.toSet
-    val partials = blocks.sparkContext.runJob(blocks, (it: Iterator[RamCorpus.Block]) => {
-      val f: Int => Boolean = lp.orNull
-      val out = Array.newBuilder[(Long, Double)]
-      it.foreach { b =>
-        val n = b.ids.length
-        var r = 0
-        while (r < n) {
-          if (wset(b.ids(r)) && (f == null || f(b.labels(r)))) {
-            val base = r * d
-            var acc = 0.0
-            var i = 0
-            while (i < d) { acc += b.vecs(base + i).toDouble * qvec(i).toDouble; i += 1 }
-            out += ((b.ids(r), VecMath.round6(acc)))
-          }
-          r += 1
-        }
-      }
-      out.result()
-    })
-    partials.iterator.flatten.toArray
-      .sortBy { case (id, s) => (-s, id) }
-      .take(k).toSeq
-  }
+               labelPred: Option[Int => Boolean] = None): Seq[(Long, Double)] =
+    if (k < 1 || wanted.isEmpty) Seq.empty
+    else candidates(qvec, k, labelPred, withPass = false, wanted.sorted).pairs
 
   /** Distinct-label histogram, computed ONCE at pin time (labels are a
     * small enum by construction) — |allowed| for a label-local predicate
@@ -110,47 +90,38 @@ final class RamCorpus private (
       labelHist.iterator.collect { case (l, n) if f(l) => n }.sum
   }
 
-  /** Shared scorer: when `withPass` the heap ranks ALL rows and carries
+  /** Shared scorer: when `withPass` the top-K ranks ALL rows and carries
     * the predicate bit (post-filter shape); otherwise only passing rows
-    * are scored (pre-filter shape — the filter IS the gather). */
+    * are scored (pre-filter shape — the filter IS the gather). A non-null
+    * sorted `wanted` further restricts the scan to those ids. */
   private def candidates(qvec: Array[Float], k: Int, labelPred: Option[Int => Boolean],
-                         withPass: Boolean): Seq[(Long, Double, Boolean)] = {
+                         withPass: Boolean, wanted: Array[Long] = null): TopK.Packed = {
+    require(qvec.length == dim, s"dot_f32: dimension mismatch (${qvec.length} vs $dim)")
+    TopK.requireK(k)
     val d = dim
     val lp = labelPred // serializable capture, no `this` in the closure
     val partials = blocks.sparkContext.runJob(blocks, (it: Iterator[RamCorpus.Block]) => {
       val f: Int => Boolean = lp.orNull
-      // head = worst kept entry, same ordering contract as knnJoin's heaps
-      val worstFirst: Ordering[(Double, Long, Boolean)] = Ordering.fromLessThan {
-        (a, b) => a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-      }
-      val heap = collection.mutable.PriorityQueue.empty[(Double, Long, Boolean)](worstFirst)
+      val top = new TopK(k)
       it.foreach { b =>
         val n = b.ids.length
         var r = 0
         while (r < n) {
           val pass = f == null || f(b.labels(r))
-          if (withPass || pass) {
+          if ((withPass || pass) &&
+              (wanted == null || java.util.Arrays.binarySearch(wanted, b.ids(r)) >= 0)) {
             val base = r * d
             var acc = 0.0
             var i = 0
             while (i < d) { acc += b.vecs(base + i).toDouble * qvec(i).toDouble; i += 1 }
-            val s = VecMath.round6(acc)
-            val id = b.ids(r)
-            if (heap.size < k) heap.enqueue((s, id, pass))
-            else {
-              val (ws, wid, _) = heap.head
-              if (s > ws || (s == ws && id < wid)) { heap.dequeue(); heap.enqueue((s, id, pass)) }
-            }
+            top.offer(acc, b.ids(r), pass)
           }
           r += 1
         }
       }
-      heap.toArray
+      top.packed
     })
-    partials.iterator.flatten.toArray
-      .sortBy { case (s, id, _) => (-s, id) }
-      .take(k)
-      .map { case (s, id, pass) => (id, s, pass) }.toSeq
+    TopK.merge(partials.iterator, k)
   }
 }
 

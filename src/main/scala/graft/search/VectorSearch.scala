@@ -12,6 +12,12 @@ import org.apache.spark.sql.functions._
   * summation differences across engines (oracle parity), while 1e-6
   * resolution is far below any meaningful similarity gap.
   *
+  * Hand-written scans (topKWithCount, knnJoin, RamCorpus, the IVF-PQ
+  * shortlists) rank through [[TopK]], which defers the rounding: holding
+  * k rows, it skips a raw score below `worst − 1e-6` unrounded. Exact —
+  * round6 is monotone and a raw value rounding to ≥ worst is ≥ worst −
+  * 5e-7 — so answers equal "round every row, sort by (−score, id), take k".
+  *
   * Scale notes: `orderBy(...).limit(k)` plans as TakeOrderedAndProject —
   * a per-partition heap + O(k) driver merge, never a global sort. Query
   * vectors enter the plan as literals (broadcast with the closure); the
@@ -37,7 +43,7 @@ object VectorSearch {
   }
 
   /** [[topK]] plus the scanned-row count in ONE pass: per-partition
-    * bounded heap + row counter, O(P·k) driver merge — for callers that
+    * [[TopK]] + row counter, O(P·k) driver merge — for callers that
     * must record |scanned| beside the top-K (the harness's ivf/lsh
     * `scored_vectors`). The separate `count()` job those callers ran
     * re-scanned the candidate set per query, doubling the probe I/O at
@@ -47,6 +53,7 @@ object VectorSearch {
     * ascending-id ties (VecMath doc — the RamCorpus parity contract). */
   def topKWithCount(emb: DataFrame, qv: Array[Float], k: Int,
                     pred: Option[Column] = None): (Seq[(Long, Double)], Long) = {
+    TopK.requireK(k)
     val base = pred.map(emb.where).getOrElse(emb)
     val spark = base.sparkSession
     import spark.implicits._
@@ -54,28 +61,12 @@ object VectorSearch {
       .as[(Long, Array[Float])]
     val partials = spark.sparkContext.runJob(rows.rdd,
       (it: Iterator[(Long, Array[Float])]) => {
-        // head = worst kept entry (same ordering as RamCorpus.candidates)
-        val worstFirst: Ordering[(Double, Long)] = Ordering.fromLessThan {
-          (a, b) => a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-        }
-        val heap = collection.mutable.PriorityQueue.empty[(Double, Long)](worstFirst)
+        val top = new TopK(k)
         var n = 0L
-        it.foreach { case (id, v) =>
-          n += 1
-          val s = VecMath.round6(VecMath.dot(v, qv))
-          if (heap.size < k) heap.enqueue((s, id))
-          else {
-            val (ws, wid) = heap.head
-            if (s > ws || (s == ws && id < wid)) { heap.dequeue(); heap.enqueue((s, id)) }
-          }
-        }
-        (n, heap.toArray)
+        it.foreach { case (id, v) => n += 1; top.offer(VecMath.dot(v, qv), id) }
+        (n, top.packed)
       })
-    val top = partials.iterator.flatMap(_._2).toArray
-      .sortBy { case (s, id) => (-s, id) }
-      .take(k)
-      .map { case (s, id) => (id, s) }.toSeq
-    (top, partials.iterator.map(_._1).sum)
+    (TopK.merge(partials.iterator.map(_._2), k).pairs, partials.iterator.map(_._1).sum)
   }
 
   /** Post-filter baseline (reference src/baselines/post_filter.py:17):
@@ -131,6 +122,7 @@ object VectorSearch {
   def knnJoin(emb: DataFrame, queries: Seq[(Long, Array[Float])], k: Int,
               allowedLists: Option[Map[Long, Set[Int]]] = None,
               listCol: String = "list_id"): DataFrame = {
+    TopK.requireK(k)
     val spark = emb.sparkSession
     import spark.implicits._
     val qArr = queries.toArray
@@ -150,30 +142,16 @@ object VectorSearch {
       .as[(Long, Array[Float], Int)]
       .mapPartitions { it =>
         val (qs, allow) = qB.value
-        // per-query bounded heap; head = current worst of the kept k
-        val worstFirst: Ordering[(Double, Long)] = Ordering.fromLessThan {
-          (a, b) => a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-        }
-        val heaps = Array.fill(qs.length)(
-          collection.mutable.PriorityQueue.empty[(Double, Long)](worstFirst))
+        val tops = Array.fill(qs.length)(new TopK(k))
         it.foreach { case (id, vec, listId) =>
           var q = 0
           while (q < qs.length) {
-            if (allow == null || allow(q).contains(listId)) {
-              val s = VecMath.round6(VecMath.dot(vec, qs(q)._2))
-              val h = heaps(q)
-              if (h.size < k) h.enqueue((s, id))
-              else {
-                val (ws, wid) = h.head
-                if (s > ws || (s == ws && id < wid)) { h.dequeue(); h.enqueue((s, id)) }
-              }
-            }
+            if (allow == null || allow(q).contains(listId))
+              tops(q).offer(VecMath.dot(vec, qs(q)._2), id)
             q += 1
           }
         }
-        heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-          h.iterator.map { case (s, id) => (qs(q)._1, id, s) }
-        }
+        TopK.rows(qs.map(_._1), tops)
       }
       .toDF("qid", "vec_id", "score")
 

@@ -62,7 +62,7 @@ case class TopKPerKeyExec(
     val kLocal = k
     val flushRows: Long =
       if (partial)
-        conf.getConfString(TopKPerKeyExec.FlushRowsConf, "1048576").toLong
+        TopKPerKeyExec.flushRows(conf.getConfString(TopKPerKeyExec.FlushRowsConf, "1048576"))
       else Long.MaxValue
     child.execute().mapPartitionsInternal { it =>
       val keyProj = UnsafeProjection.create(keysLocal, schema)
@@ -129,6 +129,13 @@ object TopKPerKeyExec {
     * once; UnsafeRow copies, so the byte bound is rows × row width).
     * Flushing early never changes results — the final pass re-selects. */
   val FlushRowsConf = "spark.graft.topKPartialFlushRows"
+
+  /** The budget parsed on the driver: a non-positive or non-numeric value
+    * would make every partial task spin without consuming a row, so it is
+    * refused before any task starts. */
+  def flushRows(v: String): Long =
+    scala.util.Try(v.trim.toLong).toOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(s"$FlushRowsConf must be a positive integer, got '$v'"))
 }
 
 /** Planner strategy mapping the logical node to partial + final exec

@@ -120,6 +120,48 @@ class RamCorpusSpec extends AnyFunSuite {
     }
   }
 
+  test("topK, topCandidates and scoreIds equal a brute-force reference over 4 partitions") {
+    val (df, rows) = TopKFixture.corpus(spark)
+    assert(df.rdd.getNumPartitions >= 3)
+    val rc = RamCorpus.build(df)
+    val preds: Seq[(String, Option[Int => Boolean])] = Seq(
+      "none" -> None, "label<3" -> Some(_ < 3), "label>=7" -> Some(_ >= 7),
+      "nothing" -> Some(_ => false))
+    val ids = rows.map(_._1)
+    val wanted = ids.filter(_ % 3 == 0).take(90).toArray
+    TopKFixture.queries.foreach { q =>
+      preds.foreach { case (name, lp) =>
+        val allow = lp.getOrElse((_: Int) => true)
+        Seq(1, 10, 64, 65, rows.size + 5).foreach { k =>
+          val ranked = TopKFixture.brute(rows, q)
+          assert(rc.topK(q, k, lp) ==
+            ranked.filter(r => allow(r._3)).take(k).map(r => (r._1, r._2)), s"topK $name k=$k")
+          assert(rc.topCandidates(q, k, lp) ==
+            ranked.take(k).map(r => (r._1, r._2, allow(r._3))), s"topCandidates $name k=$k")
+          assert(rc.scoreIds(q, wanted, k, lp) ==
+            ranked.filter(r => allow(r._3) && wanted.contains(r._1)).take(k)
+              .map(r => (r._1, r._2)), s"scoreIds $name k=$k")
+        }
+      }
+    }
+  }
+
+  test("k < 1 is refused on the driver, before any job") {
+    ram.topK(q0, 1) // pin and label histogram exist before the group opens
+    val sc = spark.sparkContext
+    sc.setJobGroup("ram-k0", "k < 1 must not start a job")
+    try {
+      val e1 = intercept[IllegalArgumentException](ram.topK(q0, 0))
+      assert(e1.getMessage.contains("k must be >= 1"), e1.getMessage)
+      val e2 = intercept[IllegalArgumentException](ram.topCandidates(q0, -1, None))
+      assert(e2.getMessage.contains("k must be >= 1"), e2.getMessage)
+      // the refine of an empty shortlist stays an empty answer
+      assert(ram.scoreIds(q0, Array(1L, 2L), 0).isEmpty)
+      assert(ram.scoreIds(q0, Array.empty[Long], 5).isEmpty)
+    } finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("ram-k0").isEmpty)
+  }
+
   test("dimension mismatch is a hard error") {
     intercept[IllegalArgumentException] { ram.topK(Array(1.0f), 5) }
   }
@@ -153,4 +195,34 @@ class RamCorpusSpec extends AnyFunSuite {
       assert(got == want, s"spec $json")
     }
   }
+}
+
+/** A small corpus built to stress the top-K merge: 4 partitions, ids
+  * shuffled across them, a quarter of the vectors duplicated under other
+  * ids (exact score ties) and coarse components (near ties at 6 dp). */
+object TopKFixture {
+  import graft.search.VecMath
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+
+  type Row = (Long, Array[Float], Int)
+
+  def corpus(spark: SparkSession): (DataFrame, Seq[Row]) = {
+    import spark.implicits._
+    val rng = new scala.util.Random(5)
+    val base = (0 until 450).map(_ => Array.fill(8)((rng.nextInt(9) - 4) / 8.0f))
+    val vecs = base ++ base.take(150)
+    val ids = rng.shuffle(vecs.indices.map(i => 7L * i + 3)).toArray
+    val rows = vecs.indices.map(i => (ids(i), vecs(i), rng.nextInt(10)))
+    (rows.toDF("vec_id", "embedding", "label").repartition(4), rows)
+  }
+
+  val queries: Seq[Array[Float]] = {
+    val rng = new scala.util.Random(9)
+    Seq.fill(3)(Array.fill(8)(rng.nextGaussian().toFloat)) :+ Array.fill(8)(0.25f)
+  }
+
+  /** Every row as (id, round6 score, label), ranked by (−score, id). */
+  def brute(rows: Seq[Row], q: Array[Float]): Seq[(Long, Double, Int)] =
+    rows.map { case (id, v, l) => (id, VecMath.round6(VecMath.dot(v, q)), l) }
+      .sortBy { case (id, s, _) => (-s, id) }
 }

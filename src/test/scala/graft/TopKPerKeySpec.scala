@@ -93,4 +93,25 @@ class TopKPerKeySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("a non-positive or non-numeric flush budget is refused with the key named") {
+    val key = org.apache.spark.sql.graft.TopKPerKeyExec.FlushRowsConf
+    val prev = spark.conf.getOption(key)
+    try {
+      Seq("0", "-3", "many").foreach { v =>
+        spark.conf.set(key, v)
+        val e = intercept[Exception] {
+          TopKPerKey(scored, Seq(col("qid")), Seq(desc("score"), col("vec_id")), 5).collect()
+        }
+        val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+        assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+          c.getMessage.contains(key)), s"$v: $e")
+      }
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
 }

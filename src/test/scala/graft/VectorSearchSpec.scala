@@ -73,6 +73,44 @@ class VectorSearchSpec extends AnyFunSuite {
     assert(got == want)
   }
 
+  test("topKWithCount and knnJoin equal a brute-force reference over 4 partitions") {
+    val (df, rows) = TopKFixture.corpus(spark)
+    assert(df.rdd.getNumPartitions >= 3)
+    val qs = TopKFixture.queries.zipWithIndex.map { case (q, i) => (i.toLong, q) }
+    Seq[(Option[org.apache.spark.sql.Column], Int => Boolean)](
+      (None, _ => true), (Some(col("label") < 3), _ < 3), (Some(lit(false)), _ => false)
+    ).foreach { case (pred, allow) =>
+      val src = pred.map(df.where).getOrElse(df)
+      val kept = rows.count(r => allow(r._3)).toLong
+      Seq(1, 10, 65, rows.size + 5).foreach { k =>
+        def want(q: Array[Float]) =
+          TopKFixture.brute(rows, q).filter(r => allow(r._3)).take(k).map(r => (r._1, r._2))
+        qs.foreach { case (_, q) =>
+          assert(VectorSearch.topKWithCount(df, q, k, pred) == ((want(q), kept)), s"$pred k=$k")
+        }
+        val got = VectorSearch.knnJoin(src, qs, k)
+          .as[(Long, Int, Long, Double)].collect().toSeq
+        val wantJoin = qs.flatMap { case (qid, q) =>
+          want(q).zipWithIndex.map { case ((id, sc), r) => (qid, r + 1, id, sc) }
+        }
+        assert(got == wantJoin, s"knnJoin $pred k=$k")
+      }
+    }
+  }
+
+  test("k < 1 is refused on the driver, before any job") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("vs-k0", "k < 1 must not start a job")
+    try {
+      val e1 = intercept[IllegalArgumentException](VectorSearch.topKWithCount(emb, q0, 0))
+      assert(e1.getMessage.contains("k must be >= 1"), e1.getMessage)
+      val e2 = intercept[IllegalArgumentException](
+        VectorSearch.knnJoin(emb, QueryVectors.batch(2), 0))
+      assert(e2.getMessage.contains("k must be >= 1"), e2.getMessage)
+    } finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("vs-k0").isEmpty)
+  }
+
   test("recallAtK is 1.0 on identical inputs, 0.0 on disjoint") {
     val a = Seq((0L, 1L), (0L, 2L)).toDF("qid", "vec_id")
     val b = Seq((0L, 3L), (0L, 4L)).toDF("qid", "vec_id")
