@@ -271,12 +271,11 @@ object RunHarness {
     * the ADC column scores residual codes — one query-only LUT plus the
     * per-list ⟨q,c_l⟩ bias (IvfPqRes doc). Recorded as `ivfpq_res` /
     * `ivfpq_res:<shortlist>` so results.jsonl separates the encodings. */
-  private class IvfPqResBackend(val name: String, model: IvfPqResModel,
-                                sizes: Map[Int, Long], nprobeN: Int,
+  private class IvfPqResBackend(val name: String, model: IvfPqResModel, nprobeN: Int,
                                 shortlistN: Int, ram: Option[RamCorpus])
       extends Backend {
     private def stats(ms: Double, lists: Seq[Int], kth: Option[Double]): Stats = {
-      val scanned = lists.map(sizes.getOrElse(_, 0L)).sum
+      val scanned = lists.map(model.listSizes.getOrElse(_, 0L)).sum
       Stats(ms, scanned, Some(lists.length), Some(nprobeN), kth, None,
         Some(s"ivfpq residual-encoded m=${model.m} k=${model.kCodes} shortlist=$shortlistN"))
     }
@@ -457,7 +456,7 @@ object RunHarness {
     * persists at build time, the ivf/pq artifact-load discipline), built
     * once per (corpus, plane geometry) and pinned. Anonymous corpora
     * (no corpusKey) keep the inline per-search computation. */
-  private val sigCache = new graft.MtimeCache[DataFrame]
+  private val sigCache = new graft.ArtifactStore.Memo[DataFrame]
 
   private def signedTable(emb: DataFrame, tbls: Seq[Array[Array[Float]]],
                           corpusKey: Option[String]): DataFrame = {
@@ -578,21 +577,14 @@ object RunHarness {
       // residual-encoded composition, same dial grammar — matched BEFORE
       // the plain "ivfpq" prefix rule
       case p if p == "ivfpq_res" || p.startsWith("ivfpq_res:") =>
-        val spark = emb.sparkSession
-        val (model, sizes) = corpusKey match {
-          case Some(key) =>
-            val m = IvfPqRes.cached(emb, key,
-              Ivf.cached(spark, emb, key, knownTotal = Some(total)))
-            (m, IvfPqRes.listSizes(key, m))
-          case None =>
-            val m = IvfPqRes.build(
-              Ivf.auto(emb).getOrElse(Ivf.build(emb, Ivf.pickNlist(total))))
-            // anonymous corpora get a per-model cache key: two un-keyed
-            // corpora with equal row counts must not share stale sizes
-            (m, IvfPqRes.listSizes(s"anon-${System.identityHashCode(m)}", m))
+        val model = corpusKey match {
+          case Some(key) => IvfPqRes.cached(emb, key,
+            Ivf.cached(emb.sparkSession, emb, key, knownTotal = Some(total)))
+          case None => IvfPqRes.build(
+            Ivf.auto(emb).getOrElse(Ivf.build(emb, Ivf.pickNlist(total))))
         }
         val sl = if (p == "ivfpq_res") 100 else p.stripPrefix("ivfpq_res:").toInt
-        new IvfPqResBackend(p, model, sizes, nprobe, shortlistN = sl, ram = ram)
+        new IvfPqResBackend(p, model, nprobe, shortlistN = sl, ram = ram)
       case p if p == "ivfpq" || p.startsWith("ivfpq:") =>
         val model = ivfPqModelFor(emb, total, corpusKey)
         // bare "ivfpq" serves the index's auto-tuned default (meta.json);

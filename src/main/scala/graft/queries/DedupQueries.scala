@@ -29,141 +29,36 @@ object DedupQueries {
     """SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS n
       |FROM documents GROUP BY md5(text) ORDER BY keep_id""".stripMargin
 
-  /** One mined Jaccard pair set / cluster table per sf dir, cached and
-    * persisted: dedup_jaccard, dedup_clusters and corpus_curate all
+  /** One mined Jaccard pair set / cluster table per sf dir, published as
+    * an [[graft.ArtifactStore]] entry (per family, mining params and
+    * documents stamp): dedup_jaccard, dedup_clusters and corpus_curate all
     * consume the SAME pair graph, and a real curation pipeline mines it
     * once — not once per downstream consumer (the r3 bench paid the
-    * ~full pipeline 3×). Results are identical to independent runs (the
-    * cache stores the pipeline's own output); at cluster scale the
-    * persisted pair set is a table in the warehouse, not executor
-    * memory. */
-  // all the dir-keyed memos in this file carry the shared mtime guard
-  // (MtimeCache; r17 verdict #4): an in-process regeneration of
-  // `documents` invalidates the memoized reader/table on the next call —
-  // a dir-keyed entry would otherwise serve the OLD corpus' artifact
-  // (for the bucketed tables: with CURRENT Tables.rowCount sizes — data
-  // and sizes disagreeing, worse than the stale count rowCount fixed)
-  private val pairCache = new graft.MtimeCache[DataFrame]
-  private val clusterCache = new graft.MtimeCache[DataFrame]
-
-  // PERSISTED per (sf dir, source mtime) under the system temp dir — the
-  // corpusBands/Ivf.cached publish discipline (r14 verdict #2): the first
-  // JVM to need the τ=0.95 pair graph mines and publishes it with one
-  // rename; every later JVM — including a STANDALONE consumer like a
-  // corpus_release scale probe — loads the parquet instead of re-mining
-  // the corpus per consumer. This is exactly what a production curation
-  // run does: mine once, publish the pair table, fan consumers out over
-  // the artifact. The pair set is sparse (τ≥0.95), so the artifact is
-  // tiny relative to the corpus at every scale. The in-JVM map only
-  // avoids re-opening the reader. Results are identical to an inline
-  // mine: exact Jaccard rounded to 6 dp is deterministic, and the gate
-  // compare is row-order-insensitive.
+    * ~full pipeline 3×). The first JVM to need it mines and publishes;
+    * every later JVM — including a STANDALONE consumer like a
+    * corpus_release scale probe — loads the parquet. The pair set is
+    * sparse (τ≥0.95), so the artifact is tiny relative to the corpus at
+    * every scale. Results are identical to an inline mine: exact Jaccard
+    * rounded to 6 dp is deterministic, and the gate compare is
+    * row-order-insensitive. */
   def minedJaccardPairs(s: SparkSession, d: String): DataFrame =
-    pairCache(d, Tables.sourceMtime(d, "documents")) {
-      publishedArtifact(s, d, s"graft-dedup-pairs/tau$JaccardTau",
-        () => Dedup.jaccardPairs(Tables.documents(s, d), JaccardTau)) }
+    published(pairsStore, s, d, s"tau$JaccardTau")(
+      Dedup.jaccardPairs(Tables.documents(s, d), JaccardTau))
 
   def minedClusters(s: SparkSession, d: String): DataFrame =
-    clusterCache(d, Tables.sourceMtime(d, "documents")) {
-      publishedArtifact(s, d, s"graft-dedup-clusters/tau$JaccardTau",
-        () => Dedup.clusters(minedJaccardPairs(s, d))) }
+    published(clustersStore, s, d, s"tau$JaccardTau")(
+      Dedup.clusters(minedJaccardPairs(s, d)))
 
-  /** Code/format version of the published dedup artifacts. Bump whenever
-    * Dedup.jaccardPairs / Dedup.clusters semantics or the parquet layout
-    * change: the cross-JVM cache below keys on (family+version, sf dir,
-    * documents mtime), so without the token a semantics change would
-    * silently serve pre-change parquet to every consumer on a machine
-    * that still holds the old artifact. */
-  private[graft] val ArtifactVersion = "v1"
+  private val pairsStore = new graft.ArtifactStore.Family[DataFrame]("dedup-pairs", "_SUCCESS")
+  private val clustersStore = new graft.ArtifactStore.Family[DataFrame]("dedup-clusters", "_SUCCESS")
+  private val bandsStore = new graft.ArtifactStore.Family[DataFrame]("dedup-bands", "_SUCCESS")
 
-  /** Build-once/publish-by-rename for a corpus-derived artifact, keyed by
-    * (family+code version, sf dir, documents mtime): _SUCCESS marks a
-    * complete table; concurrent builders race benignly (both produce
-    * identical bytes; the losing rename verifies a complete table exists
-    * and discards its copy). The family prefix carries the mining
-    * parameters (the BandGeom discipline) and [[ArtifactVersion]] carries
-    * the code generation, so neither a parameter change nor a semantics
-    * change can ever load a stale table. Dead directories (older source
-    * mtime, crashed builders' tmp dirs, superseded version dirs) are
-    * reaped opportunistically so tmpdir doesn't accumulate one table per
-    * regeneration — age-guarded; see [[reapStale]]. */
-  private def publishedArtifact(s: SparkSession, d: String, family: String,
-                                build: () => DataFrame): DataFrame = {
-    val key = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val docs = Tables.documents(s, d)
-    val mtime = docs.inputFiles.map(f =>
-      new java.io.File(new java.net.URI(f).getPath).lastModified()).foldLeft(0L)(math.max)
-    val famDir = s"${sys.props("java.io.tmpdir")}/$family-$ArtifactVersion"
-    val path = s"$famDir/$key-m$mtime"
-    reapStale(famDir, key, mtime)
-    def done = new java.io.File(s"$path/_SUCCESS").exists()
-    if (!done) {
-      val tmp = s"$path.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}"
-      build().write.mode("overwrite").parquet(tmp)
-      val dst = new java.io.File(path)
-      dst.getParentFile.mkdirs()
-      if (!new java.io.File(tmp).renameTo(dst)) {
-        graft.sources.LocalArtifacts.deleteRecursively(new java.io.File(tmp))
-        if (!done) throw new IllegalStateException(
-          s"artifact publish failed: rename to $path lost without a complete table present")
-      }
-    }
-    // touch the live dir so the reaper's age guard approximates LAST
-    // OPEN, not publish time, across JVMs. Scope honestly stated: the
-    // touch fires once per open (and the in-JVM caches open once per
-    // process), so a handle held >1 h and consumed concurrently with a
-    // cross-process source regeneration is still exposed — acceptable
-    // because reads here are short-lived scans right after open. The
-    // return value is best-effort (a filesystem refusing setLastModified
-    // just reverts the guard to publish-time age).
-    new java.io.File(path).setLastModified(System.currentTimeMillis())
-    s.read.parquet(path)
-  }
-
-  /** Reap dead published artifacts, AGE-GUARDED: a superseded dir is
-    * deleted only once it has sat untouched for an hour, because a lazy
-    * `spark.read.parquet` handle opened before the source regenerated
-    * may still be mid-consumption (publishedArtifact refreshes the dir
-    * mtime at each OPEN, so the guard keys on last open — not on every
-    * read; deleting under a live read fails that query with
-    * FileNotFound, the accepted residual for handles held > 1 h). Three
-    * dead classes: superseded source generations of this (family, sf dir)
-    * (older mtime — no NEW reader can want them), crashed builders'
-    * `.tmp-*` dirs (their rename never happened; any live builder
-    * finishes far inside the guard), and STRICTLY OLDER version dirs of
-    * the whole family (a code-version bump orphans `<fam>` / `<fam>-vN`
-    * siblings with N below [[ArtifactVersion]]'s; a NEWER sibling — an
-    * upgraded binary sharing the tmpdir — is someone else's live data
-    * and is never touched). Spec-pinned in ArtifactReapSpec with
-    * injected timestamps. */
-  private[graft] def reapStale(famDir: String, key: String, mtime: Long): Unit = {
-    val ageMs = 60L * 60 * 1000
-    val now = System.currentTimeMillis()
-    def old(f: java.io.File) = now - f.lastModified() > ageMs
-    Option(new java.io.File(famDir).listFiles()).getOrElse(Array.empty)
-      .filter { f =>
-        val n = f.getName
-        val superseded = n.startsWith(s"$key-m") && !n.contains(".tmp-") &&
-          n.stripPrefix(s"$key-m").toLongOption.exists(_ < mtime)
-        val crashedTmp = n.startsWith(s"$key-m") && n.contains(".tmp-")
-        (superseded || crashedTmp) && old(f)
-      }
-      .foreach(graft.sources.LocalArtifacts.deleteRecursively)
-    val fam = new java.io.File(famDir)
-    val seg = fam.getName.stripSuffix(s"-$ArtifactVersion")
-    val curVer = ArtifactVersion.stripPrefix("v").toInt
-    val verRe = (java.util.regex.Pattern.quote(seg) + "-v(\\d+)").r
-    Option(fam.getParentFile.listFiles()).getOrElse(Array.empty)
-      .filter { f =>
-        f.getName match {
-          case n if n == fam.getName || !old(f) => false
-          case `seg`                            => true // pre-versioning dir: implicit v0
-          case verRe(nStr) => nStr.toIntOption.exists(_ < curVer)
-          case _           => false
-        }
-      }
-      .foreach(graft.sources.LocalArtifacts.deleteRecursively)
-  }
+  /** A documents-derived table, written once as one parquet table per
+    * entry and read back (the read is the memoized value). */
+  private def published(store: graft.ArtifactStore.Family[DataFrame], s: SparkSession,
+                        d: String, params: String)(build: => DataFrame): DataFrame =
+    store(Tables.documents(s, d), d, params)(
+      build.write.mode("overwrite").parquet(_))(s.read.parquet(_))
 
   def dedupJaccard(s: SparkSession, d: String): DataFrame =
     minedJaccardPairs(s, d)
@@ -267,28 +162,24 @@ object DedupQueries {
   private def corpusOf(docs: DataFrame) = docs.where(pmod(col("doc_id"), lit(10)) =!= 0)
   private def batchOf(docs: DataFrame) = docs.where(pmod(col("doc_id"), lit(10)) === 0)
 
-  /** The corpus's banded-signature table, PERSISTED once per (sf dir,
-    * source mtime) under the system temp dir — the Ivf.cached discipline:
-    * the first JVM to need it mines and publishes with one rename; every
-    * later JVM (and every later "daily batch") loads the parquet instead
-    * of re-hashing the corpus. At cluster scale this is a warehouse table
-    * the ingest pipeline appends each batch's rows to. */
-  private val bandsCache = new graft.MtimeCache[DataFrame]
-
-  /** Band geometry the persisted table was mined with — encoded into the
-    * cache path (like the Pq/IvfPq cache paths encode sub/k/nl) so a
-    * future change to the minhash parameters can NEVER load a stale table
-    * of mismatched signatures from a previous JVM's publish. Must match
-    * the Dedup.minhashBands call below. */
+  /** Band geometry the persisted table was mined with — it names the
+    * entry (like the Pq/IvfPq entries carry sub/k/nl) so a change to the
+    * minhash parameters can NEVER load a stale table of mismatched
+    * signatures from a previous JVM's publish. Must match the
+    * Dedup.minhashBands call below. */
   private[graft] val BandGeom = (4, 8, 42L, 4) // (bands, rows, seed, subRows)
 
-  def corpusBands(s: SparkSession, d: String): DataFrame =
-    bandsCache(d, Tables.sourceMtime(d, "documents")) {
-      val (nb, nr, sd, sub) = BandGeom
-      publishedArtifact(s, d, s"graft-dedup-bands/b$nb-r$nr-s$sd-sub$sub",
-        () => Dedup.minhashBands(corpusOf(Tables.documents(s, d)),
-          bands = nb, rows = nr, seed = sd, subRows = sub))
-    }
+  /** The corpus's banded-signature table, published once per (sf dir,
+    * documents stamp) like the pair table: every later JVM (and every
+    * later "daily batch") loads the parquet instead of re-hashing the
+    * corpus. At cluster scale this is a warehouse table the ingest
+    * pipeline appends each batch's rows to. */
+  def corpusBands(s: SparkSession, d: String): DataFrame = {
+    val (nb, nr, sd, sub) = BandGeom
+    published(bandsStore, s, d, s"b$nb-r$nr-s$sd-sub$sub")(
+      Dedup.minhashBands(corpusOf(Tables.documents(s, d)),
+        bands = nb, rows = nr, seed = sd, subRows = sub))
+  }
 
   /** #102 incremental dedup: the batch's near-dup pairs (batch×corpus and
     * batch×batch) mined against the PERSISTED corpus band table — the
@@ -308,7 +199,7 @@ object DedupQueries {
     * bucketed_join rule), clamped like the simhash chunk table. Written
     * once per sf dir from the SAME published corpusBands artifact every
     * consumer reads — identical rows, co-located layout. */
-  private val minhashBandTableCache = new graft.MtimeCache[String]
+  private val minhashBandTableCache = new graft.ArtifactStore.Memo[String]
 
   private[graft] def minhashBandTable(s: SparkSession, d: String): String =
     minhashBandTableCache(d, Tables.sourceMtime(d, "documents")) {
@@ -376,7 +267,7 @@ object DedupQueries {
     * relational bucketed tables. Bucket count sized to the table's upper
     * bound (20 block-key rows per unique signature ≤ 20 per doc — the
     * bucketed_join rule on the exploded volume). */
-  private val simhashChunkCache = new graft.MtimeCache[String]
+  private val simhashChunkCache = new graft.ArtifactStore.Memo[String]
 
   private[graft] def simhashChunkTable(s: SparkSession, d: String): String =
     simhashChunkCache(d, Tables.sourceMtime(d, "documents")) {
@@ -535,6 +426,15 @@ object DedupQueries {
       .orderBy("vec_id")
   }
 
+  /** Resident state of dedup_semantic_inc: the incremental entry times
+    * batch maintenance against a PRE-EXISTING corpus's frozen quantizer,
+    * so the resident KMeans fit is an [[graft.ArtifactStore]] entry (the
+    * Ivf.cached shape): a new JVM against an unchanged corpus loads the
+    * fit instead of re-running KMeans — same params, deterministic seed,
+    * same model. */
+  private val semresStore = new graft.ArtifactStore.Family[graft.search.IvfModel](
+    "ivf-semres", "data/_SUCCESS", "centroids/_SUCCESS")
+
   /** #159 dedup_semantic_inc: incremental maintenance of the SemDeDup
     * keep-list — the batch (vec_id % 10 == 0, the dedup_incremental
     * split) assigns to the RESIDENT corpus's frozen quantizer and only
@@ -542,27 +442,13 @@ object DedupQueries {
     * through byte-identical. Equivalence with the frozen-model full run
     * and keep-slot revocation are spec-pinned (SemDedupSpec). Rows-only
     * (k-means geometry). */
-  /** Resident-state cache for dedup_semantic_inc (the vec_ivf_append
-    * discipline): the incremental entry times batch maintenance against a
-    * PRE-EXISTING corpus's frozen quantizer — the resident KMeans fit is
-    * artifact-load state, rebuilt only when the source regenerates. */
-  private val semanticIncModelCache = new graft.MtimeCache[graft.search.IvfModel]
-
   def dedupSemanticInc(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val batch = emb.where(pmod(col("vec_id"), lit(10)) === 0)
     val resident = emb.where(pmod(col("vec_id"), lit(10)) =!= 0)
-    val model = semanticIncModelCache(d, Tables.sourceMtime(d, "embeddings")) {
-      // persist the trained quantizer on disk too (Ivf.cached discipline):
-      // a new JVM against an unchanged corpus loads the fit instead of
-      // re-running KMeans — same params, deterministic seed, same model
-      val n = resident.count()
-      val key = d.replaceAll("[^A-Za-z0-9.]", "_")
-      val mtime = Tables.sourceMtime(d, "embeddings")
-      val path = s"${sys.props("java.io.tmpdir")}/graft-ivf-semres/$key-n$n-m$mtime"
-      graft.search.Ivf.buildOrLoad(s, resident, path,
-        graft.dedup.SemDedup.pickK(n))
-    }
+    val model = semresStore(resident, d)(path =>
+      graft.search.Ivf.build(resident, graft.dedup.SemDedup.pickK(resident.count()))
+        .write(path))(graft.search.Ivf.load(s, _))
     val rv = graft.dedup.SemDedup.verdictFor(
       graft.dedup.SemDedup.assignWith(model, resident), CosineTau)
     graft.dedup.SemDedup.appendVerdict(model, resident, rv, batch, CosineTau)

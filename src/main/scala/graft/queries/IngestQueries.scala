@@ -51,28 +51,17 @@ object IngestQueries {
       |  ORDER BY md5('0:' || CAST(vec_id AS VARCHAR)), vec_id LIMIT 10
       |) ORDER BY vec_id""".stripMargin
 
-  /** The vectors.npy artifact for an sf dir, written ONCE per (dir,
-    * mtime) under the system temp dir — artifact build is one-time
-    * reference-parity work (artifacts.py writes the file once too); the
-    * registered query times the DISTRIBUTED load, not the build. */
+  /** The vectors.npy artifact for an sf dir, an [[graft.ArtifactStore]]
+    * entry written ONCE per (dir, embeddings stamp) — artifact build is
+    * one-time reference-parity work (artifacts.py writes the file once
+    * too); the registered query times the DISTRIBUTED load, not the
+    * build. */
+  private val npyStore = new graft.ArtifactStore.Family[String]("npy", "vectors.npy")
+
   private def npyArtifact(s: SparkSession, d: String): String = {
     val emb = Tables.embeddings(s, d)
-    val key = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val mtime = emb.inputFiles.map(f =>
-      new java.io.File(new java.net.URI(f).getPath).lastModified()).foldLeft(0L)(math.max)
-    val path = s"${sys.props("java.io.tmpdir")}/graft-npy/$key-m$mtime/vectors.npy"
-    val f = new java.io.File(path)
-    if (!f.exists()) {
-      f.getParentFile.mkdirs()
-      // pid AND thread id (the corpusBands/buildOrLoad discipline): two
-      // threads of one JVM must never interleave writes into one tmp file
-      val tmp = s"$path.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}"
-      graft.sources.Ingest.writeVectorsNpy(emb, tmp)
-      if (!new java.io.File(tmp).renameTo(f) && !f.exists())
-        throw new IllegalStateException(s"npy artifact publish failed: $path")
-      new java.io.File(tmp).delete()
-    }
-    path
+    npyStore(emb, d)(p => graft.sources.Ingest.writeVectorsNpy(emb, s"$p/vectors.npy"))(
+      p => s"$p/vectors.npy")
   }
 
   /** #105 ingest_npy: the reference's vectors.npy artifact round-trip —
@@ -104,13 +93,13 @@ object IngestQueries {
       |FROM embeddings""".stripMargin
 
   /** The catalog tables for #294's co-located join, written ONCE per sf
-    * dir (the npyArtifact discipline: layout is an ingest-time decision a
+    * dir (the npyStore discipline: layout is an ingest-time decision a
     * warehouse makes once; the registered query times the JOIN). Names
     * are dir-keyed so sf0.01 and sf0.1 coexist in one warehouse; the
-    * memo is mtime-guarded (MtimeCache) so regenerating the source
+    * memo is mtime-guarded (ArtifactStore.Memo) so regenerating the source
     * parquet in-process rebuilds the layout instead of serving stale
     * co-located data under current rowCount sizes. */
-  private val bucketedCache = new graft.MtimeCache[(String, String)]
+  private val bucketedCache = new graft.ArtifactStore.Memo[(String, String)]
 
   private[graft] def bucketedTables(s: SparkSession, d: String): (String, String) =
     bucketedCache(d, graft.Tables.sourceMtime(d, "lineitem", "orders")) {

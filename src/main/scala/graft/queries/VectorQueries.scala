@@ -32,8 +32,8 @@ object VectorQueries {
 
   private def emb(s: SparkSession, d: String) = Tables.embeddings(s, d)
 
-  /** Staleness key for every dir-keyed model memo below (r17 verdict
-    * #4's guard, shared via MtimeCache): all trained state in this file
+  /** Staleness key for every dir-keyed memo below (r17 verdict #4's
+    * guard, shared via ArtifactStore.Memo): all trained state in this file
     * derives from embeddings.parquet, so a regenerated source rebuilds
     * the memoized model instead of serving the old corpus' geometry. */
   private def embMtime(d: String): Long = Tables.sourceMtime(d, "embeddings")
@@ -250,15 +250,11 @@ object VectorQueries {
     * (seed 42, deterministic) and writes the list_id-partitioned index +
     * centroids; every later use — including fresh Verify/Bench JVMs — loads
     * and probes the partition-pruned on-disk index instead of re-running
-    * KMeans. The persisted path keys on (row count, source mtime) and the
-    * in-JVM memo is mtime-guarded, so regenerated testdata invalidates
-    * both layers. */
-  private val ivfCache = new graft.MtimeCache[IvfModel]
-
+    * KMeans (Ivf.cached; regenerated testdata gets a new entry). */
   def ivfModel(s: SparkSession, d: String): IvfModel =
     // maxIter 10: centroid quality converges well before that on corpora
     // this size, and index build time is amortized across queries anyway
-    ivfCache(d, embMtime(d)) { Ivf.cached(s, emb(s, d), d, maxIter = 10) }
+    Ivf.cached(s, emb(s, d), d, maxIter = 10)
 
   /** Serving tier for the per-query harness paths: the reference's run.py
     * serves exact/pre/post from a RAM-resident matrix (loaders.py loads
@@ -267,7 +263,7 @@ object VectorQueries {
     * above it, None → the scan-tier backends (the 100 TB plan). Cached
     * per sf dir like the IVF index. */
   private val RamBudgetBytes = 2L << 30
-  private val ramCache = new graft.MtimeCache[Option[graft.search.RamCorpus]]
+  private val ramCache = new graft.ArtifactStore.Memo[Option[graft.search.RamCorpus]]
 
   def servingTier(s: SparkSession, d: String): Option[graft.search.RamCorpus] =
     ramCache(d, embMtime(d)) {
@@ -290,7 +286,7 @@ object VectorQueries {
     * unlike the shared persisted full-corpus index). Rows-only like the
     * other probe-path queries; append ≡ same-centroid-full-index and
     * associativity contracts in VectorSearchSpec. */
-  private val ivfAppendCache = new graft.MtimeCache[IvfModel]
+  private val ivfAppendCache = new graft.ArtifactStore.Memo[IvfModel]
 
   def vecIvfAppend(s: SparkSession, d: String): DataFrame = {
     val appended = ivfAppendCache(d, embMtime(d)) {
@@ -344,15 +340,7 @@ object VectorQueries {
       Seq((rep.partitions.toLong, rep.filesBefore.toLong, rep.filesAfter.toLong,
         rowsBefore, rowsAfter, rowsBefore == rowsAfter && rep.filesAfter <= rep.partitions))
         .toDF("n_lists", "files_before", "files_after", "rows_before", "rows_after", "compacted_ok")
-    } finally deleteTmp(tmp)
-  }
-
-  private def deleteTmp(dir: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rec))
-      f.delete(); ()
-    }
-    rec(new java.io.File(dir))
+    } finally graft.sources.LocalArtifacts.deleteRecursively(new java.io.File(tmp))
   }
 
   /** #113 vec_ivfpq_append: the same daily-ingest split on the COMPOSED
@@ -360,7 +348,7 @@ object VectorQueries {
     * + one codebook encode per batch row, both quantizers frozen
     * (IvfPqModel.append doc). Rows-only; exactness-at-full-dial and
     * composition contracts in VectorSearchSpec. */
-  private val ivfpqAppendCache = new graft.MtimeCache[graft.search.IvfPqModel]
+  private val ivfpqAppendCache = new graft.ArtifactStore.Memo[graft.search.IvfPqModel]
 
   def vecIvfPqAppend(s: SparkSession, d: String): DataFrame = {
     val appended = ivfpqAppendCache(d, embMtime(d)) {
@@ -493,10 +481,8 @@ object VectorQueries {
   /** One PQ model per sf dir, persisted like the IVF index: the first JVM
     * trains the m per-subspace codebooks + encodes (seed 42), later JVMs
     * load the code table and score it without touching the vectors. */
-  private val pqCache = new graft.MtimeCache[graft.search.PqModel]
-
   def pqModel(s: SparkSession, d: String): graft.search.PqModel =
-    pqCache(d, embMtime(d)) { graft.search.Pq.cached(s, emb(s, d), d) }
+    graft.search.Pq.cached(s, emb(s, d), d)
 
   /** #88 PQ top-K: ADC shortlist over the m-byte code table + exact
     * refine of the shortlist (rows-only: codebook from sampled KMeans;
@@ -837,10 +823,8 @@ object VectorQueries {
   /** One SQ8 model per sf dir, persisted like the PQ index: the first JVM
     * trains the per-dim (vmin, delta) params + encodes (seed 42), later
     * JVMs load the byte-code table and score it without the vectors. */
-  private val sqCache = new graft.MtimeCache[graft.search.SqModel]
-
   def sqModel(s: SparkSession, d: String): graft.search.SqModel =
-    sqCache(d, embMtime(d)) { graft.search.Sq.cached(s, emb(s, d), d) }
+    graft.search.Sq.cached(s, emb(s, d), d)
 
   /** #117 SQ8 top-K: asymmetric scan of the 1-byte-per-dim code table +
     * exact refine of the shortlist (rows-only: params from a sampled
@@ -856,10 +840,8 @@ object VectorQueries {
   /** One BQ model per sf dir, persisted like the other tiers — though
     * "build" here is only a sign-bit encode pass (no training at all, the
     * tier's defining property). */
-  private val bqCache = new graft.MtimeCache[graft.search.BqModel]
-
   def bqModel(s: SparkSession, d: String): graft.search.BqModel =
-    bqCache(d, embMtime(d)) { graft.search.Bq.cached(s, emb(s, d), d) }
+    graft.search.Bq.cached(s, emb(s, d), d)
 
   /** #125 BQ top-K: Hamming shortlist over the sign-bit code table + exact
     * refine (rows-only; exactness-at-full-shortlist and recall-floor
@@ -921,7 +903,7 @@ object VectorQueries {
     * Build cost is a single scan, so no disk persistence — unlike the
     * quantizer tiers there is no trained state worth sharing across JVMs
     * that a later JVM couldn't recompute in the same one pass. */
-  private val pcaCache = new graft.MtimeCache[graft.search.PcaModel]
+  private val pcaCache = new graft.ArtifactStore.Memo[graft.search.PcaModel]
 
   def pcaModel(s: SparkSession, d: String): graft.search.PcaModel =
     pcaCache(d, embMtime(d)) { graft.search.Pca.build(emb(s, d)) }
@@ -951,7 +933,7 @@ object VectorQueries {
     * under eigenvalue allocation (Pca doc). Rotation preserves inner
     * products exactly, so exact ranks are UNCHANGED — only the quantizer's
     * subspace variance balance improves. In-memory (rows-only path). */
-  private val opqCache = new graft.MtimeCache[(graft.search.PcaModel, graft.search.PqModel)]
+  private val opqCache = new graft.ArtifactStore.Memo[(graft.search.PcaModel, graft.search.PqModel)]
 
   def opqModel(s: SparkSession, d: String): (graft.search.PcaModel, graft.search.PqModel) =
     opqCache(d, embMtime(d)) {
@@ -1052,11 +1034,8 @@ object VectorQueries {
     * PQ halves, persists the composed (vec_id, list_id, pq_codes) table
     * partitioned by list_id — so a probe is a partition-pruned scan of
     * m-byte codes (the FAISS IVFPQ scale tier). */
-  private val ivfpqCache = new graft.MtimeCache[graft.search.IvfPqModel]
-
   def ivfpqModel(s: SparkSession, d: String): graft.search.IvfPqModel =
-    ivfpqCache(d, embMtime(d)) {
-      graft.search.IvfPq.cached(s, emb(s, d), d, ivfModel(s, d), pqModel(s, d)) }
+    graft.search.IvfPq.cached(s, emb(s, d), d, ivfModel(s, d), pqModel(s, d))
 
   /** #94 IVFPQ top-K: probe nprobe lists, ADC-rank only THEIR codes,
     * exact-refine the shortlist (rows-only: both quantizers come from

@@ -98,44 +98,9 @@ object Bq {
   def load(spark: SparkSession, path: String, corpus: DataFrame): BqModel =
     BqModel(spark.read.parquet(s"$path/codes"), corpus)
 
-  /** Load the persisted code table if present, else build + publish with
-    * one rename (the Ivf/Pq/Sq.buildOrLoad race discipline). */
-  def buildOrLoad(spark: SparkSession, emb: DataFrame, path: String): BqModel = {
-    def done = new java.io.File(s"$path/codes/_SUCCESS").exists()
-    if (done) load(spark, path, emb)
-    else {
-      val tmp = s"$path.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}"
-      write(build(emb), tmp)
-      val dst = new java.io.File(path)
-      dst.getParentFile.mkdirs()
-      if (!new java.io.File(tmp).renameTo(dst)) {
-        deleteRecursively(new java.io.File(tmp))
-        if (!done)
-          throw new IllegalStateException(
-            s"bq publish failed: rename to $path lost without a complete index present")
-      }
-      load(spark, path, emb)
-    }
-  }
+  private val store = new graft.ArtifactStore.Family[BqModel]("bq", "codes/_SUCCESS")
 
-  /** Mtime-keyed per-corpus cache path (the Ivf/Pq/Sq.cached convention). */
-  // process-resident loaded models (Ivf.cached memo doc)
-  private val memo = new graft.MtimeCache[BqModel]
-
-  def cached(spark: SparkSession, emb: DataFrame, corpusKey: String): BqModel = {
-    val key = corpusKey.replaceAll("[^A-Za-z0-9.]", "_")
-    val srcMtime = emb.inputFiles.map(f =>
-      new java.io.File(new java.net.URI(f).getPath).lastModified()).foldLeft(0L)(math.max)
-    def body = {
-      val n = emb.count()
-      val path = s"${sys.props("java.io.tmpdir")}/graft-bq/$key-n$n-m$srcMtime"
-      buildOrLoad(spark, emb, path)
-    }
-    if (srcMtime == 0L) body else memo(key, srcMtime)(body)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
-  }
+  /** The persisted BQ code table of a corpus (the Ivf.cached convention). */
+  def cached(spark: SparkSession, emb: DataFrame, corpusKey: String): BqModel =
+    store(emb, corpusKey)(write(build(emb), _))(load(spark, _, emb))
 }

@@ -196,55 +196,6 @@ object Ivf {
     IvfModel(cents, spark.read.parquet(s"$path/data"))
   }
 
-  /** Load the index at `path` if one was already persisted there (by THIS
-    * or an earlier JVM), else train, persist, and reload — so the query
-    * path always runs against the partition-pruned on-disk index and
-    * KMeans runs once per corpus, not once per process. */
-  def buildOrLoad(spark: SparkSession, emb: DataFrame, path: String, nlist: Int,
-                  seed: Long = 42L, maxIter: Int = 20): IvfModel = {
-    def done(part: String) = new java.io.File(s"$path/$part/_SUCCESS").exists()
-    if (done("data") && done("centroids")) load(spark, path)
-    else {
-      // write to a private temp dir, then publish with one rename — a
-      // concurrent builder can't interleave half-written parts under the
-      // shared path; whoever loses the rename race discards its copy and
-      // loads the winner's
-      val tmp = s"$path.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}"
-      build(emb, nlist, seed, maxIter).write(tmp)
-      val dst = new java.io.File(path)
-      dst.getParentFile.mkdirs()
-      if (!new java.io.File(tmp).renameTo(dst)) {
-        deleteRecursively(new java.io.File(tmp))
-        // a failed rename is only benign when it means "lost the publish
-        // race"; re-verify the winner actually finished before loading —
-        // anything else (permissions, stale partial dir at `path`) must
-        // fail loudly, not surface later as an unreadable index
-        if (!(done("data") && done("centroids")))
-          throw new IllegalStateException(
-            s"ivf publish failed: rename to $path lost without a complete " +
-              "index present (stale/partial directory? permissions?) — " +
-              "remove the target path and rebuild")
-      }
-      load(spark, path)
-    }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
-  }
-
-  /** The shared persisted-index entry point: one on-disk index per
-    * (corpus key, row count, source mtime, training params), under the
-    * system temp dir (stand-in for the warehouse path a cluster
-    * deployment would use). Both the registered vec_ivf_* queries and
-    * the harness "ivf" backend resolve here, so they probe the SAME
-    * index — and a corpus is trained at most once across all JVMs on
-    * the machine. The source-mtime component invalidates the cache when
-    * the corpus is REGENERATED with an unchanged row count (same-count
-    * different-content would otherwise silently serve stale
-    * assignments); `knownTotal` skips the count job when the caller
-    * already has it. */
   /** Persisted append — the warehouse-table form of IvfModel.append: the
     * batch's centroid assignments land as NEW files under their list_id
     * partition directories (mode append never rewrites resident files),
@@ -258,27 +209,21 @@ object Ivf {
     model.assign(batch).repartition(col("list_id"))
       .write.mode("append").partitionBy("list_id").parquet(s"$path/data")
 
-  // loaded models stay resident for the process (the reference keeps its
-  // FAISS index in memory after artifact load); without this every
-  // cached() call re-collected the centroids parquet — one job per call
-  private val memo = new graft.MtimeCache[IvfModel]
+  private val store = new graft.ArtifactStore.Family[IvfModel](
+    "ivf", "data/_SUCCESS", "centroids/_SUCCESS")
 
+  /** The shared persisted index of a corpus ([[graft.ArtifactStore]]
+    * entry per corpus key, source stamp and `maxIter`): both the
+    * registered vec_ivf_* queries and the harness "ivf" backend resolve
+    * here, so they probe the SAME partition-pruned on-disk index, trained
+    * at most once across all JVMs on the machine and loaded at most once
+    * per process. `knownTotal` skips the count job a build needs when the
+    * caller already has it. */
   def cached(spark: SparkSession, emb: DataFrame, corpusKey: String,
-             maxIter: Int = 10, knownTotal: Option[Long] = None): IvfModel = {
-    val key = corpusKey.replaceAll("[^A-Za-z0-9.]", "_")
-    // newest source-file mtime: cheap (no Spark job), changes whenever
-    // the corpus is rewritten
-    val srcMtime = emb.inputFiles.map(f =>
-      new java.io.File(new java.net.URI(f).getPath).lastModified()).foldLeft(0L)(math.max)
-    def body = {
-      val n = knownTotal.getOrElse(emb.count())
-      val path = s"${sys.props("java.io.tmpdir")}/graft-ivf/$key-n$n-m$srcMtime-i$maxIter"
-      buildOrLoad(spark, emb, path, pickNlist(n), maxIter = maxIter)
-    }
-    // mtime 0 = non-file source: no invalidation signal (and the on-disk
-    // path's row count is then the only discriminator) — bypass the memo
-    if (srcMtime == 0L) body else memo(s"$key-i$maxIter", srcMtime)(body)
-  }
+             maxIter: Int = 10, knownTotal: Option[Long] = None): IvfModel =
+    store(emb, corpusKey, s"i$maxIter")(path =>
+      build(emb, pickNlist(knownTotal.getOrElse(emb.count())), maxIter = maxIter)
+        .write(path))(load(spark, _))
 }
 
 /** Cosine LSH (random hyperplanes): deterministic seeded planes; bucket =

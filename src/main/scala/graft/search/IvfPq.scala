@@ -277,61 +277,32 @@ object IvfPq {
     }
   }
 
-  /** Load-or-publish with the shared single-rename race discipline
-    * (Ivf.buildOrLoad doc): a rename loser discards its copy and
-    * re-verifies the winner before loading. The shortlist tune runs on
-    * the tmp copy and publishes atomically WITH the codes; a legacy dir
-    * without meta.json is tuned once on load and the result written
-    * alongside (deterministic — concurrent writers agree). */
+  private val store = new graft.ArtifactStore.Family[IvfPqModel](
+    "ivfpq", "codes/_SUCCESS", "meta.json")
+
+  /** Compose, persist and tune into `tmp`: the shortlist tune runs on the
+    * unpublished copy, so meta.json publishes atomically WITH the codes. */
+  private def publishTo(spark: SparkSession, ivf: IvfModel, pq: PqModel)(tmp: String): Unit = {
+    write(compose(ivf, pq), tmp)
+    writeMeta(tmp, load(spark, tmp, ivf, pq).tuneShortlist())
+  }
+
+  /** Load the composed index at `path`, building and publishing it first
+    * when no complete one is there ([[graft.ArtifactStore.Family.publish]]). */
   def buildOrLoad(spark: SparkSession, ivf: IvfModel, pq: PqModel,
                   path: String): IvfPqModel = {
-    def done = new java.io.File(s"$path/codes/_SUCCESS").exists()
-    if (!done) {
-      val tmp = s"$path.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}"
-      write(compose(ivf, pq), tmp)
-      writeMeta(tmp, load(spark, tmp, ivf, pq).tuneShortlist())
-      val dst = new java.io.File(path)
-      dst.getParentFile.mkdirs()
-      if (!new java.io.File(tmp).renameTo(dst)) {
-        deleteRecursively(new java.io.File(tmp))
-        if (!done)
-          throw new IllegalStateException(
-            s"ivfpq publish failed: rename to $path lost without a complete index present")
-      }
-    }
-    val m = load(spark, path, ivf, pq)
-    if (m.tuned.isDefined) m
-    else { // pre-meta cache dir: tune once, record, reload
-      writeMeta(path, m.tuneShortlist())
-      load(spark, path, ivf, pq)
-    }
+    store.publish(path)(publishTo(spark, ivf, pq))
+    load(spark, path, ivf, pq)
   }
 
-  /** Mtime-keyed per-corpus cache (Ivf.cached convention): the composed
-    * code table is persisted once per (corpus, params) and probed from
-    * its list_id-partitioned on-disk layout by every later JVM. */
-  // process-resident loaded models (Ivf.cached memo doc)
-  private val memo = new graft.MtimeCache[IvfPqModel]
-
+  /** The persisted composed index of a corpus (the Ivf.cached
+    * convention): the code table is written once per (corpus, params) and
+    * every later JVM probes its list_id-partitioned layout. The IVF
+    * geometry names the entry too: list_ids are ivf-model-specific, and
+    * codes persisted against a differently-built IVF would probe wrong
+    * lists with no error. */
   def cached(spark: SparkSession, emb: DataFrame, corpusKey: String,
-             ivf: IvfModel, pq: PqModel): IvfPqModel = {
-    val key = corpusKey.replaceAll("[^A-Za-z0-9.]", "_")
-    val srcMtime = emb.inputFiles.map(f =>
-      new java.io.File(new java.net.URI(f).getPath).lastModified()).foldLeft(0L)(math.max)
-    def body = {
-      val n = emb.count()
-      // nl (the IVF geometry) must key the cache too: the composed table's
-      // list_ids are ivf-model-specific, and reusing codes persisted against
-      // a differently-built IVF would probe wrong lists with no error
-      val path = s"${sys.props("java.io.tmpdir")}/graft-ivfpq/$key-n$n-m$srcMtime-nl${ivf.centroids.length}-sub${pq.m}-k${pq.kCodes}"
-      buildOrLoad(spark, ivf, pq, path)
-    }
-    if (srcMtime == 0L) body
-    else memo(s"$key-nl${ivf.centroids.length}-sub${pq.m}-k${pq.kCodes}", srcMtime)(body)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
-  }
+             ivf: IvfModel, pq: PqModel): IvfPqModel =
+    store(emb, corpusKey, s"nl${ivf.centroids.length}-sub${pq.m}-k${pq.kCodes}")(
+      publishTo(spark, ivf, pq))(load(spark, _, ivf, pq))
 }

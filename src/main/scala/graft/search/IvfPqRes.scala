@@ -92,6 +92,14 @@ final case class IvfPqResModel(ivf: IvfModel, m: Int, dsub: Int, kCodes: Int,
       biases, shortlist, k)
   }
 
+  /** list_id → row count, collected ONCE per model (IvfPqModel.listSizes
+    * twin): serving-path probe-volume stats come from this map as driver
+    * math, never from a per-query count() job. */
+  lazy val listSizes: Map[Int, Long] =
+    coded.groupBy(col("list_id").cast("int").as("list_id"))
+      .agg(count(lit(1)).as("sz"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+
   /** Composed-index health (IvfPqModel.stats shape, residual flavor). */
   def stats: DataFrame = {
     val sizes = coded.groupBy(col("list_id")).agg(count(lit(1)).as("sz"))
@@ -108,18 +116,6 @@ final case class IvfPqResModel(ivf: IvfModel, m: Int, dsub: Int, kCodes: Int,
 }
 
 object IvfPqRes {
-
-  /** list_id → row count, collected once per model (IvfPqModel.listSizes
-    * twin): serving-path probe-volume stats come from this map, never a
-    * per-query count() job. Kept here (not in the case class) so copies
-    * share nothing stale. */
-  private val sizesCache = new java.util.concurrent.ConcurrentHashMap[String, Map[Int, Long]]()
-
-  def listSizes(key: String, model: IvfPqResModel): Map[Int, Long] =
-    sizesCache.computeIfAbsent(key, _ =>
-      model.coded.groupBy(col("list_id").cast("int").as("list_id"))
-        .agg(count(lit(1)).as("sz"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
 
   /** Persist the residual code table (list_id-partitioned, one file per
     * list — the IvfPq.write discipline) plus the residual codebook. The
@@ -157,55 +153,17 @@ object IvfPqRes {
       spark.read.parquet(s"$path/codes"), ivf.indexed.drop("list_id"))
   }
 
-  /** Load-or-publish with the shared single-rename race discipline
-    * (IvfPq.buildOrLoad doc). */
-  def buildOrLoad(spark: org.apache.spark.sql.SparkSession, ivf: IvfModel,
-                  path: String): IvfPqResModel = {
-    def done = new java.io.File(s"$path/codes/_SUCCESS").exists()
-    if (!done) {
-      val tmp = s"$path.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}"
-      write(build(ivf), tmp)
-      val dst = new java.io.File(path)
-      dst.getParentFile.mkdirs()
-      if (!new java.io.File(tmp).renameTo(dst)) {
-        deleteRecursively(new java.io.File(tmp))
-        if (!done)
-          throw new IllegalStateException(
-            s"ivfpq_res publish failed: rename to $path lost without a complete index present")
-      }
-    }
-    load(spark, path, ivf)
-  }
+  private val store = new graft.ArtifactStore.Family[IvfPqResModel](
+    "ivfpqres", "codes/_SUCCESS", "codebook/_SUCCESS")
 
-  /** Mtime-keyed per-corpus cache (IvfPq.cached convention): the residual
-    * code table persists once per (corpus, ivf-geometry, pq-params) and
-    * every later JVM probes the list_id-partitioned on-disk layout. */
-  // process-resident loaded models (Ivf.cached memo doc); mtime-guarded,
-  // so this subsumes the old path-keyed map WITHOUT the count() job the
-  // path's row-count component cost per call
-  private val memo = new graft.MtimeCache[IvfPqResModel]
-
-  def cached(emb: DataFrame, corpusKey: String, ivf: IvfModel): IvfPqResModel = {
-    val key = corpusKey.replaceAll("[^A-Za-z0-9.]", "_")
-    val mtime = emb.inputFiles.map(f =>
-      new java.io.File(new java.net.URI(f).getPath).lastModified()).foldLeft(0L)(math.max)
-    // the path key covers (corpus, ivf-geometry, pq-params) — pq params are
-    // build()'s defaults here, spelled out so the IvfPq.cached `-sub$m-k$k`
-    // convention holds and a future non-default build can't alias this entry
-    val mSub = Pq.pickM(ivf.centroids(0).length)
-    def body = {
-      val n = emb.count()
-      val path = s"${sys.props("java.io.tmpdir")}/graft-ivfpqres/$key-n$n-m$mtime-nl${ivf.centroids.length}-sub$mSub-k256"
-      buildOrLoad(emb.sparkSession, ivf, path)
-    }
-    if (mtime == 0L) body
-    else memo(s"$key-nl${ivf.centroids.length}-sub$mSub-k256", mtime)(body)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
-  }
+  /** The persisted residual index of a corpus (the IvfPq.cached
+    * convention): the entry is named by the IVF geometry and the PQ
+    * params — build()'s defaults, spelled out so a future non-default
+    * build can't alias this entry. */
+  def cached(emb: DataFrame, corpusKey: String, ivf: IvfModel): IvfPqResModel =
+    store(emb, corpusKey,
+      s"nl${ivf.centroids.length}-sub${Pq.pickM(ivf.centroids(0).length)}-k256")(
+      write(build(ivf), _))(load(emb.sparkSession, _, ivf))
 
   /** Train the residual codebook on a bounded sample of (vector, list)
     * pairs — residuals computed driver-side against the coarse centroids

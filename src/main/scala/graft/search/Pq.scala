@@ -235,53 +235,14 @@ object Pq {
       spark.read.parquet(s"$path/codes"), corpus)
   }
 
-  /** Load the persisted index if present, else build + publish with one
-    * rename (same race discipline as Ivf.buildOrLoad: a concurrent
-    * builder can't interleave half-written parts; the rename loser
-    * discards its copy and re-verifies the winner). */
-  def buildOrLoad(spark: SparkSession, emb: DataFrame, path: String,
-                  m: Int = 0, kCodes: Int = 256, seed: Long = 42L): PqModel = {
-    def done(part: String) = new java.io.File(s"$path/$part/_SUCCESS").exists()
-    if (done("codes") && done("codebook")) load(spark, path, emb)
-    else {
-      val tmp = s"$path.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}"
-      write(build(emb, m, kCodes, seed), tmp)
-      val dst = new java.io.File(path)
-      dst.getParentFile.mkdirs()
-      if (!new java.io.File(tmp).renameTo(dst)) {
-        deleteRecursively(new java.io.File(tmp))
-        if (!(done("codes") && done("codebook")))
-          throw new IllegalStateException(
-            s"pq publish failed: rename to $path lost without a complete index present")
-      }
-      load(spark, path, emb)
-    }
-  }
+  private val store = new graft.ArtifactStore.Family[PqModel](
+    "pq", "codes/_SUCCESS", "codebook/_SUCCESS")
 
-  /** Mtime-keyed per-corpus cache path (same convention as Ivf.cached).
-    * `m = 0` auto-sizes via [[pickM]]; the RESOLVED m names the path, so
-    * corpora of different dimensions never share an index dir. */
-  // process-resident loaded models (Ivf.cached memo doc): the un-memoized
-  // form paid a count() + dim first() + codebook collect PER CALL
-  private val memo = new graft.MtimeCache[PqModel]
-
+  /** The persisted PQ index of a corpus (the Ivf.cached convention).
+    * `m = 0` auto-sizes via [[pickM]]; the requested m and kCodes name
+    * the entry, so the memo hit needs no dimension job. */
   def cached(spark: SparkSession, emb: DataFrame, corpusKey: String,
-             m: Int = 0, kCodes: Int = 256): PqModel = {
-    val key = corpusKey.replaceAll("[^A-Za-z0-9.]", "_")
-    val srcMtime = emb.inputFiles.map(f =>
-      new java.io.File(new java.net.URI(f).getPath).lastModified()).foldLeft(0L)(math.max)
-    def body = {
-      val n = emb.count()
-      val m0 = if (m <= 0) pickM(emb.select(size(col("embedding"))).first().getInt(0)) else m
-      val path = s"${sys.props("java.io.tmpdir")}/graft-pq/$key-n$n-m$srcMtime-sub$m0-k$kCodes"
-      buildOrLoad(spark, emb, path, m0, kCodes)
-    }
-    // memo keys the REQUESTED m (same corpus+request resolves the same m0)
-    if (srcMtime == 0L) body else memo(s"$key-subreq$m-k$kCodes", srcMtime)(body)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
-  }
+             m: Int = 0, kCodes: Int = 256): PqModel =
+    store(emb, corpusKey, s"sub${if (m > 0) m.toString else "auto"}-k$kCodes")(
+      write(build(emb, m, kCodes), _))(load(spark, _, emb))
 }

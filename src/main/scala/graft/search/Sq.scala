@@ -138,45 +138,10 @@ object Sq {
     SqModel(vmin.length, vmin, delta, spark.read.parquet(s"$path/codes"), corpus)
   }
 
-  /** Load the persisted index if present, else build + publish with one
-    * rename (the Ivf/Pq.buildOrLoad race discipline). */
-  def buildOrLoad(spark: SparkSession, emb: DataFrame, path: String,
-                  seed: Long = 42L): SqModel = {
-    def done(part: String) = new java.io.File(s"$path/$part/_SUCCESS").exists()
-    if (done("codes") && done("params")) load(spark, path, emb)
-    else {
-      val tmp = s"$path.tmp-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}"
-      write(build(emb, seed), tmp)
-      val dst = new java.io.File(path)
-      dst.getParentFile.mkdirs()
-      if (!new java.io.File(tmp).renameTo(dst)) {
-        deleteRecursively(new java.io.File(tmp))
-        if (!(done("codes") && done("params")))
-          throw new IllegalStateException(
-            s"sq publish failed: rename to $path lost without a complete index present")
-      }
-      load(spark, path, emb)
-    }
-  }
+  private val store = new graft.ArtifactStore.Family[SqModel](
+    "sq", "codes/_SUCCESS", "params/_SUCCESS")
 
-  /** Mtime-keyed per-corpus cache path (the Ivf/Pq.cached convention). */
-  // process-resident loaded models (Ivf.cached memo doc)
-  private val memo = new graft.MtimeCache[SqModel]
-
-  def cached(spark: SparkSession, emb: DataFrame, corpusKey: String): SqModel = {
-    val key = corpusKey.replaceAll("[^A-Za-z0-9.]", "_")
-    val srcMtime = emb.inputFiles.map(f =>
-      new java.io.File(new java.net.URI(f).getPath).lastModified()).foldLeft(0L)(math.max)
-    def body = {
-      val n = emb.count()
-      val path = s"${sys.props("java.io.tmpdir")}/graft-sq/$key-n$n-m$srcMtime"
-      buildOrLoad(spark, emb, path)
-    }
-    if (srcMtime == 0L) body else memo(key, srcMtime)(body)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
-  }
+  /** The persisted SQ8 index of a corpus (the Ivf.cached convention). */
+  def cached(spark: SparkSession, emb: DataFrame, corpusKey: String): SqModel =
+    store(emb, corpusKey)(write(build(emb), _))(load(spark, _, emb))
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * output file per partition dir), published by atomic rename with the
   * old directory kept until the new one is complete — readers of the old
   * path are never exposed to a half-written table, the same discipline
-  * as the index buildOrLoad publish. Content is untouched (same rows,
+  * as the ArtifactStore publish. Content is untouched (same rows,
   * same schema, same partition pruning); only the file layout changes —
   * reload-equivalence is spec-pinned (CompactionSpec).
   *
@@ -61,12 +61,7 @@ object Compaction {
       old.renameTo(d)
       throw new IllegalStateException(s"compact: cannot publish $tmp to $dir")
     }
-    deleteRecursively(old)
+    LocalArtifacts.deleteRecursively(old)
     Report(partitionDirs(d, partitionCol).size, before, dataFiles(d).size)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
   }
 }

@@ -187,7 +187,7 @@ object Bpe {
   // ---- per-corpus-dir memo (a query run trains once, encode reuses;
   // mtime-guarded so a regenerated corpus retrains — r17 verdict #4) ----
 
-  private val cache = new graft.MtimeCache[Seq[Merge]]
+  private val cache = new graft.ArtifactStore.Memo[Seq[Merge]]
 
   def trainedFor(s: SparkSession, dir: String, numMerges: Int, maxWords: Int): Seq[Merge] =
     cache(s"$dir#$numMerges#$maxWords", graft.Tables.sourceMtime(dir, "documents")) {

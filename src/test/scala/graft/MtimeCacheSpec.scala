@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Spec-pins [[MtimeCache]] — the shared staleness guard behind every
+/** Spec-pins [[ArtifactStore.Memo]] — the shared staleness guard behind every
   * dir-keyed memo (r17 verdict #4: the bucketed-table caches were
   * dir-keyed while rowCount was already mtime-guarded, so an in-process
   * regeneration of a source table could serve a stale co-located table
@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class MtimeCacheSpec extends AnyFunSuite {
 
   test("same mtime memoizes; changed mtime recomputes and replaces the entry") {
-    val c = new MtimeCache[Int]
+    val c = new ArtifactStore.Memo[Int]
     var builds = 0
     def build: Int = { builds += 1; builds }
     assert(c("k", 1L)(build) == 1)
@@ -29,7 +29,7 @@ class MtimeCacheSpec extends AnyFunSuite {
   }
 
   test("keys are independent") {
-    val c = new MtimeCache[String]
+    val c = new ArtifactStore.Memo[String]
     assert(c("a", 1L)("va") == "va")
     assert(c("b", 1L)("vb") == "vb")
     assert(c("a", 1L)(fail("memo for a must survive b's insert")) == "va")

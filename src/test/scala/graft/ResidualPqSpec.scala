@@ -146,4 +146,16 @@ class ResidualPqSpec extends AnyFunSuite {
     assert(rRes >= rPlain - 0.2, s"residual adc recall $rRes far below plain $rPlain")
     assert(rResRefined >= 0.8, s"refined recall $rResRefined below floor")
   }
+
+  test("list sizes belong to the model: two models under one corpus key report their own") {
+    // a corpus key alone cannot name list sizes: a regenerated corpus under
+    // the same key is a different model with different lists
+    val half = IvfPqRes.build(Ivf.build(emb.where(col("vec_id") % 2 === 0), nlist = 8))
+    Seq(model -> emb.count(), half -> emb.where(col("vec_id") % 2 === 0).count())
+      .foreach { case (m, n) =>
+        val want = m.coded.groupBy(col("list_id").cast("int")).count()
+          .as[(Int, Long)].collect().toMap
+        assert(m.listSizes == want && m.listSizes.values.sum == n)
+      }
+  }
 }

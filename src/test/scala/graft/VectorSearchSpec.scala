@@ -672,7 +672,7 @@ class VectorSearchSpec extends AnyFunSuite {
         s"$name: auto-shortlist recall ${got.count(exactTop) / 10.0} at width $width")
     }
     // persistence: buildOrLoad writes meta.json with the tune; a reload
-    // carries it; a legacy dir (meta deleted) re-tunes deterministically
+    // carries it
     val corpus = iid.toDF("vec_id", "embedding")
     val ivf = Ivf.build(corpus, nlist = 8)
     val pqm = Pq.build(corpus)
@@ -681,9 +681,6 @@ class VectorSearchSpec extends AnyFunSuite {
     assert(built.tuned.isDefined, "build must record the tune in meta.json")
     val reloaded = IvfPq.buildOrLoad(spark, ivf, pqm, dir)
     assert(reloaded.tuned == built.tuned)
-    new java.io.File(s"$dir/meta.json").delete()
-    val legacy = IvfPq.buildOrLoad(spark, ivf, pqm, dir)
-    assert(legacy.tuned == built.tuned, "legacy dir re-tunes to the same result")
   }
 
   test("IVFPQ stats: vectors conserved across the composed table") {
@@ -755,5 +752,23 @@ class VectorSearchSpec extends AnyFunSuite {
       .orderBy("vec_id").as[(Long, Seq[Int])].collect().toSeq
     assert(a == b, "same seed must yield identical codes")
     intercept[IllegalArgumentException] { Pq.build(emb, m = 8, kCodes = 257) }
+  }
+
+  test("Ivf.build and Pq.build are deterministic over a sampled multi-partition corpus") {
+    // sampling runs (maxTrainRows < n) over 4 partitions: same seed, same
+    // centroids, codebook and assignments on every build
+    val rng = new scala.util.Random(5)
+    val df = spark.sparkContext.parallelize((0 until 2000).map(i =>
+      (i.toLong, Array.fill(16)(rng.nextGaussian().toFloat))), 4).toDF("vec_id", "embedding")
+    def ivf() = Ivf.build(df, nlist = 16, maxIter = 10, maxTrainRows = 600)
+    def pq() = Pq.build(df, kCodes = 16, maxTrainRows = 600)
+    val (i1, i2) = (ivf(), ivf())
+    assert(i1.centroids.map(_.toSeq).toSeq == i2.centroids.map(_.toSeq).toSeq)
+    def lists(m: IvfModel) = m.indexed.orderBy("vec_id").select("list_id").as[Int].collect().toSeq
+    assert(lists(i1) == lists(i2))
+    val (p1, p2) = (pq(), pq())
+    assert(p1.codebook.map(_.map(_.toSeq).toSeq).toSeq == p2.codebook.map(_.map(_.toSeq).toSeq).toSeq)
+    def codes(m: PqModel) = m.codes.orderBy("vec_id").select("pq_codes").collect().map(_.toString).toSeq
+    assert(codes(p1) == codes(p2))
   }
 }
