@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.LocalArtifacts
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 
 /** The one lifecycle for every artifact graft persists under the system
@@ -29,14 +30,16 @@ import org.apache.spark.sql.DataFrame
   *  - memo: one (stamp, value) per (family, corpusKey, params) for the
   *    process ([[Memo]]). A hit is driver work only — it starts no Spark
   *    job; a new stamp replaces the entry, never accumulates beside it.
+  *    A loaded value holds DataFrames and pinned blocks of the context
+  *    that loaded it, so an entry is bound to that SparkContext: a call
+  *    under a stopped or different context reloads instead of serving a
+  *    dead handle.
   *
-  * Two preconditions hold for every caller and are not re-checked:
-  *  - one SparkSession per process: a memoized value may hold DataFrames
-  *    of the session that loaded it;
-  *  - a corpus key names one source table: callers pass the full table of
-  *    an sf dir with that dir as the key, so key + stamp name the content.
-  *    The stamp must be positive (a file-backed source); a source with no
-  *    files has no generation to name and is refused.
+  * One precondition holds for every caller and is not re-checked: a
+  * corpus key names one source table. Callers pass the full table of an
+  * sf dir with that dir as the key, so key + stamp name the content. The
+  * stamp must be positive (a file-backed source); a source with no files
+  * has no generation to name and is refused.
   */
 object ArtifactStore {
 
@@ -58,12 +61,19 @@ object ArtifactStore {
     * the caches keyed by a source table's directory (row counts, bucketed
     * catalog tables, pinned serving tiers). */
   final class Memo[V] {
-    private val cache =
-      new java.util.concurrent.ConcurrentHashMap[String, (Long, V)]()
+    private final case class Entry(mtime: Long, sc: SparkContext, value: V)
+    private val cache = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
 
-    def apply(key: String, mtime: Long)(compute: => V): V =
+    /** A value that holds no Spark handle (a schema, a count, merges). */
+    def apply(key: String, mtime: Long)(compute: => V): V = apply(key, mtime, null)(compute)
+
+    /** A value that holds handles of `sc` (DataFrames, pinned blocks,
+      * catalog tables): a hit also needs the entry to come from `sc`, and
+      * `sc` to be live; otherwise the value is computed again under `sc`. */
+    def apply(key: String, mtime: Long, sc: SparkContext)(compute: => V): V =
       cache.compute(key, (_, cur) =>
-        if (cur != null && cur._1 == mtime) cur else (mtime, compute))._2
+        if (cur != null && cur.mtime == mtime && (cur.sc eq sc) && (sc == null || !sc.isStopped)) cur
+        else Entry(mtime, sc, compute)).value
   }
 
   /** One artifact family: its directory, its completion markers (paths
@@ -87,7 +97,7 @@ object ArtifactStore {
       // of a path whose name marks it hidden
       val key = corpusKey.replaceAll("[^A-Za-z0-9.]", "_").stripPrefix("_")
       val prefix = if (params.isEmpty) key else s"$key-$params"
-      memo(prefix, st) {
+      memo(prefix, st, source.sparkSession.sparkContext) {
         reapStale(dir, key, st)
         val path = s"$dir/$prefix-m$st"
         publish(path)(write)

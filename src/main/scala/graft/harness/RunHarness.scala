@@ -467,7 +467,7 @@ object RunHarness {
     corpusKey match {
       case Some(dir) if new java.io.File(s"$dir/embeddings.parquet").exists() =>
         sigCache(s"$dir|bits=${tbls.head.length}|t=${tbls.length}",
-          graft.Tables.sourceMtime(dir, "embeddings")) {
+          graft.Tables.sourceMtime(dir, "embeddings"), emb.sparkSession.sparkContext) {
           val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           df.count() // materialize the pin (one-time index-build cost)
           df

@@ -22,21 +22,39 @@ import org.apache.spark.sql.DataFrame
   *    `spark.graft.pin=reliable` plus a durable checkpoint dir. Requires
   *    `SparkContext.setCheckpointDir` (fails loudly if unset — silently
   *    checkpointing to a default /tmp on a cluster would be local-disk,
-  *    i.e. not reliable at all).
+  *    i.e. not reliable at all) and
+  *    `spark.cleaner.referenceTracking.cleanCheckpoints=true`: every pin
+  *    writes a full copy of its rows (a resident index load writes the
+  *    whole index, again on every reload after an ingest), and without
+  *    the cleaner those copies are never deleted.
   */
 object Pin {
+  private val CleanCheckpoints = "spark.cleaner.referenceTracking.cleanCheckpoints"
+
   def apply(df: DataFrame): DataFrame =
     df.sparkSession.conf.get("spark.graft.pin", "local") match {
       case "local" => df.localCheckpoint()
       case "reliable" =>
-        if (df.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-          throw new IllegalStateException(
-            "spark.graft.pin=reliable needs SparkContext.setCheckpointDir " +
-              "(a durable path — that is the point of the mode)")
+        val sc = df.sparkSession.sparkContext
+        requireReliable(sc.getCheckpointDir, sc.getConf)
         df.checkpoint()
       case other => throw new IllegalArgumentException(
         s"spark.graft.pin must be local or reliable, got '$other'")
     }
+
+  /** Reliable mode's two preconditions, checked before any checkpoint is
+    * written. */
+  private[graft] def requireReliable(checkpointDir: Option[String],
+                                     conf: org.apache.spark.SparkConf): Unit = {
+    if (checkpointDir.isEmpty)
+      throw new IllegalStateException(
+        "spark.graft.pin=reliable needs SparkContext.setCheckpointDir " +
+          "(a durable path — that is the point of the mode)")
+    if (!conf.getBoolean(CleanCheckpoints, defaultValue = false))
+      throw new IllegalStateException(
+        s"spark.graft.pin=reliable needs $CleanCheckpoints=true at context start " +
+          "(each pin writes a full checkpoint copy; without it none is ever deleted)")
+  }
 
   /** `.pin()` chain syntax, so call sites read like the
     * `.localCheckpoint()` they replace. */

@@ -202,7 +202,7 @@ object DedupQueries {
   private val minhashBandTableCache = new graft.ArtifactStore.Memo[String]
 
   private[graft] def minhashBandTable(s: SparkSession, d: String): String =
-    minhashBandTableCache(d, Tables.sourceMtime(d, "documents")) {
+    minhashBandTableCache(d, Tables.sourceMtime(d, "documents"), s.sparkContext) {
       val key = d.replaceAll("[^A-Za-z0-9]", "_")
       val nb = BandGeom._1
       val n = Tables.rowCount(s, d, "documents") * nb // `bands` rows per doc
@@ -270,7 +270,7 @@ object DedupQueries {
   private val simhashChunkCache = new graft.ArtifactStore.Memo[String]
 
   private[graft] def simhashChunkTable(s: SparkSession, d: String): String =
-    simhashChunkCache(d, Tables.sourceMtime(d, "documents")) {
+    simhashChunkCache(d, Tables.sourceMtime(d, "documents"), s.sparkContext) {
       val key = d.replaceAll("[^A-Za-z0-9]", "_")
       val docs = Tables.documents(s, d)
       val n = Tables.rowCount(s, d, "documents") * 20 // ≤ 20 block keys/doc

@@ -102,7 +102,7 @@ object IngestQueries {
   private val bucketedCache = new graft.ArtifactStore.Memo[(String, String)]
 
   private[graft] def bucketedTables(s: SparkSession, d: String): (String, String) =
-    bucketedCache(d, graft.Tables.sourceMtime(d, "lineitem", "orders")) {
+    bucketedCache(d, graft.Tables.sourceMtime(d, "lineitem", "orders"), s.sparkContext) {
       val key = d.replaceAll("[^A-Za-z0-9]", "_")
       // bucket count sized to the FACT table at ingest (the warehouse
       // rule: a fixed count that fits today starves parallelism and

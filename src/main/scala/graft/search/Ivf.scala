@@ -18,10 +18,13 @@ import org.apache.spark.sql.functions._
   *    plenty — centroid quality converges far below full-data cost);
   *  - assign: one narrow map with the codegen'd ArgMaxDotF32 expression
   *    against broadcast centroid literals — no shuffle;
-  *  - store: `write()` partitions the indexed table BY list_id, so probing
-  *    nprobe/nlist lists is a partition-PRUNED scan (the 100 TB win);
+  *  - store: `write()` partitions the indexed table BY list_id. `load`
+  *    pins a table that fits the serving budget ([[Serving.openLists]]);
+  *    above the serving budget, probing nprobe/nlist lists is a
+  *    partition-PRUNED scan (the 100 TB win);
   *  - probe: centroid ranking is O(nlist·D) driver math on the broadcast
-  *    centroids, then a pruned scan + brute-force top-K within the lists.
+  *    centroids, then a brute-force top-K within the probed lists'
+  *    resident rows, or within their pruned scan above the budget.
   */
 final case class IvfModel(centroids: Array[Array[Float]], indexed: DataFrame) {
 
@@ -188,23 +191,29 @@ object Ivf {
   }
 
   /** Load a persisted index: centroids (tiny — nlist ≤ 4096) + the
-    * list_id-partitioned vector table, partition-pruned at probe time. */
-  def load(spark: SparkSession, path: String): IvfModel = {
+    * list_id-partitioned vector table, resident when it fits the serving
+    * budget, partition-pruned at probe time above the serving budget
+    * ([[Serving.openLists]]). */
+  def load(spark: SparkSession, path: String): IvfModel =
+    load(spark, path, Serving.BudgetBytes)
+
+  private[graft] def load(spark: SparkSession, path: String, budgetBytes: Long): IvfModel = {
     val cents = spark.read.parquet(s"$path/centroids")
       .orderBy("list_id").collect()
       .map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray)
-    IvfModel(cents, spark.read.parquet(s"$path/data"))
+    IvfModel(cents, Serving.openLists(spark, s"$path/data", budgetBytes))
   }
 
   /** Persisted append — the warehouse-table form of IvfModel.append: the
     * batch's centroid assignments land as NEW files under their list_id
     * partition directories (mode append never rewrites resident files),
-    * so the next `load` serves resident ∪ batch with the same partition
-    * pruning. The clustering repartition keeps each touched list's new
-    * rows in O(1) files (IvfModel.write discipline). Concurrent appends
-    * of the SAME batch would duplicate rows — idempotence belongs to the
-    * ingest coordinator (e.g. streaming's exactly-once foreachBatch),
-    * same as any warehouse append. */
+    * so the next `load` serves resident ∪ batch: pinned again within the
+    * serving budget, with the same partition pruning above it. The
+    * clustering repartition keeps each touched list's new rows in O(1)
+    * files (IvfModel.write discipline). Concurrent appends of the SAME
+    * batch would duplicate rows — idempotence belongs to the ingest
+    * coordinator (e.g. streaming's exactly-once foreachBatch), same as
+    * any warehouse append. */
   def appendToPath(model: IvfModel, batch: DataFrame, path: String): Unit =
     model.assign(batch).repartition(col("list_id"))
       .write.mode("append").partitionBy("list_id").parquet(s"$path/data")
@@ -215,9 +224,10 @@ object Ivf {
   /** The shared persisted index of a corpus ([[graft.ArtifactStore]]
     * entry per corpus key, source stamp and `maxIter`): both the
     * registered vec_ivf_* queries and the harness "ivf" backend resolve
-    * here, so they probe the SAME partition-pruned on-disk index, trained
-    * at most once across all JVMs on the machine and loaded at most once
-    * per process. `knownTotal` skips the count job a build needs when the
+    * here, so they probe the SAME persisted index (resident within the
+    * serving budget, partition-pruned on disk above it), trained at most
+    * once across all JVMs on the machine and loaded at most once per
+    * process. `knownTotal` skips the count job a build needs when the
     * caller already has it. */
   def cached(spark: SparkSession, emb: DataFrame, corpusKey: String,
              maxIter: Int = 10, knownTotal: Option[Long] = None): IvfModel =

@@ -10,17 +10,19 @@ import org.apache.spark.sql.functions._
   *
   * The two halves already exist and stay INDEPENDENT:
   *  - [[Ivf]] contributes the coarse quantizer: list assignment, the
-  *    list_id-partitioned layout, and probe-time partition pruning;
+  *    list_id-partitioned layout, and the probed-list restriction;
   *  - [[Pq]] contributes the fine quantizer: the m-byte ADC code column
   *    and the per-query lookup-table scoring.
   *
   * The composed code table carries (vec_id, list_id, pq_codes) and is
-  * persisted partitioned BY list_id, so a probe reads only the probed
-  * lists' partitions AND each surviving row is m bytes, not m·dsub·4 —
-  * both prunings multiply: at nprobe/nlist = 32/4096 over 64-d f32 the
-  * scan I/O is (32/4096)·(1/32) ≈ 1/4096 of the flat corpus. The exact
-  * refine then touches only the ≤`shortlist` winners via a broadcast join
-  * back to the vector table (never a second corpus scan).
+  * persisted partitioned BY list_id. `load` pins a code table that fits
+  * the serving budget ([[Serving.openLists]]); above the serving budget a
+  * probe reads only the probed lists' partitions AND each surviving row
+  * is m bytes, not m·dsub·4 — both prunings multiply: at nprobe/nlist =
+  * 32/4096 over 64-d f32 the scan I/O is (32/4096)·(1/32) ≈ 1/4096 of
+  * the flat corpus. The exact refine then touches only the ≤`shortlist`
+  * winners via a broadcast join back to the vector table (never a second
+  * corpus scan).
   */
 final case class IvfPqModel(ivf: IvfModel, pq: PqModel, coded: DataFrame,
                             tuned: Option[(Int, Double)] = None) {
@@ -241,15 +243,23 @@ object IvfPq {
     model.coded.repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id").parquet(s"$path/codes")
 
+  /** Load the composed code table at `path` over its trained halves:
+    * resident within the serving budget, partition-pruned at probe time
+    * above it ([[Serving.openLists]]). */
   def load(spark: SparkSession, path: String, ivf: IvfModel, pq: PqModel): IvfPqModel =
-    IvfPqModel(ivf, pq, spark.read.parquet(s"$path/codes"), readMeta(path))
+    load(spark, path, ivf, pq, Serving.BudgetBytes)
+
+  private[graft] def load(spark: SparkSession, path: String, ivf: IvfModel, pq: PqModel,
+                          budgetBytes: Long): IvfPqModel =
+    IvfPqModel(ivf, pq, Serving.openLists(spark, s"$path/codes", budgetBytes), readMeta(path))
 
   /** Persisted append on the composed tier (Ivf.appendToPath twin): the
     * batch's (vec_id, list_id, pq_codes) rows land as NEW files under
     * their list_id partition directories — resident code files never
-    * rewritten, partition pruning unchanged on reload. The refine-side
-    * vector table is the caller's corpus artifact and grows through its
-    * own ingest; this appends only the index's code rows. */
+    * rewritten; a reload pins them again within the serving budget and
+    * prunes them the same way above it. The refine-side vector table is
+    * the caller's corpus artifact and grows through its own ingest; this
+    * appends only the index's code rows. */
   def appendToPath(model: IvfPqModel, batch: DataFrame, path: String): Unit =
     model.ivf.assign(batch)
       .select(col("vec_id"), col("list_id"),
@@ -297,8 +307,8 @@ object IvfPq {
 
   /** The persisted composed index of a corpus (the Ivf.cached
     * convention): the code table is written once per (corpus, params) and
-    * every later JVM probes its list_id-partitioned layout. The IVF
-    * geometry names the entry too: list_ids are ivf-model-specific, and
+    * every later JVM loads it (IvfPq.load). The IVF geometry names the
+    * entry too: list_ids are ivf-model-specific, and
     * codes persisted against a differently-built IVF would probe wrong
     * lists with no error. */
   def cached(spark: SparkSession, emb: DataFrame, corpusKey: String,

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * (identical to the plain-PQ ADC table) scores every probed list's codes,
   * plus a per-list scalar bias ⟨q, c_l⟩ — driver math over nprobe
   * centroids, attached as a tiny literal map. The scan shape is exactly
-  * IvfPqModel's (partition-pruned m-byte codes, TakeOrdered shortlist,
+  * IvfPqModel's (probed lists' m-byte codes, TakeOrdered shortlist,
   * broadcast-keyed exact refine); only the code semantics differ.
   */
 final case class IvfPqResModel(ivf: IvfModel, m: Int, dsub: Int, kCodes: Int,
@@ -136,8 +136,15 @@ object IvfPqRes {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
   }
 
+  /** Load the residual index at `path` over its coarse quantizer: the
+    * code table is resident within the serving budget, partition-pruned
+    * at probe time above it ([[Serving.openLists]]). */
   def load(spark: org.apache.spark.sql.SparkSession, path: String,
-           ivf: IvfModel): IvfPqResModel = {
+           ivf: IvfModel): IvfPqResModel =
+    load(spark, path, ivf, Serving.BudgetBytes)
+
+  private[graft] def load(spark: org.apache.spark.sql.SparkSession, path: String,
+                          ivf: IvfModel, budgetBytes: Long): IvfPqResModel = {
     val rows = spark.read.parquet(s"$path/codebook").orderBy("s", "c").collect()
     val m = rows.map(_.getInt(0)).max + 1
     val codebook = Array.tabulate(m) { s =>
@@ -150,7 +157,7 @@ object IvfPqRes {
       s"ivfpq_res load: codebook geometry m=$m × dsub=$dsub != ivf centroid dim $dim " +
         s"(index at $path was built against a different corpus/geometry)")
     IvfPqResModel(ivf, m, dsub, codebook(0).length, codebook,
-      spark.read.parquet(s"$path/codes"), ivf.indexed.drop("list_id"))
+      Serving.openLists(spark, s"$path/codes", budgetBytes), ivf.indexed.drop("list_id"))
   }
 
   private val store = new graft.ArtifactStore.Family[IvfPqResModel](

@@ -130,21 +130,41 @@ class ArtifactStoreSpec extends AnyFunSuite {
     try {
       val ivf = graft.queries.VectorQueries.ivfModel(spark, dir)
       val pq = graft.queries.VectorQueries.pqModel(spark, dir)
+      val ivfpq = graft.queries.VectorQueries.ivfpqModel(spark, dir)
       sc.setJobGroup("store-hit", "a memo hit must not start a job")
       try {
         assert(graft.queries.VectorQueries.ivfModel(spark, dir) eq ivf)
         assert(graft.queries.VectorQueries.pqModel(spark, dir) eq pq)
+        assert(graft.queries.VectorQueries.ivfpqModel(spark, dir) eq ivfpq)
       } finally sc.clearJobGroup()
       assert(sc.statusTracker.getJobIdsForGroup("store-hit").isEmpty)
     } finally {
       val key = dir.replaceAll("[^A-Za-z0-9.]", "_").stripPrefix("_")
-      Seq("ivf", "pq").foreach { f =>
+      Seq("ivf", "pq", "ivfpq").foreach { f =>
         Option(new java.io.File(s"${sys.props("java.io.tmpdir")}/graft-$f-${ArtifactStore.Version}")
           .listFiles()).toSeq.flatten.filter(_.getName.startsWith(s"$key-"))
           .foreach(LocalArtifacts.deleteRecursively)
       }
       LocalArtifacts.deleteRecursively(new java.io.File(dir))
     }
+  }
+
+  test("a memo entry is bound to its SparkContext: a stopped or new context reloads") {
+    // the shared test session must outlive this spec, so the two contexts
+    // live in a child JVM (MemoContextChild) with its own temp dir
+    val tmp = java.nio.file.Files.createTempDirectory("graft-memo-ctx").toFile
+    try {
+      val jvmFlags = java.lang.management.ManagementFactory.getRuntimeMXBean
+        .getInputArguments.toArray.map(_.toString)
+        .filter(a => a.startsWith("--add-opens") || a.startsWith("-Dspark."))
+      val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx768m",
+        s"-Djava.io.tmpdir=${tmp.getPath}") ++ jvmFlags ++
+        Seq("-cp", sys.props("java.class.path"), "graft.MemoContextChild", s"${tmp.getPath}/sf")
+      val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+      val out = scala.io.Source.fromInputStream(proc.getInputStream, "UTF-8").mkString
+      assert(proc.waitFor() == 0, out.linesIterator.toSeq.takeRight(40).mkString("\n"))
+      assert(out.contains(MemoContextChild.Ok), out.linesIterator.toSeq.takeRight(40).mkString("\n"))
+    } finally LocalArtifacts.deleteRecursively(tmp)
   }
 
   test("a source with no input files is refused before any build") {

@@ -82,6 +82,21 @@ class PinSpec extends AnyFunSuite {
     }
   }
 
+  test("reliable mode without checkpoint cleaning is refused, naming the key") {
+    val key = "spark.cleaner.referenceTracking.cleanCheckpoints"
+    val e = intercept[IllegalStateException] {
+      Pin.requireReliable(Some("/durable/checkpoints"), new org.apache.spark.SparkConf(false))
+    }
+    assert(e.getMessage.contains(s"$key=true"), e.getMessage)
+    // the checkpoint-dir check still comes first
+    val noDir = intercept[IllegalStateException] {
+      Pin.requireReliable(None, new org.apache.spark.SparkConf(false))
+    }
+    assert(noDir.getMessage.contains("setCheckpointDir"), noDir.getMessage)
+    Pin.requireReliable(Some("/durable/checkpoints"),
+      new org.apache.spark.SparkConf(false).set(key, "true"))
+  }
+
   test("unknown pin mode is rejected") {
     spark.conf.set("spark.graft.pin", "bogus")
     try {

@@ -88,7 +88,8 @@ class PlanSpec extends AnyFunSuite {
     val model = graft.search.Ivf.build(emb, nlist = 8)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf").resolve("idx").toString
     model.write(dir)
-    val loaded = graft.search.Ivf.load(spark, dir) // centroids round-trip from disk
+    // a zero serving budget: the above-budget (on-disk) path under test
+    val loaded = graft.search.Ivf.load(spark, dir, 0L) // centroids round-trip from disk
     assert(loaded.centroids.map(_.toSeq) sameElements model.centroids.map(_.toSeq))
     val p = plan(loaded.search(QueryVectors.qvec(0), nprobe = 2, k = 5))
     // the isin(list_id) probe must land in PartitionFilters (pruned I/O),
@@ -106,7 +107,7 @@ class PlanSpec extends AnyFunSuite {
     val model = graft.search.Ivf.build(emb, nlist = 8)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_many").resolve("idx").toString
     model.write(dir)
-    val loaded = graft.search.Ivf.load(spark, dir)
+    val loaded = graft.search.Ivf.load(spark, dir, 0L) // above-budget path
     val qs = QueryVectors.batch(3)
     val p = plan(loaded.searchMany(qs, nprobe = 2, k = 5))
     // ONE scan, pruned to the probed-list union — not one scan per query
@@ -152,7 +153,7 @@ class PlanSpec extends AnyFunSuite {
     val pq = graft.search.Pq.build(emb, m = 8, kCodes = 16)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq").resolve("idx").toString
     graft.search.IvfPq.write(graft.search.IvfPq.compose(ivf, pq), dir)
-    val loaded = graft.search.IvfPq.load(spark, dir, ivf, pq)
+    val loaded = graft.search.IvfPq.load(spark, dir, ivf, pq, 0L) // above-budget path
     val p = plan(loaded.searchNoRefine(QueryVectors.qvec(0), nprobe = 2, k = 5))
     // both prunings must show at the scan: the probe lands in
     // PartitionFilters (list-level I/O skip) and ReadSchema carries the

@@ -8,6 +8,8 @@ object SparkTest {
   lazy val session: SparkSession = {
     val s = graft.tools.Sessions.local("4")
       .appName("graft-test")
+      // reliable-mode Pin refuses a context that never deletes checkpoints
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
