@@ -5,9 +5,17 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graft._
 
-/** SparkSessionExtensions installer: registers graft's native expressions
-  * in the SQL function registry, so `spark.sql("... dot_f32(a, b) ...")`
-  * works anywhere DataFrame code does. Activate with
+/** SparkSessionExtensions installer. It registers
+  *  - graft's native expressions in the SQL function registry, so
+  *    `spark.sql("... dot_f32(a, b) ...")` works anywhere DataFrame code
+  *    does;
+  *  - the `TopKPerKey` planner strategy;
+  *  - the [[org.apache.spark.sql.graft.InListByReference]] physical rule
+  *    (a post-transition columnar rule): an integral `IN` list in a
+  *    non-scan operator enters generated code by reference, so a serving
+  *    request whose probe or bucket list is new compiles no class.
+  *
+  * Activate with
   *
   *   SparkSession.builder()
   *     .withExtensions(new GraftExtensions()) // or
@@ -58,5 +66,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       unary("cdc_boundaries", "cdc_boundaries(text) - content-defined chunk boundary positions", CdcBoundaries))
     fns.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.TopKPerKeyStrategy)
+    ext.injectColumnar(_ => org.apache.spark.sql.graft.InListByReference.Columnar)
   }
 }

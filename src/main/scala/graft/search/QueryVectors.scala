@@ -93,6 +93,21 @@ object VecMath {
     acc
   }
 
+  /** [[dot]] over a row's array column, read in place — same order; a null
+    * element fails, as a typed read of the row would. */
+  def dot(a: org.apache.spark.sql.catalyst.util.ArrayData, b: Array[Float]): Double = {
+    val n = a.numElements()
+    require(n == b.length, s"dot: dimension mismatch $n vs ${b.length}")
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i)) throw new NullPointerException(s"dot: null element at $i")
+      acc += a.getFloat(i).toDouble * b(i).toDouble
+      i += 1
+    }
+    acc
+  }
+
   /** Round half-up to 6 dp — matches Spark's `round` (BigDecimal HALF_UP).
     * Monotone (x ≤ y ⇒ round6(x) ≤ round6(y)), and any x with
     * round6(x) ≥ w lies at or above w − 5e-7: the two facts that let

@@ -2,9 +2,12 @@ package graft.search
 
 import graft.operators.Pin
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -67,7 +70,9 @@ object Serving {
     * ≈300 ms of a ≈400 ms read of 64 lists on a 4-core box. Here the
     * listing is the walk above, handed to the file index as its cache;
     * partition columns and types are inferred from the directory names
-    * exactly as the plain read does. */
+    * exactly as the plain read does, and the data schema comes from the
+    * first data file's footer, read on the driver: no Spark job besides
+    * the pin. */
   private def listedRead(spark: SparkSession, root: Path, files: Seq[FileStatus]): DataFrame = {
     val listed = new FileStatusCache {
       override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
@@ -77,10 +82,36 @@ object Serving {
     }
     val index = new InMemoryFileIndex(spark, Seq(root), Map.empty, None, listed)
     val format = new ParquetFileFormat
-    // the plain read's inference: the first data file's footer
-    val dataSchema = format.inferSchema(spark, Map.empty, files.take(1)).getOrElse(
+    val first = files.headOption.getOrElse(
       throw new IllegalStateException(s"index table $root has no parquet data files"))
-    spark.baseRelationToDataFrame(
-      HadoopFsRelation(index, index.partitionSchema, dataSchema, None, format, Map.empty)(spark))
+    // the plain read's inference reads the same footer, in a one-task job
+    val dataSchema = footerSchema(spark, first)
+      .orElse(format.inferSchema(spark, Map.empty, Seq(first)))
+      .getOrElse(throw new IllegalStateException(s"index table $root: no schema in $first"))
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      index, index.partitionSchema, nullable(dataSchema).asInstanceOf[StructType], None, format,
+      Map.empty)(spark))
   }
+
+  /** Every field, element and value nullable — what the plain read does to
+    * a file's schema (Spark's own `asNullable` is package-private). */
+  private def nullable(t: DataType): DataType = t match {
+    case StructType(fs) => StructType(fs.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case other => other
+  }
+
+  /** The data schema Spark wrote into a parquet file's footer, read on the
+    * driver; None when the file carries none (a non-Spark writer). */
+  private def footerSchema(spark: SparkSession, file: FileStatus): Option[StructType] = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration))
+    try Option(reader.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+      .map(DataType.fromJson).collect { case st: StructType => st }
+    finally reader.close()
+  }
+
+  /** Where Spark's parquet writer keeps the row schema (ParquetReadSupport). */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 }

@@ -2,8 +2,10 @@ package graft.search
 
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 /** Hybrid vector search operators, Spark-first.
   *
@@ -19,9 +21,13 @@ import org.apache.spark.sql.functions._
   * 5e-7 — so answers equal "round every row, sort by (−score, id), take k".
   *
   * Scale notes: `orderBy(...).limit(k)` plans as TakeOrderedAndProject —
-  * a per-partition heap + O(k) driver merge, never a global sort. Query
-  * vectors enter the plan as literals (broadcast with the closure); the
-  * embedding side streams through whole-stage-codegen'd scoring.
+  * a per-partition heap + O(k) driver merge, never a global sort. Values
+  * that vary per request — query vectors, IVF probe lists, LSH bucket
+  * lists — enter generated code by reference (array literals ride
+  * `ctx.references`; integral `IN` lists become
+  * [[org.apache.spark.sql.graft.InLongList]]), so a warm request reuses
+  * the compiled classes of the last one; the embedding side streams
+  * through whole-stage-codegen'd scoring.
   */
 object VectorSearch {
 
@@ -55,15 +61,24 @@ object VectorSearch {
                     pred: Option[Column] = None): (Seq[(Long, Double)], Long) = {
     TopK.requireK(k)
     val base = pred.map(emb.where).getOrElse(emb)
-    val spark = base.sparkSession
-    import spark.implicits._
-    val rows = base.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-    val partials = spark.sparkContext.runJob(rows.rdd,
-      (it: Iterator[(Long, Array[Float])]) => {
+    // the executed plan's own rows: `Dataset.rdd` would plan a second
+    // QueryExecution (the deserializing one) on every call
+    val scored = base.select(col("vec_id").cast("long"), col("embedding"))
+    scored.schema("embedding").dataType match {
+      case ArrayType(FloatType, _) =>
+      case t => throw new IllegalArgumentException(
+        s"topKWithCount: embedding must be array<float>, got ${t.simpleString}")
+    }
+    val partials = base.sparkSession.sparkContext.runJob(scored.queryExecution.toRdd,
+      (it: Iterator[InternalRow]) => {
         val top = new TopK(k)
         var n = 0L
-        it.foreach { case (id, v) => n += 1; top.offer(VecMath.dot(v, qv), id) }
+        it.foreach { r =>
+          if (r.isNullAt(0) || r.isNullAt(1)) throw new NullPointerException(
+            s"topKWithCount: null ${if (r.isNullAt(0)) "vec_id" else "embedding"} in a scored row")
+          n += 1
+          top.offer(VecMath.dot(r.getArray(1), qv), r.getLong(0))
+        }
         (n, top.packed)
       })
     (TopK.merge(partials.iterator.map(_._2), k).pairs, partials.iterator.map(_._1).sum)

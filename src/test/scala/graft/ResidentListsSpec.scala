@@ -118,6 +118,23 @@ class ResidentListsSpec extends AnyFunSuite {
     }
   }
 
+  test("a resident load takes its schema from the footer: the plain read's schema, one job (the pin)") {
+    withDir("resident-schema") { dir =>
+      ivf.write(s"$dir/ivf")
+      IvfPq.write(IvfPq.compose(ivf, pq), s"$dir/ivfpq")
+      IvfPqRes.write(IvfPqRes.build(ivf, m = 8, kCodes = 16), s"$dir/res")
+      val sc = spark.sparkContext
+      for ((table, i) <- Seq(s"$dir/ivf/data", s"$dir/ivfpq/codes", s"$dir/res/codes").zipWithIndex) {
+        val group = s"resident-load-$i"
+        sc.setJobGroup(group, "a resident load runs its pin job only")
+        val df = try Serving.openLists(spark, table, Resident) finally sc.clearJobGroup()
+        org.apache.spark.GraftListenerBus.drain(sc)
+        assert(sc.statusTracker.getJobIdsForGroup(group).length == 1, table)
+        assert(df.schema == spark.read.parquet(table).schema, table)
+      }
+    }
+  }
+
   test("an under-budget load serves pinned rows: no parquet FileScan, no CacheManager entry") {
     withDir("resident-plan") { dir =>
       ivf.write(s"$dir/ivf")

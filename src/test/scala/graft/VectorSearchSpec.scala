@@ -111,6 +111,23 @@ class VectorSearchSpec extends AnyFunSuite {
     assert(sc.statusTracker.getJobIdsForGroup("vs-k0").isEmpty)
   }
 
+  test("topKWithCount fails loudly on a null vec_id, embedding or element, or a double vector") {
+    val q = Array(1.0f, 2.0f)
+    val nullId = Seq((Option.empty[Long], Array(1.0f, 1.0f)), (Some(2L), Array(0.5f, 0.5f)))
+      .toDF("vec_id", "embedding")
+    val nullVec = Seq((1L, null: Array[Float]), (2L, Array(0.5f, 0.5f)))
+      .toDF("vec_id", "embedding")
+    val nullElem = Seq((1L, Seq(Option(1.0f), None)), (2L, Seq(Some(0.5f), Some(0.5f))))
+      .toDF("vec_id", "embedding")
+    for (df <- Seq(nullId, nullVec, nullElem)) {
+      val e = intercept[Exception](VectorSearch.topKWithCount(df, q, 2))
+      assert(e.getMessage.toLowerCase.contains("null"), e.getMessage)
+    }
+    // nor is a double vector read as floats
+    intercept[Exception](VectorSearch.topKWithCount(
+      Seq((1L, Array(1.0, 1.0))).toDF("vec_id", "embedding"), q, 1))
+  }
+
   test("recallAtK is 1.0 on identical inputs, 0.0 on disjoint") {
     val a = Seq((0L, 1L), (0L, 2L)).toDF("qid", "vec_id")
     val b = Seq((0L, 3L), (0L, 4L)).toDF("qid", "vec_id")
