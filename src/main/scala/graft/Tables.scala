@@ -59,7 +59,7 @@ object Tables {
     * CosineLsh.pickBits) need N, and re-running a count job per
     * invocation puts a corpus scan inside every caller's timed region —
     * the sibling paths thread a caller-known total for exactly this
-    * reason (RunHarness / PqBackend). The cached count is GUARDED by the
+    * reason (RunHarness's code tiers). The cached count is GUARDED by the
     * source's max mtime (the ArtifactStore staleness rule): if an
     * in-process tool regenerates a testdata/scale dir after a count,
     * sizing decisions (CosineLsh.pickBits, bucket counts) see the NEW N,

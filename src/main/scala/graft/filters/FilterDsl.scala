@@ -203,18 +203,7 @@ object FilterDsl {
       dt match {
         case _: StringType => Some(lit(v.toString))
         case LongType | IntegerType | ShortType | ByteType =>
-          val l: Long = v match {
-            case n: Long => n
-            case n: Int => n.toLong
-            case n: Double =>
-              // truncation matches Python int(); non-finite is a cast
-              // failure (reference: int(inf) raises → match nothing)
-              if (n.isInfinite || n.isNaN) return None else n.toLong
-            case b: Boolean => if (b) 1L else 0L
-            case s: String => s.trim.toLong
-            case other => other.toString.trim.toLong
-          }
-          Some(lit(l).cast(dt))
+          castIntegral(v, dt).map(lit(_).cast(dt))
         case DoubleType | FloatType | _: DecimalType =>
           val d: Double = v match {
             case n: Double => n
@@ -243,5 +232,38 @@ object FilterDsl {
         case _ => Some(lit(v.toString).cast(dt))
       }
     } catch { case _: Exception => None }
+  }
+
+  /** A filter value for an integral column type `dt` — the ONE cast both
+    * [[castLit]] and the RAM tier's label predicate
+    * (RamCorpus.labelPredicate) compare against. Doubles truncate (Python
+    * int() semantics — eq 1.5 matches 1), booleans map to 0/1, strings
+    * must parse as an integer ("1.5" fails). A non-finite value or one
+    * outside `dt`'s range is a cast failure (None), never an overflowing
+    * literal cast: under ANSI mode `CAST(4294967299L AS INT)` throws while
+    * the query is optimized. */
+  def castIntegral(v: Any, dt: DataType): Option[Long] = {
+    val l: Long = try {
+      v match {
+        case null => return None
+        case n: Long => n
+        case n: Int => n.toLong
+        case n: Double =>
+          // beyond Long's range toLong would saturate, not fail
+          if (n.isNaN || n.isInfinite || n >= Long.MaxValue.toDouble ||
+              n < Long.MinValue.toDouble) return None
+          n.toLong
+        case b: Boolean => if (b) 1L else 0L
+        case s: String => s.trim.toLong
+        case other => other.toString.trim.toLong
+      }
+    } catch { case _: NumberFormatException => return None }
+    val (lo, hi) = dt match {
+      case IntegerType => (Int.MinValue.toLong, Int.MaxValue.toLong)
+      case ShortType => (Short.MinValue.toLong, Short.MaxValue.toLong)
+      case ByteType => (Byte.MinValue.toLong, Byte.MaxValue.toLong)
+      case _ => (Long.MinValue, Long.MaxValue)
+    }
+    if (l < lo || l > hi) None else Some(l)
   }
 }

@@ -70,16 +70,13 @@ object RunHarness {
     }
   }
 
-  /** Ladder accounting mirrors reference post_filter.py:60-99 exactly:
-    * walk the rungs; a rung that leaves < K kept candidates is a "retry"
-    * (bump); stop when kept ≥ K, when `maxLadderSteps` retries have been
-    * spent, or when the ladder is exhausted. scored_vectors = the K′ of
-    * the stopping rung; kth_at_stop only when the stop was due to ≥ K
-    * kept. One Spark job regardless (the max-rung TakeOrdered); the walk
-    * itself is O(K′) driver work over collected candidates. */
-  /** The reference's rung walk (post_filter.py:60-99): a rung that leaves
-    * < K kept is a "retry"; stop when kept ≥ K, retries are spent, or the
-    * ladder is exhausted. Pure driver work over collected candidates. */
+  /** The reference's rung walk, mirroring post_filter.py:60-99 exactly: a
+    * rung that leaves < K kept candidates is a "retry" (bump); stop when
+    * kept ≥ K, when `maxSteps` retries have been spent, or when the ladder
+    * is exhausted. scored_vectors = the K′ of the stopping rung;
+    * kth_at_stop only when the stop was due to ≥ K kept. One Spark job
+    * regardless (the caller's max-rung TakeOrdered); the walk itself is
+    * O(K′) driver work over collected candidates. */
   private def ladderWalk(cand: Array[(Long, Double, Boolean)], rungs: Seq[Int],
                          k: Int, maxSteps: Int): (Seq[(Long, Double)], Int, Boolean, Int) = {
     var retries = 0
@@ -165,225 +162,54 @@ object RunHarness {
     }
   }
 
-  /** PQ backend: ADC shortlist over the m-byte code table (the 32×-smaller
-    * scan), exact refine of the shortlist via a broadcast id join, filter
-    * applied on the refined rows (the code table carries no metadata).
-    * kept < K when the filter eats the shortlist — the honest recall trade
-    * a compressed post-filter index makes, recorded per query.
-    * scored_vectors = the FULL code-table row count (`codeCount`, known at
-    * registry time — codes are 1:1 with the corpus): the ADC pass scans
-    * every code regardless of the filter, and recording the shortlist
-    * size instead made pq look ~N/shortlist cheaper than its real scan
-    * (IvfPqBackend's scanned-count convention, applied here). */
-  private class PqBackend(val name: String, model: PqModel, shortlistN: Int,
-                          codeCount: Long, ram: Option[RamCorpus]) extends Backend {
-    def search(emb: DataFrame, qvec: Array[Float], pred: Option[org.apache.spark.sql.Column],
-               k: Int, allowed: Long): (Seq[Long], Stats) = {
-      val (rows, ms) = timed {
-        val short = model.codes
-          .select(col("vec_id"), round(model.adcScore(qvec), 6).as("adc_score"))
-          .orderBy(desc("adc_score"), col("vec_id")).limit(shortlistN)
-        val refined = model.corpus.join(broadcast(short.select("vec_id")), "vec_id")
-        VectorSearch.topK(refined, qvec, k, pred).collect()
-      }
-      (rows.map(_.getLong(0)).toSeq,
-        Stats(ms, codeCount, None, None, rows.lastOption.map(_.getDouble(1)), None,
-          Some(s"pq adc m=${model.m} k=${model.kCodes} shortlist=$shortlistN")))
-    }
-    /** RAM serving tier: the exact refine reads the pinned blocks (the
-      * reference refines FAISS shortlists against its resident matrix),
-      * so the timed path is ONE ADC TakeOrdered + one lightweight id-set
-      * scoring pass — never a corpus DataFrame re-scan. Results are
-      * ranking-identical to the DataFrame refine (RamCorpusSpec parity). */
-    override def search(emb: DataFrame, qvec: Array[Float], spec: FilterDsl.Spec,
-                        pred: Option[org.apache.spark.sql.Column],
-                        k: Int, allowed: Long): (Seq[Long], Stats) =
-      ram.flatMap(rc => RamCorpus.labelPredicate(spec).map((rc, _))) match {
-        case Some((rc, lp)) =>
-          val (rows, ms) = timed {
-            val shortIds = model.codes
-              .select(col("vec_id"), round(model.adcScore(qvec), 6).as("adc_score"))
-              .orderBy(desc("adc_score"), col("vec_id")).limit(shortlistN)
-              .select("vec_id").collect().map(_.getLong(0))
-            rc.scoreIds(qvec, shortIds, k, lp)
-          }
-          (rows.map(_._1),
-            Stats(ms, codeCount, None, None, rows.lastOption.map(_._2), None,
-              Some(s"pq adc m=${model.m} k=${model.kCodes} shortlist=$shortlistN")))
-        case None => search(emb, qvec, pred, k, allowed)
-      }
-  }
-
-  /** IVFPQ backend: partition-pruned ADC scan of the probed lists' m-byte
-    * codes → shortlist → exact refine → filter. The full FAISS-family
-    * scale tier recorded alongside its halves (ivf = pruned flat scan,
-    * pq = full compressed scan) so results.jsonl shows the composition's
-    * recall/latency position between them. */
-  private class IvfPqBackend(val name: String, model: IvfPqModel, nprobeN: Int,
-                             shortlistN: Int, ram: Option[RamCorpus])
+  /** Every compressed tier — pq, sq, bq, ivfpq, ivfpq_res — through the
+    * one shortlist-and-refine path ([[CodeTier]]): `probe` gives a query's
+    * code scan and its stats; the shortlist of `width` is refined exactly,
+    * the filter applied to the refined rows (the code tables carry no
+    * metadata). kept < K when the filter eats the shortlist — the honest
+    * recall trade a compressed post-filter index makes, recorded per
+    * query. With a RAM tier and a label-only filter the refine scores the
+    * pinned blocks (the reference refines FAISS shortlists against its
+    * resident matrix): one code-scan TakeOrdered plus one id-set scoring
+    * pass, never a corpus DataFrame re-scan; ranking-identical to the
+    * broadcast refine (RamCorpusSpec parity). */
+  private class CodeTierBackend(val name: String, corpus: DataFrame, width: Int,
+                                ram: Option[RamCorpus])
+                               (probe: Array[Float] => (CodeTier.Scan, Stats))
       extends Backend {
-    private def stats(ms: Double, lists: Seq[Int], kth: Option[Double]): Stats = {
-      // probe volume from the index metadata (list sizes collected once at
-      // model load, the centroid discipline) — a per-query count() job here
-      // would re-scan the probed partitions and double the serving path's
-      // probe I/O at scale
-      val scanned = lists.map(model.listSizes.getOrElse(_, 0L)).sum
-      Stats(ms, scanned, Some(lists.length), Some(nprobeN), kth, None,
-        Some(s"ivfpq adc m=${model.pq.m} k=${model.pq.kCodes} shortlist=$shortlistN"))
-    }
     def search(emb: DataFrame, qvec: Array[Float], pred: Option[org.apache.spark.sql.Column],
-               k: Int, allowed: Long): (Seq[Long], Stats) = {
-      val lists = model.ivf.probes(qvec, nprobeN)
-      val pruned = model.coded.where(col("list_id").isin(lists: _*))
-      val (rows, ms) = timed {
-        val short = pruned
-          .select(col("vec_id"), round(model.pq.adcScore(qvec), 6).as("adc_score"))
-          .orderBy(desc("adc_score"), col("vec_id")).limit(shortlistN)
-        val refined = model.pq.corpus.join(broadcast(short.select("vec_id")), "vec_id")
-        VectorSearch.topK(refined, qvec, k, pred).collect()
-      }
-      (rows.map(_.getLong(0)).toSeq,
-        stats(ms, lists, rows.lastOption.map(_.getDouble(1))))
-    }
-    /** RAM serving tier (PqBackend doc): partition-pruned ADC TakeOrdered
-      * + pinned-block refine of the shortlist ids. */
+               k: Int, allowed: Long): (Seq[Long], Stats) = serve(qvec, pred, k, None)
     override def search(emb: DataFrame, qvec: Array[Float], spec: FilterDsl.Spec,
                         pred: Option[org.apache.spark.sql.Column],
                         k: Int, allowed: Long): (Seq[Long], Stats) =
-      ram.flatMap(rc => RamCorpus.labelPredicate(spec).map((rc, _))) match {
-        case Some((rc, lp)) =>
-          val lists = model.ivf.probes(qvec, nprobeN)
-          val pruned = model.coded.where(col("list_id").isin(lists: _*))
-          val (rows, ms) = timed {
-            val shortIds = pruned
-              .select(col("vec_id"), round(model.pq.adcScore(qvec), 6).as("adc_score"))
-              .orderBy(desc("adc_score"), col("vec_id")).limit(shortlistN)
-              .select("vec_id").collect().map(_.getLong(0))
-            rc.scoreIds(qvec, shortIds, k, lp)
-          }
-          (rows.map(_._1), stats(ms, lists, rows.lastOption.map(_._2)))
-        case None => search(emb, qvec, pred, k, allowed)
+      serve(qvec, pred, k, CodeTier.ramRefine(ram, spec))
+    private def serve(qvec: Array[Float], pred: Option[org.apache.spark.sql.Column], k: Int,
+                      rr: CodeTier.RamRefine): (Seq[Long], Stats) = {
+      val ((rows, st), ms) = timed {
+        val (scan, st) = probe(qvec)
+        (CodeTier.serve(scan, corpus, qvec, k, width, pred, rr), st)
       }
+      (rows.map(_._1), st.copy(latencyMs = ms, kthAtStop = rows.lastOption.map(_._2)))
+    }
   }
 
-  /** Residual IVFPQ backend (the true FAISS IndexIVFPQ encoding): same
-    * partition-pruned scan/shortlist/refine shape as IvfPqBackend, but
-    * the ADC column scores residual codes — one query-only LUT plus the
-    * per-list ⟨q,c_l⟩ bias (IvfPqRes doc). Recorded as `ivfpq_res` /
-    * `ivfpq_res:<shortlist>` so results.jsonl separates the encodings. */
-  private class IvfPqResBackend(val name: String, model: IvfPqResModel, nprobeN: Int,
-                                shortlistN: Int, ram: Option[RamCorpus])
-      extends Backend {
-    private def stats(ms: Double, lists: Seq[Int], kth: Option[Double]): Stats = {
-      val scanned = lists.map(model.listSizes.getOrElse(_, 0L)).sum
-      Stats(ms, scanned, Some(lists.length), Some(nprobeN), kth, None,
-        Some(s"ivfpq residual-encoded m=${model.m} k=${model.kCodes} shortlist=$shortlistN"))
-    }
-    def search(emb: DataFrame, qvec: Array[Float], pred: Option[org.apache.spark.sql.Column],
-               k: Int, allowed: Long): (Seq[Long], Stats) = {
-      val lists = model.ivf.probes(qvec, nprobeN)
-      val (rows, ms) = timed {
-        val short = model.scoredShortlist(qvec, nprobeN, shortlistN)
-        val refined = model.corpus.join(broadcast(short.select("vec_id")), "vec_id")
-        VectorSearch.topK(refined, qvec, k, pred).collect()
-      }
-      (rows.map(_.getLong(0)).toSeq,
-        stats(ms, lists, rows.lastOption.map(_.getDouble(1))))
-    }
-    override def search(emb: DataFrame, qvec: Array[Float], spec: FilterDsl.Spec,
-                        pred: Option[org.apache.spark.sql.Column],
-                        k: Int, allowed: Long): (Seq[Long], Stats) =
-      ram.flatMap(rc => RamCorpus.labelPredicate(spec).map((rc, _))) match {
-        case Some((rc, lp)) =>
-          val lists = model.ivf.probes(qvec, nprobeN)
-          val (rows, ms) = timed {
-            val shortIds = model.scoredShortlist(qvec, nprobeN, shortlistN)
-              .select("vec_id").collect().map(_.getLong(0))
-            rc.scoreIds(qvec, shortIds, k, lp)
-          }
-          (rows.map(_._1), stats(ms, lists, rows.lastOption.map(_._2)))
-        case None => search(emb, qvec, pred, k, allowed)
-      }
-  }
+  /** A flat code table's stats: scored_vectors = the FULL code-table row
+    * count (`codeCount`, known at registry time — codes are 1:1 with the
+    * corpus): the scan reads every code regardless of the filter, and
+    * recording the shortlist size instead made pq look ~N/shortlist
+    * cheaper than its real scan. */
+  private def flatStats(codeCount: Long, note: String): Stats =
+    Stats(0, codeCount, None, None, None, None, Some(note))
 
-  /** SQ8 backend: asymmetric scan of the 1-byte-per-dim code table →
-    * shortlist → exact refine. The 4×-compression near-exact member of
-    * the recorded family set, between `exact` and `pq` on the ladder. */
-  private class SqBackend(val name: String, model: SqModel, shortlistN: Int,
-                          codeCount: Long, ram: Option[RamCorpus]) extends Backend {
-    private def note = s"sq8 dim=${model.dim} shortlist=$shortlistN"
-    def search(emb: DataFrame, qvec: Array[Float], pred: Option[org.apache.spark.sql.Column],
-               k: Int, allowed: Long): (Seq[Long], Stats) = {
-      val (rows, ms) = timed {
-        val short = model.codes
-          .select(col("vec_id"), round(model.adcScore(qvec), 6).as("adc_score"))
-          .orderBy(desc("adc_score"), col("vec_id")).limit(shortlistN)
-        val refined = model.corpus.join(broadcast(short.select("vec_id")), "vec_id")
-        VectorSearch.topK(refined, qvec, k, pred).collect()
-      }
-      (rows.map(_.getLong(0)).toSeq,
-        Stats(ms, codeCount, None, None, rows.lastOption.map(_.getDouble(1)), None,
-          Some(note)))
-    }
-    /** RAM serving tier (PqBackend doc): ADC TakeOrdered + pinned-block
-      * refine of the shortlist ids — never a corpus DataFrame re-scan. */
-    override def search(emb: DataFrame, qvec: Array[Float], spec: FilterDsl.Spec,
-                        pred: Option[org.apache.spark.sql.Column],
-                        k: Int, allowed: Long): (Seq[Long], Stats) =
-      ram.flatMap(rc => RamCorpus.labelPredicate(spec).map((rc, _))) match {
-        case Some((rc, lp)) =>
-          val (rows, ms) = timed {
-            val shortIds = model.codes
-              .select(col("vec_id"), round(model.adcScore(qvec), 6).as("adc_score"))
-              .orderBy(desc("adc_score"), col("vec_id")).limit(shortlistN)
-              .select("vec_id").collect().map(_.getLong(0))
-            rc.scoreIds(qvec, shortIds, k, lp)
-          }
-          (rows.map(_._1),
-            Stats(ms, codeCount, None, None, rows.lastOption.map(_._2), None,
-              Some(note)))
-        case None => search(emb, qvec, pred, k, allowed)
-      }
-  }
-
-  /** BQ backend: Hamming scan of the sign-bit code table → shortlist →
-    * exact refine. The training-free 32×-compression member — the
-    * cheapest first-pass filter on the ladder (Bq doc). */
-  private class BqBackend(val name: String, model: BqModel, shortlistN: Int,
-                          codeCount: Long, ram: Option[RamCorpus]) extends Backend {
-    private def note = s"bq sign-bit shortlist=$shortlistN"
-    private def shortlist(qvec: Array[Float]) = model.codes
-      .select(col("vec_id"),
-        graft.functions.VectorFunctions
-          .bqHamming(col("bq_codes"), model.encodeQuery(qvec)).as("hamming"))
-      .orderBy(col("hamming"), col("vec_id")).limit(shortlistN)
-    def search(emb: DataFrame, qvec: Array[Float], pred: Option[org.apache.spark.sql.Column],
-               k: Int, allowed: Long): (Seq[Long], Stats) = {
-      val (rows, ms) = timed {
-        val refined = model.corpus
-          .join(broadcast(shortlist(qvec).select("vec_id")), "vec_id")
-        VectorSearch.topK(refined, qvec, k, pred).collect()
-      }
-      (rows.map(_.getLong(0)).toSeq,
-        Stats(ms, codeCount, None, None, rows.lastOption.map(_.getDouble(1)), None,
-          Some(note)))
-    }
-    /** RAM serving tier (SqBackend doc): Hamming TakeOrdered + pinned-block
-      * refine of the shortlist ids. */
-    override def search(emb: DataFrame, qvec: Array[Float], spec: FilterDsl.Spec,
-                        pred: Option[org.apache.spark.sql.Column],
-                        k: Int, allowed: Long): (Seq[Long], Stats) =
-      ram.flatMap(rc => RamCorpus.labelPredicate(spec).map((rc, _))) match {
-        case Some((rc, lp)) =>
-          val (rows, ms) = timed {
-            val shortIds = shortlist(qvec).select("vec_id").collect().map(_.getLong(0))
-            rc.scoreIds(qvec, shortIds, k, lp)
-          }
-          (rows.map(_._1),
-            Stats(ms, codeCount, None, None, rows.lastOption.map(_._2), None,
-              Some(note)))
-        case None => search(emb, qvec, pred, k, allowed)
-      }
+  /** A probed tier's scan of one query and its stats: the probe volume
+    * comes from the index metadata (list sizes collected once per model,
+    * the centroid discipline) — a per-query count() job would re-scan the
+    * probed partitions and double the serving path's probe I/O at scale. */
+  private def probedScan(model: IvfCodes, nprobeN: Int, note: String)
+                        (qvec: Array[Float]): (CodeTier.Scan, Stats) = {
+    val lists = model.ivf.probes(qvec, nprobeN)
+    (model.scan(qvec, lists), Stats(0, lists.map(model.listSizes.getOrElse(_, 0L)).sum,
+      Some(lists.length), Some(nprobeN), None, None, Some(note)))
   }
 
   /** RAM serving tier for exact/pre_filter: scores the pinned flat blocks
@@ -448,8 +274,9 @@ object RunHarness {
     * axes, both monotone by construction (VectorSearchSpec sweeps): the
     * multiprobe hamming `radius` (0/1/2 — nested probe sets) and the
     * table count (prefix-nested plane seeds; classic LSH amplification,
-    * recall ≈ 1−(1−p)^T). Together they play ef_search's role. */
-  /** The LSH index table: corpus rows + one row-local signature column
+    * recall ≈ 1−(1−p)^T). Together they play ef_search's role.
+    *
+    * The LSH index table: corpus rows + one row-local signature column
     * per plane table. Signatures do not depend on the query, so
     * recomputing them per search paid a full corpus hash pass × |queries|
     * — the signature table is the LSH INDEX (what a production store
@@ -546,36 +373,38 @@ object RunHarness {
           case None => Ivf.auto(emb).getOrElse(Ivf.build(emb, Ivf.pickNlist(total)))
         }
         new IvfPostFilterBackend(model, nprobe, ladder, maxLadderSteps)
-      // "pq" / "pq:<shortlist>" — the compressed tier's recall dial rides
-      // in the method name (the lsh:<radius>x<tables> convention), so
-      // results.jsonl rows at different shortlist widths are distinguishable
+      // "pq" / "pq:<shortlist>" (and sq, bq, ivfpq_res alike) — the
+      // compressed tier's recall dial rides in the method name (the
+      // lsh:<radius>x<tables> convention), so results.jsonl rows at
+      // different shortlist widths are distinguishable. Codes are 1:1 with
+      // corpus rows, so the caller-known total IS a flat tier's scan volume
       case p if p == "pq" || p.startsWith("pq:") =>
-        val sl = if (p == "pq") 100 else p.stripPrefix("pq:").toInt
+        val sl = dial(p, "pq", 100)
         val model = corpusKey match {
           case Some(key) => Pq.cached(emb.sparkSession, emb, key)
           case None => Pq.build(emb)
         }
-        // codes are 1:1 with corpus rows, so the caller-known total IS the
-        // full ADC scan volume — no count job
-        new PqBackend(p, model, shortlistN = sl, codeCount = total, ram = ram)
-      // "sq" / "sq:<shortlist>" — same dial grammar as pq
+        val st = flatStats(total, s"pq adc m=${model.m} k=${model.kCodes} shortlist=$sl")
+        new CodeTierBackend(p, model.corpus, sl, ram)(q => (model.scan(q), st))
       case p if p == "sq" || p.startsWith("sq:") =>
-        val sl = if (p == "sq") 100 else p.stripPrefix("sq:").toInt
+        val sl = dial(p, "sq", 100)
         val model = corpusKey match {
           case Some(key) => Sq.cached(emb.sparkSession, emb, key)
           case None => Sq.build(emb)
         }
-        new SqBackend(p, model, shortlistN = sl, codeCount = total, ram = ram)
-      // "bq" / "bq:<shortlist>" — same dial grammar; training-free tier
+        val st = flatStats(total, s"sq8 dim=${model.dim} shortlist=$sl")
+        new CodeTierBackend(p, model.corpus, sl, ram)(q => (model.scan(q), st))
+      // training-free tier
       case p if p == "bq" || p.startsWith("bq:") =>
-        val sl = if (p == "bq") 100 else p.stripPrefix("bq:").toInt
+        val sl = dial(p, "bq", 100)
         val model = corpusKey match {
           case Some(key) => Bq.cached(emb.sparkSession, emb, key)
           case None => Bq.build(emb)
         }
-        new BqBackend(p, model, shortlistN = sl, codeCount = total, ram = ram)
-      // residual-encoded composition, same dial grammar — matched BEFORE
-      // the plain "ivfpq" prefix rule
+        val st = flatStats(total, s"bq sign-bit shortlist=$sl")
+        new CodeTierBackend(p, model.corpus, sl, ram)(q => (model.scan(q), st))
+      // residual-encoded composition (the true FAISS IndexIVFPQ encoding,
+      // IvfPqRes doc) — matched BEFORE the plain "ivfpq" prefix rule
       case p if p == "ivfpq_res" || p.startsWith("ivfpq_res:") =>
         val model = corpusKey match {
           case Some(key) => IvfPqRes.cached(emb, key,
@@ -583,15 +412,18 @@ object RunHarness {
           case None => IvfPqRes.build(
             Ivf.auto(emb).getOrElse(Ivf.build(emb, Ivf.pickNlist(total))))
         }
-        val sl = if (p == "ivfpq_res") 100 else p.stripPrefix("ivfpq_res:").toInt
-        new IvfPqResBackend(p, model, nprobe, shortlistN = sl, ram = ram)
+        val sl = dial(p, "ivfpq_res", 100)
+        new CodeTierBackend(p, model.corpus, sl, ram)(probedScan(model, nprobe,
+          s"ivfpq residual-encoded m=${model.m} k=${model.kCodes} shortlist=$sl"))
+      // the full FAISS-family scale tier, recorded alongside its halves
+      // (ivf = pruned flat scan, pq = full compressed scan)
       case p if p == "ivfpq" || p.startsWith("ivfpq:") =>
         val model = ivfPqModelFor(emb, total, corpusKey)
         // bare "ivfpq" serves the index's auto-tuned default (meta.json);
         // "ivfpq:N" dials it explicitly
-        val sl = if (p == "ivfpq") model.defaultShortlist
-                 else p.stripPrefix("ivfpq:").toInt
-        new IvfPqBackend(p, model, nprobe, shortlistN = sl, ram = ram)
+        val sl = dial(p, "ivfpq", model.defaultShortlist)
+        new CodeTierBackend(p, model.pq.corpus, sl, ram)(probedScan(model, nprobe,
+          s"ivfpq adc m=${model.pq.m} k=${model.pq.kCodes} shortlist=$sl"))
       case "ivf" =>
         val model = corpusKey match {
           case Some(k) => Ivf.cached(emb.sparkSession, emb, k, knownTotal = Some(total))
@@ -619,6 +451,11 @@ object RunHarness {
       case "random" => new RandomBackend(0L)
       case other => throw new IllegalArgumentException(s"Unknown backend: $other")
     }
+
+  /** The shortlist dial of a code-tier method name: `base` alone is
+    * `default`, `base:<n>` dials n. */
+  private def dial(name: String, base: String, default: => Int): Int =
+    if (name == base) default else name.stripPrefix(s"$base:").toInt
 
   // ---- fused dial ladders ------------------------------------------------
   //
@@ -659,10 +496,10 @@ object RunHarness {
   }
 
   /** Fused `ivfpq:<sl>` ladder: one partition-pruned ADC TakeOrdered at
-    * the widest shortlist; each dial refines its prefix (RAM pinned-block
-    * scoring when the filter is label-local, else ONE exact refine of the
-    * widest shortlist with per-dial prefix ranking over the collected
-    * bounded rows). */
+    * the widest shortlist ([[CodeTier.shortlistIds]], collected in rank
+    * order); each dial ranks its prefix over ONE exact refine of the
+    * widest shortlist ([[CodeTier.scoreAll]] — pinned-block scoring when
+    * the filter is label-local, else the broadcast id join). */
   private class IvfPqLadderGroup(dials: Seq[(String, Int)], model: IvfPqModel,
                                  nprobeN: Int, ram: Option[RamCorpus])
       extends GroupBackend {
@@ -671,51 +508,19 @@ object RunHarness {
     def searchAll(emb: DataFrame, qvec: Array[Float], spec: FilterDsl.Spec,
                   pred: Option[org.apache.spark.sql.Column],
                   k: Int, allowed: Long): Seq[(String, (Seq[Long], Stats))] = {
-      val lists = model.ivf.probes(qvec, nprobeN)
-      val scanned = lists.map(model.listSizes.getOrElse(_, 0L)).sum
-      val pruned = model.coded.where(col("list_id").isin(lists: _*))
-      def stats(ms: Double, sl: Int, kth: Option[Double]): Stats =
-        Stats(ms, scanned, Some(lists.length), Some(nprobeN), kth, None,
-          Some(s"ivfpq adc m=${model.pq.m} k=${model.pq.kCodes} shortlist=$sl (fused ladder)"))
-      // the widest shortlist, collected IN ADC ORDER (TakeOrderedAndProject
-      // preserves the sort): narrower dials take prefixes
-      val (shortIds, msShort) = timed {
-        pruned.select(col("vec_id"), round(model.pq.adcScore(qvec), 6).as("adc_score"))
-          .orderBy(desc("adc_score"), col("vec_id")).limit(maxSl)
-          .select("vec_id").collect().map(_.getLong(0))
-      }
-      // per-dial prefix rank over a refined score map — ONE definition so
-      // the RAM and Catalyst tiers can never diverge on the
+      val (scan, st) = probedScan(model, nprobeN, "")(qvec)
+      val (shortIds, msShort) = timed(CodeTier.shortlistIds(scan, maxSl))
+      val (scored, msRefine) = timed(CodeTier.scoreAll(
+        model.pq.corpus, shortIds, qvec, pred, CodeTier.ramRefine(ram, spec)))
+      // per-dial prefix rank over the refined score map, on the shared
       // (score desc, vec_id) contract
-      def rankDials(scored: Map[Long, Double],
-                    msRefine: Double): Seq[(String, (Seq[Long], Stats))] =
-        dials.map { case (nm, sl) =>
-          val rows = shortIds.take(sl).iterator
-            .flatMap(id => scored.get(id).map(id -> _)).toArray
-            .sortBy { case (id, sc) => (-sc, id) }.take(k).toSeq
-          nm -> (rows.map(_._1),
-            stats(msShort + msRefine, sl, rows.lastOption.map(_._2)))
-        }
-      ram.flatMap(rc => RamCorpus.labelPredicate(spec).map((rc, _))) match {
-        case Some((rc, lp)) =>
-          // ONE pinned-block refine of the widest shortlist (k = |ids|
-          // returns every scored pair); each dial ranks its prefix
-          val (scoredAll, msRefine) = timed(
-            rc.scoreIds(qvec, shortIds, shortIds.length, lp).toMap)
-          rankDials(scoredAll, msRefine)
-        case None =>
-          // one exact refine of the widest shortlist (bounded: ≤ maxSl
-          // rows collected); each dial ranks its prefix
-          val (scored, msRefine) = timed {
-            import emb.sparkSession.implicits._
-            val idsDf = shortIds.toSeq.toDF("vec_id")
-            val refined = model.pq.corpus.join(broadcast(idsDf), "vec_id")
-            val base = VectorSearch.withScore(refined, qvec)
-            pred.map(base.where).getOrElse(base)
-              .select(col("vec_id"), col("score")).collect()
-              .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-          }
-          rankDials(scored, msRefine)
+      dials.map { case (nm, sl) =>
+        val rows = shortIds.take(sl).iterator
+          .flatMap(id => scored.get(id).map(id -> _)).toArray
+          .sortBy { case (id, sc) => (-sc, id) }.take(k).toSeq
+        nm -> (rows.map(_._1), st.copy(latencyMs = msShort + msRefine,
+          kthAtStop = rows.lastOption.map(_._2), notes = Some(
+            s"ivfpq adc m=${model.pq.m} k=${model.pq.kCodes} shortlist=$sl (fused ladder)")))
       }
     }
   }
@@ -724,11 +529,10 @@ object RunHarness {
     * the exact scores are computed in ONE pass over the union candidate
     * set (per-dial membership is a row-local boolean over the shared
     * signature columns); the materialized candidates are narrow
-    * (vec_id, score, flags), so per-dial counts ride one aggregate and
-    * each dial's top-K is a cheap TakeOrdered over them. */
-  /** The union candidate set is BOUNDED by the bucket geometry (pickBits
-    * keeps ~64 rows/bucket at any corpus size, and the probe-set size is
-    * a function of bits/radius/tables only), so ONE collect of the narrow
+    * (vec_id, score, flags). The union candidate set is BOUNDED by the
+    * bucket geometry (pickBits keeps ~64 rows/bucket at any corpus size,
+    * and the probe-set size is a function of bits/radius/tables only), so
+    * ONE collect of the narrow
     * (vec_id, score, flags) rows replaces the r15 persist + counts
     * aggregate + per-dial TakeOrdered chain — 1 job per query instead of
     * 2+|dials|, identical rows (same counts, same (score desc, vec_id)
@@ -805,8 +609,9 @@ object RunHarness {
     * IvfPqLadderGroup, ≥2 `lsh[:…]` dials into one LshLadderGroup (they
     * share bits and prefix-seeded plane tables by construction); everything
     * else stays a single backend. Group order follows each group's first
-    * member, and runMany re-orders per-query rows to the caller's list. */
-  /** The ONE fusion decision, consumed by BOTH [[buildGroups]] (which
+    * member, and runMany re-orders per-query rows to the caller's list.
+    *
+    * This is the ONE fusion decision, consumed by BOTH [[buildGroups]] (which
     * materializes the fused ladder groups) and [[fusedKeys]] (which
     * renders the artifact annotation) — divergence between the grouping
     * and its self-description is structurally impossible, not just
@@ -1029,6 +834,16 @@ object RunHarness {
       (m, lat.sum / lat.length, p50, rs.map(_.recallAtK).sum / rs.length)
     }
 
+  /** The CLI's session: the shared local config ([[graft.tools.Sessions]]),
+    * graft's extensions included, so the probed reads pass their lists by
+    * reference and `TopKPerKey` plans natively. */
+  private[graft] def cliSession(): SparkSession = {
+    val spark = graft.tools.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** CLI twin of the reference's `python -m src.harness.run`.
     * `--queries q.parquet` runs a persisted query table (the reference's
     * qid/qtext/filters/K shape, Ingest.readQueries) instead of the
@@ -1048,14 +863,7 @@ object RunHarness {
     val encoder: QueryEncoder = opts.get("--model-dir")
       .map(dir => new graft.encode.MiniLm.Encoder(graft.encode.MiniLm.load(dir)): QueryEncoder)
       .getOrElse(QueryEncoder.seeded())
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = cliSession()
     val base = queriesPath
       .map(p => graft.sources.Ingest.readQueries(spark, p))
       .getOrElse(QuerySet.default)

@@ -38,16 +38,15 @@ final case class BqModel(codes: DataFrame, corpus: DataFrame) {
     out
   }
 
-  /** Top-K via Hamming shortlist + exact refine: the shortlist TakeOrdered
-    * reads only (vec_id, bq_codes) — ascending distance, vec_id tiebreak —
-    * then the broadcast id join scores the survivors exactly. */
-  def search(qvec: Array[Float], k: Int, shortlist: Int = 100): DataFrame = {
-    val short = codes
-      .select(col("vec_id"), bqHamming(col("bq_codes"), encodeQuery(qvec)).as("hamming"))
-      .orderBy(col("hamming"), col("vec_id")).limit(shortlist)
-    VectorSearch.topK(
-      corpus.join(broadcast(short.select("vec_id")), "vec_id"), qvec, k)
-  }
+  /** One query's scan of the whole code table ([[CodeTier]]), scored
+    * −hamming: the shared rule's descending order is exactly ascending
+    * Hamming distance, vec_id tiebreak. */
+  def scan(qvec: Array[Float]): CodeTier.Scan =
+    CodeTier.Scan(codes, -bqHamming(col("bq_codes"), encodeQuery(qvec)))
+
+  /** Top-K via Hamming shortlist + exact refine ([[CodeTier.search]]). */
+  def search(qvec: Array[Float], k: Int, shortlist: Int = 100): DataFrame =
+    CodeTier.search(scan(qvec), corpus, qvec, k, shortlist)
 
   /** Incremental add: stateless quantizer, so append is ONLY an encode +
     * union — the no-retraining property is exact here, not a drift

@@ -1,7 +1,59 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+/** An IVF-partitioned code table (vec_id, list_id, pq_codes) over a
+  * coarse quantizer — what both composed tiers, [[IvfPqModel]] and the
+  * residual [[IvfPqResModel]], serve from. `pq` is the fine quantizer
+  * whose ADC table scores the codes; a tier adds only its `score` over
+  * the probed lists (CodeTier doc). */
+trait IvfCodes {
+  def ivf: IvfModel
+  def pq: PqModel
+  def coded: DataFrame
+
+  /** The score of `lists`' code rows against `qvec`. */
+  protected def score(qvec: Array[Float], lists: Seq[Int]): Column
+
+  /** Columns [[stats]] appends after the PQ geometry. */
+  protected def statsExtra: Seq[Column] = Nil
+
+  /** One query's scan of the probed `lists` ([[CodeTier]]). */
+  def scan(qvec: Array[Float], lists: Seq[Int]): CodeTier.Scan =
+    CodeTier.Scan(coded.where(col("list_id").isin(lists: _*)), score(qvec, lists))
+
+  /** [[scan]] of the `nprobe` lists nearest `qvec`. */
+  def scan(qvec: Array[Float], nprobe: Int): CodeTier.Scan =
+    scan(qvec, ivf.probes(qvec, nprobe))
+
+  /** ADC-only top-K within the probed lists (no refine) — the recall
+    * floor the refine pass lifts at equal nprobe (spec contract). */
+  def searchNoRefine(qvec: Array[Float], nprobe: Int, k: Int): DataFrame =
+    CodeTier.noRefine(scan(qvec, nprobe), k)
+
+  /** list_id → row count, collected ONCE per model (O(nlist) rows — the
+    * centroid discipline): serving-path stats (how many codes a probe
+    * scans) come from this map as driver math, never from a per-query
+    * count() job re-scanning the probed partitions. */
+  lazy val listSizes: Map[Int, Long] =
+    coded.groupBy(col("list_id").cast("int").as("list_id"))
+      .agg(count(lit(1)).as("sz"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+
+  /** Composed-index health: list-size skew (what kills nprobe recall)
+    * over the composed table, with the PQ geometry alongside; per-subspace
+    * code usage stays Pq.stats's job. */
+  def stats: DataFrame =
+    coded.groupBy(col("list_id")).agg(count(lit(1)).as("sz")).agg(
+      count(lit(1)).as("nonempty_lists"),
+      Seq(lit(ivf.centroids.length).as("nlist"),
+        min(col("sz")).as("min_sz"),
+        max(col("sz")).as("max_sz"),
+        sum(col("sz")).as("n_vectors"),
+        lit(pq.m).as("m"),
+        lit(pq.kCodes).as("k")) ++ statsExtra: _*)
+}
 
 /** IVF×PQ composition — the FAISS IndexIVFPQ slot of the index family the
   * reference's loader builds toward (reference src/dataio/loaders.py:143-151
@@ -25,7 +77,7 @@ import org.apache.spark.sql.functions._
   * corpus scan).
   */
 final case class IvfPqModel(ivf: IvfModel, pq: PqModel, coded: DataFrame,
-                            tuned: Option[(Int, Double)] = None) {
+                            tuned: Option[(Int, Double)] = None) extends IvfCodes {
 
   /** The shortlist used when the caller doesn't dial one: the build-time
     * auto-tuned width (IvfPq.tuneShortlist) when the index carries it,
@@ -35,39 +87,14 @@ final case class IvfPqModel(ivf: IvfModel, pq: PqModel, coded: DataFrame,
     * does. */
   def defaultShortlist: Int = tuned.map(_._1).getOrElse(100)
 
-  /** list_id → row count, collected ONCE per model (O(nlist) rows — the
-    * centroid discipline): serving-path stats (how many codes a probe
-    * scans) come from this map as driver math, never from a per-query
-    * count() job re-scanning the probed partitions. */
-  lazy val listSizes: Map[Int, Long] =
-    coded.groupBy(col("list_id").cast("int").as("list_id"))
-      .agg(count(lit(1)).as("sz"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+  protected def score(qvec: Array[Float], lists: Seq[Int]): Column = pq.adcScore(qvec)
 
-  /** Top-K: IVF-pruned ADC shortlist + exact refine. The shortlist ranks
-    * on round(·,6) with vec_id tiebreak (repo-wide ranking convention —
-    * see VectorSearch doc), so results are deterministic per index. */
+  /** Top-K: IVF-pruned ADC shortlist + exact refine ([[CodeTier.search]]);
+    * deterministic per index (the shared ranking rule). */
   def search(qvec: Array[Float], nprobe: Int, k: Int,
-             shortlist: Int = 0): DataFrame = {
-    val width = if (shortlist > 0) shortlist else defaultShortlist
-    val short = shortlistDf(qvec, nprobe, width)
-    VectorSearch.topK(
-      pq.corpus.join(broadcast(short.select("vec_id")), "vec_id"), qvec, k)
-  }
-
-  /** ADC-only top-K within the probed lists (no refine) — the recall
-    * floor the refine pass lifts at equal nprobe (spec contract). */
-  def searchNoRefine(qvec: Array[Float], nprobe: Int, k: Int): DataFrame =
-    shortlistDf(qvec, nprobe, k)
-      .select(col("vec_id"), col("adc_score").as("score"))
-
-  private def shortlistDf(qvec: Array[Float], nprobe: Int, n: Int): DataFrame = {
-    val lists = ivf.probes(qvec, nprobe)
-    coded.where(col("list_id").isin(lists: _*))
-      .select(col("vec_id"), round(pq.adcScore(qvec), 6).as("adc_score"))
-      .orderBy(desc("adc_score"), col("vec_id"))
-      .limit(n)
-  }
+             shortlist: Int = 0): DataFrame =
+    CodeTier.search(scan(qvec, nprobe), pq.corpus, qvec, k,
+      if (shortlist > 0) shortlist else defaultShortlist)
 
   /** Batched top-K on the compressed tier — the 100 TB batch-serving
     * shape (Ivf.searchMany's twin over CODES): every query answered from
@@ -82,7 +109,7 @@ final case class IvfPqModel(ivf: IvfModel, pq: PqModel, coded: DataFrame,
   def searchMany(queries: Seq[(Long, Array[Float])], nprobe: Int, k: Int,
                  shortlist: Int = 0): DataFrame = {
     val qArr = queries.toArray
-    IvfPq.searchManyCodes(coded, pq.corpus, qArr,
+    CodeTier.searchMany(coded, pq.corpus, qArr,
       allow = qArr.map { case (_, v) => ivf.probes(v, nprobe).toSet },
       luts = qArr.map { case (_, v) => pq.lut(v) }, biases = null,
       width = if (shortlist > 0) shortlist else defaultShortlist, k = k)
@@ -139,8 +166,7 @@ final case class IvfPqModel(ivf: IvfModel, pq: PqModel, coded: DataFrame,
       .select("embedding").collect().map(_.getSeq[Float](0).toArray)
     require(qvecs.nonEmpty, "empty corpus: nothing to tune against")
     val ranked = qvecs.map { q =>
-      val adc = shortlistDf(q, nprobe, rungs.max)
-        .select("vec_id").collect().map(_.getLong(0))
+      val adc = CodeTier.shortlistIds(scan(q, nprobe), rungs.max)
       val exact = VectorSearch.topK(pq.corpus, q, k)
         .select("vec_id").collect().map(_.getLong(0)).toSet
       (adc, exact)
@@ -152,80 +178,9 @@ final case class IvfPqModel(ivf: IvfModel, pq: PqModel, coded: DataFrame,
     }
     curve.find(_._2 >= floor).getOrElse(curve.last)
   }
-
-  /** Composed-index health: list-size skew (what kills nprobe recall)
-    * over the composed table, with the PQ geometry alongside; per-subspace
-    * code usage stays Pq.stats's job. */
-  def stats: DataFrame = {
-    val sizes = coded.groupBy(col("list_id")).agg(count(lit(1)).as("sz"))
-    sizes.agg(
-      count(lit(1)).as("nonempty_lists"),
-      lit(ivf.centroids.length).as("nlist"),
-      min(col("sz")).as("min_sz"),
-      max(col("sz")).as("max_sz"),
-      sum(col("sz")).as("n_vectors"),
-      lit(pq.m).as("m"),
-      lit(pq.kCodes).as("k"))
-  }
 }
 
 object IvfPq {
-
-  /** The batched scan + refine both composed tiers share: ONE scan of
-    * `coded` pruned to the union of the probed lists `allow`; per query a
-    * [[TopK]] of `width` over biases(q)(list) + Σ lut[s][code_s] (`biases`
-    * null = no bias); then ONE exact refine of the ≤|Q|·width survivors —
-    * a broadcast pair join against `corpus` with per-qid query vectors —
-    * ranked per qid. */
-  private[search] def searchManyCodes(
-      coded: DataFrame, corpus: DataFrame, qArr: Array[(Long, Array[Float])],
-      allow: Array[Set[Int]], luts: Array[Array[Array[Double]]],
-      biases: Array[Map[Int, Double]], width: Int, k: Int): DataFrame = {
-    TopK.requireK(width, "shortlist")
-    val spark = coded.sparkSession
-    import spark.implicits._
-    val union = allow.flatten.distinct.toSeq
-    val qB = spark.sparkContext.broadcast((qArr.map(_._1), allow, luts, biases))
-    val partial = coded.where(col("list_id").isin(union: _*))
-      .select(col("vec_id").cast("long"), col("list_id").cast("int"), col("pq_codes"))
-      .as[(Long, Int, Array[Int])]
-      .mapPartitions { it =>
-        val (qids, allowSets, ls, bs) = qB.value
-        val tops = Array.fill(qids.length)(new TopK(width))
-        it.foreach { case (id, listId, codes) =>
-          var q = 0
-          while (q < qids.length) {
-            if (allowSets(q).contains(listId)) {
-              val lut = ls(q)
-              var acc = if (bs == null) 0.0 else bs(q)(listId)
-              var s = 0
-              while (s < codes.length) { acc += lut(s)(codes(s)); s += 1 }
-              tops(q).offer(acc, id)
-            }
-            q += 1
-          }
-        }
-        TopK.rows(qids, tops)
-      }
-      .toDF("qid", "vec_id", "adc_score")
-    val shortPairs = org.apache.spark.sql.graft.TopKPerKey(
-      partial, Seq(col("qid")), Seq(desc("adc_score"), col("vec_id")), width)
-    val qDf = qArr.toSeq.map { case (qid, v) => (qid, v.toSeq) }.toDF("qid", "qvec")
-    val refined = corpus
-      .join(broadcast(shortPairs.select("qid", "vec_id")), "vec_id")
-      .join(broadcast(qDf), "qid")
-      .withColumn("score",
-        round(graft.functions.VectorFunctions.dot(
-          col("embedding"), col("qvec").cast("array<float>")), 6))
-    val top = org.apache.spark.sql.graft.TopKPerKey(
-      refined.select(col("qid"), col("vec_id"), col("score")),
-      Seq(col("qid")), Seq(desc("score"), col("vec_id")), k)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(desc("score"), col("vec_id"))
-    top.withColumn("rank", row_number().over(w))
-      .select(col("qid"), col("rank"), col("vec_id"), col("score"))
-      .orderBy(col("qid"), col("rank"))
-  }
 
   /** Compose from trained halves: ONE projection over the ivf-indexed
     * table derives the code column row-locally (vectors are read once,

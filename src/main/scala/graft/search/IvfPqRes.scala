@@ -24,56 +24,28 @@ import org.apache.spark.sql.functions._
   */
 final case class IvfPqResModel(ivf: IvfModel, m: Int, dsub: Int, kCodes: Int,
                                codebook: Array[Array[Array[Float]]],
-                               coded: DataFrame, corpus: DataFrame) {
+                               coded: DataFrame, corpus: DataFrame) extends IvfCodes {
 
-  /** ADC lookup table over the RAW query (residual decomposition keeps
-    * the table query-only — see class doc). */
-  private def lut(qvec: Array[Float]): Array[Array[Double]] = Array.tabulate(m) { s =>
-    Array.tabulate(kCodes) { c =>
-      val cent = codebook(s)(c)
-      var acc = 0.0; var i = 0
-      while (i < dsub) { acc += qvec(s * dsub + i).toDouble * cent(i).toDouble; i += 1 }
-      acc
-    }
-  }
+  /** The residual codebook as a PQ quantizer over the code table: its ADC
+    * table is over the RAW query (the decomposition keeps it query-only —
+    * see class doc). */
+  lazy val pq: PqModel = PqModel(m, dsub, kCodes, codebook, coded, corpus)
 
-  /** ⟨q, c_l⟩ for one list — the per-list scalar the decomposition adds. */
-  private def listBias(qvec: Array[Float], list: Int): Double = {
-    val c = ivf.centroids(list)
-    var acc = 0.0; var i = 0
-    while (i < c.length) { acc += qvec(i).toDouble * c(i); i += 1 }
-    acc
-  }
-
-  /** The probed-lists ADC shortlist (vec_id, adc_score) — public so the
-    * harness backend can time the identical scan the search path uses. */
-  def scoredShortlist(qvec: Array[Float], nprobe: Int, n: Int): DataFrame =
-    shortlistDf(qvec, nprobe, n)
-
-  private def shortlistDf(qvec: Array[Float], nprobe: Int, n: Int): DataFrame = {
-    val lists = ivf.probes(qvec, nprobe)
-    val biasCol: Column = element_at(
-      map(lists.flatMap(l => Seq(lit(l), lit(listBias(qvec, l)))): _*),
+  /** The plain ADC score plus ⟨q, c_l⟩ of the row's list — the per-list
+    * scalar the decomposition adds, attached as a tiny literal map over
+    * the probed lists. */
+  protected def score(qvec: Array[Float], lists: Seq[Int]): Column =
+    pq.adcScore(qvec) + element_at(
+      map(lists.flatMap(l => Seq(lit(l), lit(VecMath.dot(qvec, ivf.centroids(l))))): _*),
       col("list_id").cast("int"))
-    coded.where(col("list_id").isin(lists: _*))
-      .select(col("vec_id"),
-        round(pqAdcScore(col("pq_codes"), lut(qvec)) + biasCol, 6).as("adc_score"))
-      .orderBy(desc("adc_score"), col("vec_id"))
-      .limit(n)
-  }
 
-  /** Top-K: IVF-pruned residual-ADC shortlist + exact refine (keyed fetch
-    * of ≤shortlist vectors — never a second corpus scan). */
+  override protected def statsExtra: Seq[Column] = Seq(lit("residual").as("encoding"))
+
+  /** Top-K: IVF-pruned residual-ADC shortlist + exact refine
+    * ([[CodeTier.search]]). */
   def search(qvec: Array[Float], nprobe: Int, k: Int,
              shortlist: Int = 100): DataFrame =
-    VectorSearch.topK(
-      corpus.join(broadcast(shortlistDf(qvec, nprobe, shortlist).select("vec_id")),
-        "vec_id"), qvec, k)
-
-  /** ADC-only top-K within the probed lists (the refine lifts this). */
-  def searchNoRefine(qvec: Array[Float], nprobe: Int, k: Int): DataFrame =
-    shortlistDf(qvec, nprobe, k)
-      .select(col("vec_id"), col("adc_score").as("score"))
+    CodeTier.search(scan(qvec, nprobe), corpus, qvec, k, shortlist)
 
   /** Batched top-K (IvfPqModel.searchMany's residual twin): one scan
     * pruned to the union of probed list partitions; each query's heap
@@ -86,32 +58,10 @@ final case class IvfPqResModel(ivf: IvfModel, m: Int, dsub: Int, kCodes: Int,
     val qArr = queries.toArray
     val allow = qArr.map { case (_, v) => ivf.probes(v, nprobe).toSet }
     val biases = qArr.zip(allow).map { case ((_, v), lists) =>
-      lists.iterator.map(l => l -> listBias(v, l)).toMap
+      lists.iterator.map(l => l -> VecMath.dot(v, ivf.centroids(l))).toMap
     }
-    IvfPq.searchManyCodes(coded, corpus, qArr, allow, qArr.map { case (_, v) => lut(v) },
+    CodeTier.searchMany(coded, corpus, qArr, allow, qArr.map { case (_, v) => pq.lut(v) },
       biases, shortlist, k)
-  }
-
-  /** list_id → row count, collected ONCE per model (IvfPqModel.listSizes
-    * twin): serving-path probe-volume stats come from this map as driver
-    * math, never from a per-query count() job. */
-  lazy val listSizes: Map[Int, Long] =
-    coded.groupBy(col("list_id").cast("int").as("list_id"))
-      .agg(count(lit(1)).as("sz"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-
-  /** Composed-index health (IvfPqModel.stats shape, residual flavor). */
-  def stats: DataFrame = {
-    val sizes = coded.groupBy(col("list_id")).agg(count(lit(1)).as("sz"))
-    sizes.agg(
-      count(lit(1)).as("nonempty_lists"),
-      lit(ivf.centroids.length).as("nlist"),
-      min(col("sz")).as("min_sz"),
-      max(col("sz")).as("max_sz"),
-      sum(col("sz")).as("n_vectors"),
-      lit(m).as("m"),
-      lit(kCodes).as("k"),
-      lit("residual").as("encoding"))
   }
 }
 

@@ -47,24 +47,16 @@ final case class PqModel(m: Int, dsub: Int, kCodes: Int,
     * subspace per row — 48× per row at 384-d). */
   def adcScore(qvec: Array[Float]): Column = pqAdcScore(col("pq_codes"), lut(qvec))
 
-  /** Top-K via ADC shortlist + exact refine. The shortlist TakeOrdered
-    * reads only (vec_id, pq_codes); the refine joins the ≤`shortlist`-row
-    * id list (broadcast) back to the vector table for exact IP scoring. */
-  def search(qvec: Array[Float], k: Int, shortlist: Int = 100): DataFrame = {
-    // shortlist ranked on round(·,6) + vec_id, the repo-wide convention
-    // (see VectorSearch doc): the boundary can't flip on last-ulp
-    // differences in the LUT sum order
-    val short = codes.select(col("vec_id"), round(adcScore(qvec), 6).as("adc_score"))
-      .orderBy(desc("adc_score"), col("vec_id")).limit(shortlist)
-    VectorSearch.topK(
-      corpus.join(broadcast(short.select("vec_id")), "vec_id"), qvec, k)
-  }
+  /** One query's ADC scan of the whole code table ([[CodeTier]]). */
+  def scan(qvec: Array[Float]): CodeTier.Scan = CodeTier.Scan(codes, adcScore(qvec))
+
+  /** Top-K via ADC shortlist + exact refine ([[CodeTier.search]]). */
+  def search(qvec: Array[Float], k: Int, shortlist: Int = 100): DataFrame =
+    CodeTier.search(scan(qvec), corpus, qvec, k, shortlist)
 
   /** ADC-only top-K (no refine) — the recall floor the refine pass lifts;
     * used by the recall sweep spec. */
-  def searchNoRefine(qvec: Array[Float], k: Int): DataFrame =
-    codes.select(col("vec_id"), round(adcScore(qvec), 6).as("score"))
-      .orderBy(desc("score"), col("vec_id")).limit(k)
+  def searchNoRefine(qvec: Array[Float], k: Int): DataFrame = CodeTier.noRefine(scan(qvec), k)
 
   /** Incremental add: encode the new batch with the EXISTING codebooks
     * (one codegen pass — no retraining) and union both the code table

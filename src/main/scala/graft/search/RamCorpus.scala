@@ -4,6 +4,7 @@ import graft.filters.FilterDsl
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, size}
+import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.storage.StorageLevel
 
 /** RAM-resident flat corpus for serving-latency exact search.
@@ -167,35 +168,25 @@ object RamCorpus {
   def labelPredicate(spec: FilterDsl.Spec): Option[Option[Int => Boolean]] = {
     if (spec.isEmpty) return Some(None)
     if (!spec.preds.forall(_._1 == "label")) return None
-    // value casting MIRRORS FilterDsl.castLit for an integer column:
-    // doubles truncate (Python int() semantics — eq 1.5 matches label 1),
-    // non-finite and non-integer STRINGS are cast failures ("1.5" parses
-    // via toLong and throws), booleans map to 0/1
-    def intVal(v: Any): Option[Long] = v match {
-      case null => None
-      case n: Long => Some(n)
-      case n: Int => Some(n.toLong)
-      case n: Double => if (n.isNaN || n.isInfinite) None else Some(n.toLong)
-      case b: Boolean => Some(if (b) 1L else 0L)
-      case s: String => try Some(s.trim.toLong) catch { case _: Exception => None }
-      case other => try Some(other.toString.trim.toLong) catch { case _: Exception => None }
-    }
+    // the one cast FilterDsl compiles its literals from (out-of-range and
+    // unparsable values are cast failures there too)
+    val cast = (v: Any) => FilterDsl.castIntegral(v, IntegerType)
     val fails: Int => Boolean = _ => false
     val fns: Seq[Option[Int => Boolean]] = spec.preds.flatMap { case (_, ops) =>
       ops.map {
-        case FilterDsl.Eq(v) => Some(intVal(v).fold(fails)(d => l => l.toLong == d))
-        case FilterDsl.Ne(v) => Some(intVal(v).fold(fails)(d => l => l.toLong != d))
-        case FilterDsl.Ge(v) => Some(intVal(v).fold(fails)(d => l => l.toLong >= d))
-        case FilterDsl.Le(v) => Some(intVal(v).fold(fails)(d => l => l.toLong <= d))
-        case FilterDsl.Gt(v) => Some(intVal(v).fold(fails)(d => l => l.toLong > d))
-        case FilterDsl.Lt(v) => Some(intVal(v).fold(fails)(d => l => l.toLong < d))
+        case FilterDsl.Eq(v) => Some(cast(v).fold(fails)(d => l => l.toLong == d))
+        case FilterDsl.Ne(v) => Some(cast(v).fold(fails)(d => l => l.toLong != d))
+        case FilterDsl.Ge(v) => Some(cast(v).fold(fails)(d => l => l.toLong >= d))
+        case FilterDsl.Le(v) => Some(cast(v).fold(fails)(d => l => l.toLong <= d))
+        case FilterDsl.Gt(v) => Some(cast(v).fold(fails)(d => l => l.toLong > d))
+        case FilterDsl.Lt(v) => Some(cast(v).fold(fails)(d => l => l.toLong < d))
         case FilterDsl.Between(lo, hi) =>
-          Some((intVal(lo), intVal(hi)) match {
+          Some((cast(lo), cast(hi)) match {
             case (Some(a), Some(b)) => (l: Int) => l.toLong >= a && l.toLong <= b
             case _ => fails
           })
         case FilterDsl.In(vs) =>
-          val ok = vs.flatMap(intVal) // uncastable values drop, all-fail => false
+          val ok = vs.flatMap(cast) // uncastable values drop, all-fail => false
           Some(if (ok.isEmpty) fails else { val set = ok.toSet; (l: Int) => set(l.toLong) })
         case FilterDsl.Like(substr) =>
           val needle = substr.toLowerCase

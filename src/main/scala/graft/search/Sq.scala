@@ -45,21 +45,16 @@ final case class SqModel(dim: Int, vmin: Array[Float], delta: Array[Float],
     sqAdcScore(col("sq_codes"), w, bias)
   }
 
-  /** Top-K via ADC shortlist + exact refine (the PqModel.search shape):
-    * shortlist TakeOrdered reads only (vec_id, sq_codes); refine joins the
-    * broadcast id list back to the vector table for exact IP scoring. */
-  def search(qvec: Array[Float], k: Int, shortlist: Int = 100): DataFrame = {
-    val short = codes.select(col("vec_id"), round(adcScore(qvec), 6).as("adc_score"))
-      .orderBy(desc("adc_score"), col("vec_id")).limit(shortlist)
-    VectorSearch.topK(
-      corpus.join(broadcast(short.select("vec_id")), "vec_id"), qvec, k)
-  }
+  /** One query's ADC scan of the whole code table ([[CodeTier]]). */
+  def scan(qvec: Array[Float]): CodeTier.Scan = CodeTier.Scan(codes, adcScore(qvec))
+
+  /** Top-K via ADC shortlist + exact refine ([[CodeTier.search]]). */
+  def search(qvec: Array[Float], k: Int, shortlist: Int = 100): DataFrame =
+    CodeTier.search(scan(qvec), corpus, qvec, k, shortlist)
 
   /** ADC-only top-K (no refine) — at 8 bits/dim this is already near-exact;
     * the recall spec pins the floor. */
-  def searchNoRefine(qvec: Array[Float], k: Int): DataFrame =
-    codes.select(col("vec_id"), round(adcScore(qvec), 6).as("score"))
-      .orderBy(desc("score"), col("vec_id")).limit(k)
+  def searchNoRefine(qvec: Array[Float], k: Int): DataFrame = CodeTier.noRefine(scan(qvec), k)
 
   /** Incremental add: encode the new batch with the EXISTING params (no
     * retraining; out-of-range values clamp) and union both tables —

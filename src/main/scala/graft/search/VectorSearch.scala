@@ -53,7 +53,7 @@ object VectorSearch {
     * must record |scanned| beside the top-K (the harness's ivf/lsh
     * `scored_vectors`). The separate `count()` job those callers ran
     * re-scanned the candidate set per query, doubling the probe I/O at
-    * scale (the IvfPqBackend list-size argument, applied to the filtered
+    * scale (the harness's probed-tier list-size argument, applied to the filtered
     * case the metadata cannot answer). Ranking contract identical to
     * [[topK]]: double-accumulated float dot, round-6-before-rank,
     * ascending-id ties (VecMath doc — the RamCorpus parity contract). */

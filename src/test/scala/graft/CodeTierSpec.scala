@@ -1,0 +1,38 @@
+package graft
+
+import graft.search.{Bq, CodeTier, QueryVectors}
+import graft.functions.VectorFunctions.bqHamming
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** [[graft.search.CodeTier]] is the one shortlist-and-refine path of the
+  * compressed tiers: a tier supplies its scan, the module ranks, cuts and
+  * refines. */
+class CodeTierSpec extends AnyFunSuite {
+  private lazy val spark = SparkTest.session
+
+  test("bq's −hamming scan ranks exactly as ascending hamming, vec_id tiebreak") {
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val model = Bq.build(emb)
+    val q = QueryVectors.qvec(3)
+    val byHamming = model.codes
+      .select(col("vec_id"), bqHamming(col("bq_codes"), model.encodeQuery(q)).as("h"))
+      .orderBy(col("h"), col("vec_id")).limit(60)
+      .collect().map(_.getLong(0)).toSeq
+    assert(CodeTier.shortlistIds(model.scan(q), 60).toSeq == byHamming)
+  }
+
+  test("the shortlist ranking lives only in CodeTier") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root (cwd ${new java.io.File(".").getAbsolutePath})")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val hits = for {
+      f <- walk(root)
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().zipWithIndex
+      if line.contains("desc(\"adc_score\")")
+    } yield s"${f.getName}:${i + 1}"
+    assert(hits.nonEmpty && hits.forall(_.startsWith("CodeTier.scala:")), hits)
+  }
+}

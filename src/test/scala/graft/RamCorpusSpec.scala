@@ -101,22 +101,41 @@ class RamCorpusSpec extends AnyFunSuite {
     assert(viaCatalyst("""{"label":{"eq":1.5}}""") == Set(1))
     assert(viaCatalyst("""{"label":{"eq":"1.5"}}""") == Set.empty)
     assert(viaCatalyst("""{"label":{"in":[2,"zz",3.9]}}""") == Set(2, 3))
+    // a value outside the int range is a cast failure on both paths (an
+    // overflowing literal cast would throw under ANSI mode), and an in-list
+    // drops only that member
+    Seq("""{"label":{"eq":4294967299}}""", """{"label":{"lt":1e30}}""",
+        """{"label":{"ge":-1e30}}""", """{"label":{"ne":"4294967299"}}""",
+        """{"label":{"between":[0,2147483648]}}""").foreach { json =>
+      val lp = RamCorpus.labelPredicate(FilterDsl.parseJson(json)).get.get
+      assert((0 until 5).forall(l => !lp(l)), json)
+      assert(viaCatalyst(json) == Set.empty, json)
+    }
+    val wide = """{"label":{"in":[1,4294967299,2147483647,-2147483649]}}"""
+    val lpWide = RamCorpus.labelPredicate(FilterDsl.parseJson(wide)).get.get
+    assert((0 until 5).filter(lpWide(_)).toSet == Set(1))
+    assert(viaCatalyst(wide) == Set(1))
   }
 
   test("harness with RAM tier returns the same ids as the Catalyst path") {
-    // pq/ivfpq exercise the pinned-block refine (scoreIds) vs the
+    // every code tier exercises the pinned-block refine (scoreIds) vs the
     // DataFrame broadcast-join refine — ranking must be byte-identical
-    val withRam = graft.harness.RunHarness.runMany(
-      spark, sf, Seq("exact", "post_filter", "pq", "ivfpq"), ram = Some(ram))
-    val without = graft.harness.RunHarness.runMany(
-      spark, sf, Seq("exact", "post_filter", "pq", "ivfpq"))
+    val backends = Seq("exact", "post_filter", "pq", "sq", "bq", "ivfpq", "ivfpq_res")
+    val withRam = graft.harness.RunHarness.runMany(spark, sf, backends, ram = Some(ram))
+    val without = graft.harness.RunHarness.runMany(spark, sf, backends)
     val key = (r: graft.harness.RunHarness.ResultRow) => (r.qid, r.method)
     val w = without.map(r => key(r) -> r).toMap
+    assert(withRam.map(_.method).distinct == backends)
     withRam.foreach { r =>
       val o = w(key(r))
       assert(r.recallAtK == o.recallAtK, s"recall mismatch at ${key(r)}")
       assert(r.scoredVectors == o.scoredVectors, s"scored mismatch at ${key(r)}")
       assert(r.kthAtStop == o.kthAtStop, s"kth mismatch at ${key(r)}")
+      assert(r.listsProbed == o.listsProbed, s"lists_probed mismatch at ${key(r)}")
+      assert(r.nprobe == o.nprobe, s"nprobe mismatch at ${key(r)}")
+      // exact's note names its tier ("(ram)"); every other backend's note
+      // is the same on both paths
+      if (r.method != "exact") assert(r.notes == o.notes, s"notes mismatch at ${key(r)}")
     }
   }
 

@@ -464,4 +464,21 @@ class RunHarnessSpec extends AnyFunSuite {
     val k2 = RunHarness.fusedKeys(Seq("ivfpq:50", "ivfpq:100", "lsh:1", "lsh:2x2"))
     assert(seen.toSet == k2.values.toSet, s"$seen vs ${k2.values.toSet}")
   }
+
+  test("the CLI session carries graft's extensions") {
+    // RunHarness.main's own session, opened in a child JVM: the shared
+    // test session already exists here, and getOrCreate would return it
+    val jvmFlags = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.toArray.map(_.toString)
+      .filter(a => a.startsWith("--add-opens") || a.startsWith("-Dspark."))
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx512m") ++ jvmFlags ++
+      Seq("-cp", sys.props("java.class.path"), "graft.HarnessCliChild")
+    val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+    pb.environment().put("SPARK_GRAFT_CPUS", "1")
+    val proc = pb.start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream, "UTF-8").mkString
+    val tail = out.linesIterator.toSeq.takeRight(40).mkString("\n")
+    assert(proc.waitFor() == 0, tail)
+    assert(out.contains(HarnessCliChild.Ok), tail)
+  }
 }
