@@ -34,21 +34,29 @@ object RunHarness {
       notes: Option[String],
       retries: Int = 0)
 
-  /** Backend interface (reference src/backend_interface.py). `allowed` is
-    * the precomputed |filtered subset| — the harness needs it for
-    * filter_selectivity anyway, so backends take it instead of re-counting
-    * (one count job per query, not two). */
+  /** Backend interface (reference src/backend_interface.py). A backend
+    * answers one query under each of its `names`, in that order: most
+    * answer under one name; a fused dial ladder answers every dial it
+    * serves from one shared pass. The filter arrives resolved once per
+    * query ([[ResolvedFilter]]: the Catalyst predicate, plus the RAM tier
+    * when that tier can evaluate it). `allowed` is the precomputed
+    * |filtered subset| — the harness needs it for filter_selectivity
+    * anyway, so backends take it instead of re-counting (one count per
+    * query, not one per backend). */
   trait Backend {
-    def name: String
-    def search(emb: DataFrame, qvec: Array[Float], pred: Option[org.apache.spark.sql.Column],
-               k: Int, allowed: Long): (Seq[Long], Stats)
-    /** Spec-aware entry: backends that can evaluate the filter DSL outside
-      * Catalyst (the RAM serving tier) override this; the default ignores
-      * the spec and uses the compiled Column. */
-    def search(emb: DataFrame, qvec: Array[Float], spec: FilterDsl.Spec,
-               pred: Option[org.apache.spark.sql.Column],
-               k: Int, allowed: Long): (Seq[Long], Stats) =
-      search(emb, qvec, pred, k, allowed)
+    def names: Seq[String]
+    def search(emb: DataFrame, qvec: Array[Float], f: ResolvedFilter,
+               k: Int, allowed: Long): Seq[(String, (Seq[Long], Stats))]
+  }
+
+  /** A backend answering under the one name `name`. */
+  private abstract class Single(name: String) extends Backend {
+    def names: Seq[String] = Seq(name)
+    def search(emb: DataFrame, qvec: Array[Float], f: ResolvedFilter,
+               k: Int, allowed: Long): Seq[(String, (Seq[Long], Stats))] =
+      Seq(name -> answer(emb, qvec, f, k, allowed))
+    protected def answer(emb: DataFrame, qvec: Array[Float], f: ResolvedFilter,
+                         k: Int, allowed: Long): (Seq[Long], Stats)
   }
 
   private def timed[A](body: => A): (A, Double) = {
@@ -59,106 +67,53 @@ object RunHarness {
 
   /** exact / pre_filter: brute-force top-K within the allowed subset
     * (implementations coincide in a pushdown engine — the filter IS the
-    * gather). scored_vectors = |allowed|. */
-  private class ExactBackend(val name: String) extends Backend {
-    def search(emb: DataFrame, qvec: Array[Float], pred: Option[org.apache.spark.sql.Column],
-               k: Int, allowed: Long): (Seq[Long], Stats) = {
-      val (rows, ms) = timed(VectorSearch.topK(emb, qvec, k, pred).collect())
-      val kth = rows.lastOption.map(_.getDouble(1))
-      (rows.map(_.getLong(0)).toSeq,
-        Stats(ms, allowed, None, None, kth, None, Some(s"$name backend")))
+    * gather). The pinned flat blocks when the filter resolved to the RAM
+    * tier (same semantics, no per-query columnar decode), else a Catalyst
+    * TakeOrdered. scored_vectors = |allowed|. */
+  private class ExactBackend(name: String) extends Single(name) {
+    protected def answer(emb: DataFrame, qvec: Array[Float], f: ResolvedFilter,
+                         k: Int, allowed: Long): (Seq[Long], Stats) = {
+      val (rows, ms) = timed(f.ram match {
+        case Some((rc, lp)) => rc.topK(qvec, k, lp)
+        case None => VectorSearch.topK(emb, qvec, k, f.pred).collect()
+          .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      })
+      (rows.map(_._1), Stats(ms, allowed, None, None, rows.lastOption.map(_._2), None,
+        Some(s"$name backend${if (f.ram.isDefined) " (ram)" else ""}")))
     }
   }
 
-  /** The reference's rung walk, mirroring post_filter.py:60-99 exactly: a
-    * rung that leaves < K kept candidates is a "retry" (bump); stop when
-    * kept ≥ K, when `maxSteps` retries have been spent, or when the ladder
-    * is exhausted. scored_vectors = the K′ of the stopping rung;
-    * kth_at_stop only when the stop was due to ≥ K kept. One Spark job
-    * regardless (the caller's max-rung TakeOrdered); the walk itself is
-    * O(K′) driver work over collected candidates. */
-  private def ladderWalk(cand: Array[(Long, Double, Boolean)], rungs: Seq[Int],
-                         k: Int, maxSteps: Int): (Seq[(Long, Double)], Int, Boolean, Int) = {
-    var retries = 0
-    var lastRung = 0
-    var satisfied = false
-    val it = rungs.iterator
-    while (it.hasNext && !satisfied && retries < maxSteps) {
-      val kp = it.next()
-      lastRung = kp
-      if (cand.take(kp).count(_._3) >= k) satisfied = true
-      else retries += 1
-    }
-    (cand.take(lastRung).filter(_._3).take(k).map(c => (c._1, c._2)).toSeq,
-      lastRung, satisfied, retries)
-  }
-
-  private def postStats(kept: Seq[(Long, Double)], rung: Int, satisfied: Boolean,
-                        retries: Int, k: Int, ladder: Seq[Int],
-                        ms: Double): (Seq[Long], Stats) = {
-    // kth_at_stop only when the ladder actually satisfied K
-    // (reference post_filter.py: None when exhausted with < K kept)
-    val kth = if (satisfied && kept.length == k) kept.lastOption.map(_._2) else None
-    (kept.map(_._1),
-      Stats(ms, rung, None, None, kth, None,
-        Some(s"k_ladder=${ladder.mkString("[", ", ", "]")}; kept=${kept.length}; need=$k"),
-        retries))
-  }
-
-  private class PostFilterBackend(ladder: Seq[Int], maxLadderSteps: Option[Int]) extends Backend {
-    val name = "post_filter"
-    def search(emb: DataFrame, qvec: Array[Float], pred: Option[org.apache.spark.sql.Column],
-               k: Int, allowed: Long): (Seq[Long], Stats) = {
-      val spark = emb.sparkSession
-      import spark.implicits._
-      val maxSteps = maxLadderSteps.getOrElse(ladder.length)
-      val rungs = ladder.sorted
-      val ((kept, rung, satisfied, retries), ms) = timed {
-        val cand = VectorSearch.withScore(emb, qvec)
-          .withColumn("pass", coalesce(pred.getOrElse(lit(true)), lit(false)))
-          .select(col("vec_id").cast("long"), col("score"), col("pass"))
-          .orderBy(desc("score"), col("vec_id"))
-          .limit(rungs.max)
-          .as[(Long, Double, Boolean)].collect()
-        ladderWalk(cand, rungs, k, maxSteps)
+  /** post_filter and post_filter:ivf: the reference's rung walk
+    * ([[VectorSearch.ladderWalk]], post_filter.py:60-99) over one max-rung
+    * candidate fetch, from one of three sources: the pinned blocks when
+    * the filter resolved to the RAM tier, else the corpus; or, given
+    * `probe` (an IVF model and its nprobe), the probed lists only — the
+    * plan the reference's post_filter ACTUALLY runs (post_filter.py:17-99
+    * probes `ann_index.search` with each rung's K′), so that family records
+    * the index-probe trade: recall < 1 when a true neighbour lives in an
+    * unprobed list. The walk is the same for every source (top-200 ⊆
+    * top-500 ⊆ top-1000, like FAISS's nested search results): one Spark
+    * job, then O(K′) driver work. scored_vectors = the K′ of the stopping
+    * rung; kth_at_stop only when the stop kept K (reference: None when the
+    * ladder is exhausted with < K kept). */
+  private class PostFilterBackend(name: String, ladder: Seq[Int], maxLadderSteps: Option[Int],
+                                  probe: Option[(IvfModel, Int)]) extends Single(name) {
+    protected def answer(emb: DataFrame, qvec: Array[Float], f: ResolvedFilter,
+                         k: Int, allowed: Long): (Seq[Long], Stats) = {
+      val probed = probe.map { case (model, n) => (model, n, model.probes(qvec, n)) }
+      val (stop, ms) = timed {
+        val cand = (probed, f.ram) match {
+          case (Some((model, _, lists)), _) => VectorSearch.ladderCandidates(
+            model.indexed.where(col("list_id").isin(lists: _*)), qvec, f.pred, ladder.max)
+          case (None, Some((rc, lp))) => rc.topCandidates(qvec, ladder.max, lp).toArray
+          case (None, None) => VectorSearch.ladderCandidates(emb, qvec, f.pred, ladder.max)
+        }
+        VectorSearch.ladderWalk(cand, ladder, k, maxLadderSteps.getOrElse(ladder.length))
       }
-      postStats(kept, rung, satisfied, retries, k, ladder, ms)
-    }
-  }
-
-  /** ANN-backed post_filter — the plan the reference's post_filter ACTUALLY
-    * runs (post_filter.py:17-99 probes `ann_index.search` with each ladder
-    * rung's K′): candidates come from the probed IVF lists only, so unlike
-    * the exact-scored ladder above this family records the index-probe
-    * trade — recall < 1 when a true neighbour lives in an unprobed list.
-    * The rung walk itself is identical (top-200 of the probed lists ⊆
-    * top-500 ⊆ top-1000, like FAISS's nested search results), so ONE
-    * pruned-scan TakeOrdered of the max rung feeds the same driver-side
-    * ladder accounting — retries / kth_at_stop semantics unchanged. */
-  private class IvfPostFilterBackend(model: IvfModel, nprobeN: Int,
-                                     ladder: Seq[Int], maxLadderSteps: Option[Int])
-      extends Backend {
-    val name = "post_filter:ivf"
-    def search(emb: DataFrame, qvec: Array[Float], pred: Option[org.apache.spark.sql.Column],
-               k: Int, allowed: Long): (Seq[Long], Stats) = {
-      val spark = emb.sparkSession
-      import spark.implicits._
-      val maxSteps = maxLadderSteps.getOrElse(ladder.length)
-      val rungs = ladder.sorted
-      val lists = model.probes(qvec, nprobeN)
-      val ((kept, rung, satisfied, retries), ms) = timed {
-        val cand = VectorSearch
-          .withScore(model.indexed.where(col("list_id").isin(lists: _*)), qvec)
-          .withColumn("pass", coalesce(pred.getOrElse(lit(true)), lit(false)))
-          .select(col("vec_id").cast("long"), col("score"), col("pass"))
-          .orderBy(desc("score"), col("vec_id"))
-          .limit(rungs.max)
-          .as[(Long, Double, Boolean)].collect()
-        ladderWalk(cand, rungs, k, maxSteps)
-      }
-      val (ids, st) = postStats(kept, rung, satisfied, retries, k, ladder, ms)
-      (ids, st.copy(listsProbed = Some(lists.length), nprobe = Some(nprobeN),
-        notes = st.notes.map("ivf-probed " + _)))
+      val kth = if (stop.satisfied && stop.kept.length == k) stop.kept.lastOption.map(_._2) else None
+      val notes = s"k_ladder=${ladder.mkString("[", ", ", "]")}; kept=${stop.kept.length}; need=$k"
+      (stop.kept.map(_._1), Stats(ms, stop.rung, probed.map(_._3.length), probed.map(_._2), kth,
+        None, Some(if (probed.isDefined) s"ivf-probed $notes" else notes), stop.retries))
     }
   }
 
@@ -173,21 +128,14 @@ object RunHarness {
     * resident matrix): one code-scan TakeOrdered plus one id-set scoring
     * pass, never a corpus DataFrame re-scan; ranking-identical to the
     * broadcast refine (RamCorpusSpec parity). */
-  private class CodeTierBackend(val name: String, corpus: DataFrame, width: Int,
-                                ram: Option[RamCorpus])
+  private class CodeTierBackend(name: String, corpus: DataFrame, width: Int)
                                (probe: Array[Float] => (CodeTier.Scan, Stats))
-      extends Backend {
-    def search(emb: DataFrame, qvec: Array[Float], pred: Option[org.apache.spark.sql.Column],
-               k: Int, allowed: Long): (Seq[Long], Stats) = serve(qvec, pred, k, None)
-    override def search(emb: DataFrame, qvec: Array[Float], spec: FilterDsl.Spec,
-                        pred: Option[org.apache.spark.sql.Column],
-                        k: Int, allowed: Long): (Seq[Long], Stats) =
-      serve(qvec, pred, k, CodeTier.ramRefine(ram, spec))
-    private def serve(qvec: Array[Float], pred: Option[org.apache.spark.sql.Column], k: Int,
-                      rr: CodeTier.RamRefine): (Seq[Long], Stats) = {
+      extends Single(name) {
+    protected def answer(emb: DataFrame, qvec: Array[Float], f: ResolvedFilter,
+                         k: Int, allowed: Long): (Seq[Long], Stats) = {
       val ((rows, st), ms) = timed {
         val (scan, st) = probe(qvec)
-        (CodeTier.serve(scan, corpus, qvec, k, width, pred, rr), st)
+        (CodeTier.serve(scan, corpus, qvec, k, width, f), st)
       }
       (rows.map(_._1), st.copy(latencyMs = ms, kthAtStop = rows.lastOption.map(_._2)))
     }
@@ -212,52 +160,12 @@ object RunHarness {
       Some(lists.length), Some(nprobeN), None, None, Some(note)))
   }
 
-  /** RAM serving tier for exact/pre_filter: scores the pinned flat blocks
-    * when the filter is label-local, falls back to the Catalyst path
-    * otherwise. Same semantics, no per-query columnar decode. */
-  private class RamExactBackend(val name: String, ram: RamCorpus) extends Backend {
-    def search(emb: DataFrame, qvec: Array[Float], pred: Option[org.apache.spark.sql.Column],
-               k: Int, allowed: Long): (Seq[Long], Stats) =
-      new ExactBackend(name).search(emb, qvec, pred, k, allowed)
-    override def search(emb: DataFrame, qvec: Array[Float], spec: FilterDsl.Spec,
-                        pred: Option[org.apache.spark.sql.Column],
-                        k: Int, allowed: Long): (Seq[Long], Stats) =
-      RamCorpus.labelPredicate(spec) match {
-        case Some(lp) =>
-          val (rows, ms) = timed(ram.topK(qvec, k, lp))
-          (rows.map(_._1),
-            Stats(ms, allowed, None, None, rows.lastOption.map(_._2), None,
-              Some(s"$name backend (ram)")))
-        case None => search(emb, qvec, pred, k, allowed)
-      }
-  }
-
-  /** RAM post-filter: same rung walk, candidates from the pinned blocks. */
-  private class RamPostFilterBackend(ram: RamCorpus, ladder: Seq[Int],
-                                     maxLadderSteps: Option[Int])
-      extends PostFilterBackend(ladder, maxLadderSteps) {
-    override def search(emb: DataFrame, qvec: Array[Float], spec: FilterDsl.Spec,
-                        pred: Option[org.apache.spark.sql.Column],
-                        k: Int, allowed: Long): (Seq[Long], Stats) =
-      RamCorpus.labelPredicate(spec) match {
-        case Some(lp) =>
-          val maxSteps = maxLadderSteps.getOrElse(ladder.length)
-          val rungs = ladder.sorted
-          val ((kept, rung, satisfied, retries), ms) = timed {
-            ladderWalk(ram.topCandidates(qvec, rungs.max, lp).toArray, rungs, k, maxSteps)
-          }
-          postStats(kept, rung, satisfied, retries, k, ladder, ms)
-        case None => search(emb, qvec, pred, k, allowed)
-      }
-  }
-
-  private class IvfBackend(model: IvfModel, nprobeN: Int) extends Backend {
-    val name = "ivf"
-    def search(emb: DataFrame, qvec: Array[Float], pred: Option[org.apache.spark.sql.Column],
-               k: Int, allowed: Long): (Seq[Long], Stats) = {
+  private class IvfBackend(model: IvfModel, nprobeN: Int) extends Single("ivf") {
+    protected def answer(emb: DataFrame, qvec: Array[Float], f: ResolvedFilter,
+                         k: Int, allowed: Long): (Seq[Long], Stats) = {
       val lists = model.probes(qvec, nprobeN)
       val scored = model.indexed.where(col("list_id").isin(lists: _*))
-      val base = pred.map(scored.where).getOrElse(scored)
+      val base = f.pred.map(scored.where).getOrElse(scored)
       // ONE pruned pass returns both the top-K and |scanned| — the
       // separate count() this ran before re-scanned the probed lists
       // every query, doubling the serving path's probe I/O at scale
@@ -303,10 +211,10 @@ object RunHarness {
     }
   }
 
-  private class LshBackend(val name: String, tbls: Seq[Array[Array[Float]]],
-                           radius: Int, signed: DataFrame) extends Backend {
-    def search(emb: DataFrame, qvec: Array[Float], pred: Option[org.apache.spark.sql.Column],
-               k: Int, allowed: Long): (Seq[Long], Stats) = {
+  private class LshBackend(name: String, tbls: Seq[Array[Array[Float]]],
+                           radius: Int, signed: DataFrame) extends Single(name) {
+    protected def answer(emb: DataFrame, qvec: Array[Float], f: ResolvedFilter,
+                         k: Int, allowed: Long): (Seq[Long], Stats) = {
       val nProbed = tbls.map(p =>
         CosineLsh.multiprobe(CosineLsh.signature(qvec, p), p.length, radius).length).sum
       val bucketPred = tbls.zipWithIndex.map { case (p, t) =>
@@ -314,7 +222,7 @@ object RunHarness {
         col(s"_b$t").isin(buckets: _*)
       }.reduce(_ || _)
       val bucketed = signed.where(bucketPred)
-      val base = pred.map(bucketed.where).getOrElse(bucketed)
+      val base = f.pred.map(bucketed.where).getOrElse(bucketed)
       // ONE bucket-pruned pass for both the top-K and |scanned| — the
       // separate count() re-scanned the candidate buckets per query
       // (IvfBackend doc; ranking contract identical to topK)
@@ -327,10 +235,9 @@ object RunHarness {
     }
   }
 
-  private class RandomBackend(seed: Long) extends Backend {
-    val name = "random"
-    def search(emb: DataFrame, qvec: Array[Float], pred: Option[org.apache.spark.sql.Column],
-               k: Int, allowed: Long): (Seq[Long], Stats) = {
+  private class RandomBackend(seed: Long) extends Single("random") {
+    protected def answer(emb: DataFrame, qvec: Array[Float], f: ResolvedFilter,
+                         k: Int, allowed: Long): (Seq[Long], Stats) = {
       val (rows, ms) = timed(VectorSearch.randomK(emb, k, seed).collect())
       (rows.map(_.getLong(0)).toSeq,
         Stats(ms, 0L, None, None, None, None, Some("random baseline")))
@@ -359,20 +266,12 @@ object RunHarness {
                  ladder: Seq[Int] = Seq(200, 500, 1000), nprobe: Int = 32,
                  maxLadderSteps: Option[Int] = None,
                  corpusKey: Option[String] = None,
-                 knownDim: Option[Int] = None,
-                 ram: Option[RamCorpus] = None): Backend =
+                 knownDim: Option[Int] = None): Backend =
     name match {
-      case "exact" | "pre_filter" =>
-        ram.map(new RamExactBackend(name, _)).getOrElse(new ExactBackend(name))
-      case "post_filter" =>
-        ram.map(new RamPostFilterBackend(_, ladder, maxLadderSteps))
-          .getOrElse(new PostFilterBackend(ladder, maxLadderSteps))
-      case "post_filter:ivf" =>
-        val model = corpusKey match {
-          case Some(key) => Ivf.cached(emb.sparkSession, emb, key, knownTotal = Some(total))
-          case None => Ivf.auto(emb).getOrElse(Ivf.build(emb, Ivf.pickNlist(total)))
-        }
-        new IvfPostFilterBackend(model, nprobe, ladder, maxLadderSteps)
+      case "exact" | "pre_filter" => new ExactBackend(name)
+      case "post_filter" => new PostFilterBackend(name, ladder, maxLadderSteps, None)
+      case "post_filter:ivf" => new PostFilterBackend(name, ladder, maxLadderSteps,
+        Some((ivfModelFor(emb, total, corpusKey), nprobe)))
       // "pq" / "pq:<shortlist>" (and sq, bq, ivfpq_res alike) — the
       // compressed tier's recall dial rides in the method name (the
       // lsh:<radius>x<tables> convention), so results.jsonl rows at
@@ -385,7 +284,7 @@ object RunHarness {
           case None => Pq.build(emb)
         }
         val st = flatStats(total, s"pq adc m=${model.m} k=${model.kCodes} shortlist=$sl")
-        new CodeTierBackend(p, model.corpus, sl, ram)(q => (model.scan(q), st))
+        new CodeTierBackend(p, model.corpus, sl)(q => (model.scan(q), st))
       case p if p == "sq" || p.startsWith("sq:") =>
         val sl = dial(p, "sq", 100)
         val model = corpusKey match {
@@ -393,7 +292,7 @@ object RunHarness {
           case None => Sq.build(emb)
         }
         val st = flatStats(total, s"sq8 dim=${model.dim} shortlist=$sl")
-        new CodeTierBackend(p, model.corpus, sl, ram)(q => (model.scan(q), st))
+        new CodeTierBackend(p, model.corpus, sl)(q => (model.scan(q), st))
       // training-free tier
       case p if p == "bq" || p.startsWith("bq:") =>
         val sl = dial(p, "bq", 100)
@@ -402,18 +301,16 @@ object RunHarness {
           case None => Bq.build(emb)
         }
         val st = flatStats(total, s"bq sign-bit shortlist=$sl")
-        new CodeTierBackend(p, model.corpus, sl, ram)(q => (model.scan(q), st))
+        new CodeTierBackend(p, model.corpus, sl)(q => (model.scan(q), st))
       // residual-encoded composition (the true FAISS IndexIVFPQ encoding,
       // IvfPqRes doc) — matched BEFORE the plain "ivfpq" prefix rule
       case p if p == "ivfpq_res" || p.startsWith("ivfpq_res:") =>
         val model = corpusKey match {
-          case Some(key) => IvfPqRes.cached(emb, key,
-            Ivf.cached(emb.sparkSession, emb, key, knownTotal = Some(total)))
-          case None => IvfPqRes.build(
-            Ivf.auto(emb).getOrElse(Ivf.build(emb, Ivf.pickNlist(total))))
+          case Some(key) => IvfPqRes.cached(emb, key, ivfModelFor(emb, total, corpusKey))
+          case None => IvfPqRes.build(ivfModelFor(emb, total, corpusKey))
         }
         val sl = dial(p, "ivfpq_res", 100)
-        new CodeTierBackend(p, model.corpus, sl, ram)(probedScan(model, nprobe,
+        new CodeTierBackend(p, model.corpus, sl)(probedScan(model, nprobe,
           s"ivfpq residual-encoded m=${model.m} k=${model.kCodes} shortlist=$sl"))
       // the full FAISS-family scale tier, recorded alongside its halves
       // (ivf = pruned flat scan, pq = full compressed scan)
@@ -422,14 +319,9 @@ object RunHarness {
         // bare "ivfpq" serves the index's auto-tuned default (meta.json);
         // "ivfpq:N" dials it explicitly
         val sl = dial(p, "ivfpq", model.defaultShortlist)
-        new CodeTierBackend(p, model.pq.corpus, sl, ram)(probedScan(model, nprobe,
+        new CodeTierBackend(p, model.pq.corpus, sl)(probedScan(model, nprobe,
           s"ivfpq adc m=${model.pq.m} k=${model.pq.kCodes} shortlist=$sl"))
-      case "ivf" =>
-        val model = corpusKey match {
-          case Some(k) => Ivf.cached(emb.sparkSession, emb, k, knownTotal = Some(total))
-          case None => Ivf.auto(emb).getOrElse(Ivf.build(emb, Ivf.pickNlist(total)))
-        }
-        new IvfBackend(model, nprobe)
+      case "ivf" => new IvfBackend(ivfModelFor(emb, total, corpusKey), nprobe)
       // "lsh" / "lsh:<radius>" / "lsh:<radius>x<tables>" — both recall-
       // dial axes ride in the method name so results.jsonl rows are
       // distinguishable per setting, like ef_search runs
@@ -477,41 +369,20 @@ object RunHarness {
   // per-dial tail, and onBackendTimed sees ONE entry under the group's
   // combined key (e.g. "ivfpq:50+ivfpq:100+ivfpq:200").
 
-  /** A set of backend names answered together from one shared pass. */
-  private trait GroupBackend {
-    def names: Seq[String]
-    def timingKey: String = sharedTimingKey(names)
-    def searchAll(emb: DataFrame, qvec: Array[Float], spec: FilterDsl.Spec,
-                  pred: Option[org.apache.spark.sql.Column],
-                  k: Int, allowed: Long): Seq[(String, (Seq[Long], Stats))]
-  }
-
-  private class SingleGroup(b: Backend) extends GroupBackend {
-    def names: Seq[String] = Seq(b.name)
-    override def timingKey: String = b.name
-    def searchAll(emb: DataFrame, qvec: Array[Float], spec: FilterDsl.Spec,
-                  pred: Option[org.apache.spark.sql.Column],
-                  k: Int, allowed: Long): Seq[(String, (Seq[Long], Stats))] =
-      Seq(b.name -> b.search(emb, qvec, spec, pred, k, allowed))
-  }
-
   /** Fused `ivfpq:<sl>` ladder: one partition-pruned ADC TakeOrdered at
     * the widest shortlist ([[CodeTier.shortlistIds]], collected in rank
     * order); each dial ranks its prefix over ONE exact refine of the
     * widest shortlist ([[CodeTier.scoreAll]] — pinned-block scoring when
-    * the filter is label-local, else the broadcast id join). */
-  private class IvfPqLadderGroup(dials: Seq[(String, Int)], model: IvfPqModel,
-                                 nprobeN: Int, ram: Option[RamCorpus])
-      extends GroupBackend {
+    * the filter resolved to the RAM tier, else the broadcast id join). */
+  private class IvfPqLadderBackend(dials: Seq[(String, Int)], model: IvfPqModel, nprobeN: Int)
+      extends Backend {
     def names: Seq[String] = dials.map(_._1)
     private val maxSl = dials.map(_._2).max
-    def searchAll(emb: DataFrame, qvec: Array[Float], spec: FilterDsl.Spec,
-                  pred: Option[org.apache.spark.sql.Column],
-                  k: Int, allowed: Long): Seq[(String, (Seq[Long], Stats))] = {
+    def search(emb: DataFrame, qvec: Array[Float], f: ResolvedFilter,
+               k: Int, allowed: Long): Seq[(String, (Seq[Long], Stats))] = {
       val (scan, st) = probedScan(model, nprobeN, "")(qvec)
       val (shortIds, msShort) = timed(CodeTier.shortlistIds(scan, maxSl))
-      val (scored, msRefine) = timed(CodeTier.scoreAll(
-        model.pq.corpus, shortIds, qvec, pred, CodeTier.ramRefine(ram, spec)))
+      val (scored, msRefine) = timed(CodeTier.scoreAll(model.pq.corpus, shortIds, qvec, f))
       // per-dial prefix rank over the refined score map, on the shared
       // (score desc, vec_id) contract
       dials.map { case (nm, sl) =>
@@ -537,14 +408,13 @@ object RunHarness {
     * aggregate + per-dial TakeOrdered chain — 1 job per query instead of
     * 2+|dials|, identical rows (same counts, same (score desc, vec_id)
     * ranking contract, driver-side over the same bounded set). */
-  private class LshLadderGroup(dials: Seq[(String, Int, Int)], // (name, radius, tables)
-                               tbls: Seq[Array[Array[Float]]],
-                               signed: DataFrame)
-      extends GroupBackend {
+  private class LshLadderBackend(dials: Seq[(String, Int, Int)], // (name, radius, tables)
+                                 tbls: Seq[Array[Array[Float]]],
+                                 signed: DataFrame)
+      extends Backend {
     def names: Seq[String] = dials.map(_._1)
-    def searchAll(emb: DataFrame, qvec: Array[Float], spec: FilterDsl.Spec,
-                  pred: Option[org.apache.spark.sql.Column],
-                  k: Int, allowed: Long): Seq[(String, (Seq[Long], Stats))] = {
+    def search(emb: DataFrame, qvec: Array[Float], f: ResolvedFilter,
+               k: Int, allowed: Long): Seq[(String, (Seq[Long], Stats))] = {
       val bits = tbls.head.length
       val maxT = dials.map(_._3).max
       val used = tbls.take(maxT)
@@ -559,7 +429,7 @@ object RunHarness {
           CosineLsh.multiprobe(CosineLsh.signature(qvec, p), bits, r).length).sum
       }
       val bucketed = signed.where(dialPreds.reduce(_ || _))
-      val base = pred.map(bucketed.where).getOrElse(bucketed)
+      val base = f.pred.map(bucketed.where).getOrElse(bucketed)
       val (cand, msShared) = timed {
         VectorSearch.withScore(base, qvec)
           .select(col("vec_id").cast("long") +: col("score") +:
@@ -592,6 +462,14 @@ object RunHarness {
       case _ => throw new IllegalArgumentException(s"Unknown backend: $name")
     }
 
+  /** The IVF model every IVF-backed backend probes: the persisted shared
+    * index when the corpus has a key, else an in-process fit. */
+  private def ivfModelFor(emb: DataFrame, total: Long, corpusKey: Option[String]): IvfModel =
+    corpusKey match {
+      case Some(key) => Ivf.cached(emb.sparkSession, emb, key, knownTotal = Some(total))
+      case None => Ivf.auto(emb).getOrElse(Ivf.build(emb, Ivf.pickNlist(total)))
+    }
+
   /** The composed IVFPQ model (disk-cached when the corpus has a key),
     * shared by the solo ivfpq backend and the fused ladder — one cache
     * key and one composition rule for both paths. */
@@ -599,20 +477,18 @@ object RunHarness {
                             corpusKey: Option[String]): IvfPqModel =
     corpusKey match {
       case Some(key) => IvfPq.cached(emb.sparkSession, emb, key,
-        Ivf.cached(emb.sparkSession, emb, key, knownTotal = Some(total)),
-        Pq.cached(emb.sparkSession, emb, key))
-      case None => IvfPq.compose(
-        Ivf.auto(emb).getOrElse(Ivf.build(emb, Ivf.pickNlist(total))), Pq.build(emb))
+        ivfModelFor(emb, total, corpusKey), Pq.cached(emb.sparkSession, emb, key))
+      case None => IvfPq.compose(ivfModelFor(emb, total, corpusKey), Pq.build(emb))
     }
 
   /** Group the backend list: ≥2 explicit `ivfpq:<n>` dials fuse into one
-    * IvfPqLadderGroup, ≥2 `lsh[:…]` dials into one LshLadderGroup (they
+    * IvfPqLadderBackend, ≥2 `lsh[:…]` dials into one LshLadderBackend (they
     * share bits and prefix-seeded plane tables by construction); everything
     * else stays a single backend. Group order follows each group's first
     * member, and runMany re-orders per-query rows to the caller's list.
     *
-    * This is the ONE fusion decision, consumed by BOTH [[buildGroups]] (which
-    * materializes the fused ladder groups) and [[fusedKeys]] (which
+    * This is the ONE fusion decision, consumed by BOTH [[backendsFor]] (which
+    * materializes the fused ladders) and [[fusedKeys]] (which
     * renders the artifact annotation) — divergence between the grouping
     * and its self-description is structurally impossible, not just
     * spec-pinned. An empty family means "do not fuse" (a lone dial runs
@@ -623,15 +499,15 @@ object RunHarness {
     (if (iv.length >= 2) iv else Nil, if (ls.length >= 2) ls else Nil)
   }
 
-  /** The one rendering of a group's shared timing key (GroupBackend
-    * .timingKey and fusedKeys both call it). */
+  /** The one rendering of a backend's timing key (runMany's timing hook
+    * and fusedKeys both call it): a single name is its own key. */
   private def sharedTimingKey(names: Seq[String]): String = names.mkString("+")
 
   /** The fused-group timing key each requested backend reports under
     * (r19 verdict #5 — artifact self-description): dials that share one
-    * timed pass in [[buildGroups]] map to the group's combined key;
+    * timed pass in [[backendsFor]] map to the group's combined key;
     * everything else maps to itself. Derived from the same
-    * [[fusedFamilies]] partition buildGroups consumes (spec-pinned on
+    * [[fusedFamilies]] partition backendsFor consumes (spec-pinned on
     * top, RunHarnessSpec). */
   def fusedKeys(backendNames: Seq[String]): Map[String, String] = {
     val (iv, ls) = fusedFamilies(backendNames)
@@ -649,24 +525,21 @@ object RunHarness {
   private def isLshDial(n: String): Boolean =
     n == "lsh" || n.startsWith("lsh:")
 
-  private def buildGroups(backendNames: Seq[String], emb: DataFrame, total: Long,
+  private def backendsFor(backendNames: Seq[String], emb: DataFrame, total: Long,
                           ladder: Seq[Int], nprobe: Int, maxLadderSteps: Option[Int],
-                          corpusKey: Option[String], knownDim: Option[Int],
-                          ram: Option[RamCorpus]): Seq[GroupBackend] = {
+                          corpusKey: Option[String], knownDim: Option[Int]): Seq[Backend] = {
     val (ivfpqDials, lshDials) = fusedFamilies(backendNames)
     val fuseIvfPq = ivfpqDials.nonEmpty
     val fuseLsh = lshDials.nonEmpty
-    def single(n: String) = new SingleGroup(getBackend(n, emb, total, ladder, nprobe,
-      maxLadderSteps, corpusKey, knownDim, ram))
-    val groups = scala.collection.mutable.ArrayBuffer.empty[GroupBackend]
+    val out = scala.collection.mutable.ArrayBuffer.empty[Backend]
     val seen = scala.collection.mutable.Set.empty[String]
     backendNames.foreach {
       case n if fuseIvfPq && ivfpqDials.contains(n) =>
         if (!seen(n)) {
           seen ++= ivfpqDials
-          groups += new IvfPqLadderGroup(
+          out += new IvfPqLadderBackend(
             ivfpqDials.map(d => d -> d.stripPrefix("ivfpq:").toInt),
-            ivfPqModelFor(emb, total, corpusKey), nprobe, ram)
+            ivfPqModelFor(emb, total, corpusKey), nprobe)
         }
       case l if fuseLsh && lshDials.contains(l) =>
         if (!seen(l)) {
@@ -677,11 +550,12 @@ object RunHarness {
           }
           val dim = knownDim.getOrElse(emb.select(size(col("embedding"))).first().getInt(0))
           val tbls = CosineLsh.tables(dim, CosineLsh.pickBits(total), parsed.map(_._3).max)
-          groups += new LshLadderGroup(parsed, tbls, signedTable(emb, tbls, corpusKey))
+          out += new LshLadderBackend(parsed, tbls, signedTable(emb, tbls, corpusKey))
         }
-      case n => groups += single(n)
+      case n => out += getBackend(n, emb, total, ladder, nprobe, maxLadderSteps,
+        corpusKey, knownDim)
     }
-    groups.toSeq
+    out.toSeq
   }
 
   case class ResultRow(
@@ -724,11 +598,11 @@ object RunHarness {
       emb.select(size(col("embedding"))).first().getInt(0))
     val runId = java.util.UUID.randomUUID().toString
     // nested dial sets (ivfpq:<sl>, lsh:<r>x<t>) fuse into shared-pass
-    // groups — results identical to independent per-dial searches
-    // (GroupBackend doc), ~1/3 the jobs for a 3-rung ladder
-    val groups = buildGroups(backendNames, emb, total,
+    // backends — results identical to independent per-dial searches
+    // (fused dial ladders doc), ~1/3 the jobs for a 3-rung ladder
+    val backends = backendsFor(backendNames, emb, total,
       ladder = Seq(200, 500, 1000), nprobe = 32, maxLadderSteps = None,
-      corpusKey = Some(sfDir), knownDim = Some(dim), ram = ram)
+      corpusKey = Some(sfDir), knownDim = Some(dim))
 
     // hard guards BEFORE any search (reference: dimension + K validation)
     val queries = qs.map { hq =>
@@ -756,27 +630,23 @@ object RunHarness {
     }
 
     queries.flatMap { case (hq, k, qvec) =>
-      val spec = FilterDsl.parseJson(hq.filters) // malformed/unknown → hard error
-      val pred = if (spec.isEmpty) None else Some(FilterDsl.compile(emb, spec))
+      // malformed/unknown → hard error; resolved once for every backend
+      val f = ResolvedFilter(emb, FilterDsl.parseJson(hq.filters), ram)
       // |allowed| from the pinned blocks when the serving tier can evaluate
-      // the spec (one lightweight counting pass, semantics parity spec-pinned
-      // via exact's scored_vectors) — else the Catalyst count
-      val allowed = pred.map { p =>
-        ram.flatMap(rc => RamCorpus.labelPredicate(spec).map(rc.countAllowed))
-          .getOrElse(emb.where(p).count())
-      }.getOrElse(total)
-      // onBackendTimed sees the WALL seconds of each (query, group) search
+      // the spec (semantics parity spec-pinned via exact's scored_vectors)
+      val allowed = f.allowed(total)
+      // onBackendTimed sees the WALL seconds of each (query, backend) search
       // — job-scheduling overhead included, unlike the row's latencyMs which
       // each backend clocks around its own timed section. The hook lets a
       // caller (hybrid_stats) decompose its recorded aggregate per family;
       // a fused ladder reports once under its combined key.
-      val searched = groups.flatMap { g =>
+      val searched = backends.flatMap { b =>
         val t0 = System.nanoTime()
-        val rs = g.searchAll(emb, qvec, spec, pred, k, allowed)
-        onBackendTimed(g.timingKey, (System.nanoTime() - t0) / 1e9)
+        val rs = b.search(emb, qvec, f, k, allowed)
+        onBackendTimed(sharedTimingKey(b.names), (System.nanoTime() - t0) / 1e9)
         rs
       }
-      // rows in the CALLER's backend order, independent of group layout
+      // rows in the CALLER's backend order, independent of fused layout
       val byName = searched.toMap
       val ordered = backendNames.map(n => n -> byName(n))
       // exact/pre_filter IS the oracle computation (deterministic brute
@@ -785,7 +655,7 @@ object RunHarness {
       val oracleIds = ordered
         .collectFirst { case (n, (ids, _)) if n == "exact" || n == "pre_filter" =>
           ids.toArray }
-        .getOrElse(VectorSearch.topK(emb, qvec, k, pred).collect().map(_.getLong(0)))
+        .getOrElse(VectorSearch.topK(emb, qvec, k, f.pred).collect().map(_.getLong(0)))
       ordered.map { case (name, (ids, stats)) =>
         val recall = if (k == 0) 0.0 else ids.toSet.intersect(oracleIds.toSet).size.toDouble / k
         ResultRow(hq.qid, name, k, stats.latencyMs, recall,
@@ -844,6 +714,19 @@ object RunHarness {
     spark
   }
 
+  private val CliFlags = Set("--sf-dir", "--backends", "--backend", "--out", "--K",
+    "--max_queries", "--queries", "--model-dir")
+
+  /** The CLI's `--flag value` pairs. An unknown flag, or a flag whose value
+    * is missing (last argument, or followed by another flag), is an
+    * IllegalArgumentException naming it — never a silently ignored option. */
+  private[graft] def parseArgs(args: Array[String]): Map[String, String] =
+    args.grouped(2).map {
+      case Array(f, _*) if !CliFlags(f) => throw new IllegalArgumentException(s"unknown flag: $f")
+      case Array(f, v) if !CliFlags(v) => f -> v
+      case Array(f, _*) => throw new IllegalArgumentException(s"flag $f has no value")
+    }.toMap
+
   /** CLI twin of the reference's `python -m src.harness.run`.
     * `--queries q.parquet` runs a persisted query table (the reference's
     * qid/qtext/filters/K shape, Ingest.readQueries) instead of the
@@ -851,7 +734,7 @@ object RunHarness {
     * weights exported at that path (MiniLm.load) instead of the seeded
     * stand-in encoder. */
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val opts = parseArgs(args)
     val sfDir = opts.getOrElse("--sf-dir", "/root/testdata/sf0.01")
     val backends = opts.get("--backends").map(_.split(",").toSeq)
       .getOrElse(Seq(opts.getOrElse("--backend", "exact")))

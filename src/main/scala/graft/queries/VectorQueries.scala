@@ -1630,9 +1630,9 @@ object VectorQueries {
     * gathering beats laddering at equal scored rows). This is the row a
     * query planner logs when hybrid search picks an execution strategy
     * per filter. Scale shape: per query ONE pushed-predicate count + ONE
-    * TakeOrdered of the max rung (the postFilterLadder collect contract,
-    * ≤1000 rows to the driver); the oracle replays the full ranking with
-    * a gate-scale window. */
+    * TakeOrdered of the max rung (VectorSearch.ladderCandidates, ≤1000
+    * rows to the driver) walked by the harness's own rung walk; the oracle
+    * replays the full ranking with a gate-scale window. */
   def hybridPlan(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val e = emb(s, d)
@@ -1643,19 +1643,11 @@ object VectorQueries {
     val ram = servingTier(s, d)
     val ladder = Seq(200, 500, 1000)
     val rows = QuerySet.default.map { hq =>
-      val spec = graft.filters.FilterDsl.parseJson(hq.filters)
-      val pred = if (spec.isEmpty) None else Some(graft.filters.FilterDsl.compile(e, spec))
-      val nAllowed = pred.map { p =>
-        ram.flatMap(rc => graft.search.RamCorpus.labelPredicate(spec)
-          .map(rc.countAllowed)).getOrElse(e.where(p).count())
-      }.getOrElse(total)
-      val cand = VectorSearch.withScore(e, hq.qvec)
-        .withColumn("pass", coalesce(pred.getOrElse(lit(true)), lit(false)))
-        .select(col("vec_id").cast("long"), col("score"), col("pass"))
-        .orderBy(desc("score"), col("vec_id"))
-        .limit(ladder.max)
-        .as[(Long, Double, Boolean)].collect() // ≤ max rung by contract
-      val postCost = ladder.find(kp => cand.take(kp).count(_._3) >= hq.k)
+      val f = graft.search.ResolvedFilter(e, graft.filters.FilterDsl.parseJson(hq.filters), ram)
+      val nAllowed = f.allowed(total)
+      val stop = VectorSearch.ladderWalk(
+        VectorSearch.ladderCandidates(e, hq.qvec, f.pred, ladder.max), ladder, hq.k, ladder.length)
+      val postCost = if (stop.satisfied) Some(stop.rung) else None
       val chosen =
         if (postCost.isEmpty || nAllowed <= postCost.get) "pre" else "post"
       (hq.qid, hq.k, graft.search.VecMath.round6(nAllowed.toDouble / total),

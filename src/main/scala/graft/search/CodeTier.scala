@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   *  - the shortlist cut: one TakeOrderedAndProject over the code columns,
   *    the vectors are never read;
   *  - the refine, in two forms: the shortlist joins the vector table as a
-  *    broadcast id list into [[VectorSearch.topK]], or — when a RAM tier
-  *    is pinned and the filter is label-only — [[RamCorpus.scoreIds]]
+  *    broadcast id list into [[VectorSearch.topK]], or — when the request's
+  *    [[ResolvedFilter]] carries a RAM tier — [[RamCorpus.scoreIds]]
   *    scores the collected ids from the pinned blocks. Both rank alike
   *    (RamCorpusSpec parity).
   */
@@ -30,13 +30,6 @@ object CodeTier {
 
   /** One query's scan of a code table: the rows it reads and their score. */
   final case class Scan(rows: DataFrame, score: Column)
-
-  /** A RAM tier and the label predicate it evaluates — present only when
-    * the filter is label-only ([[RamCorpus.labelPredicate]]). */
-  type RamRefine = Option[(RamCorpus, Option[Int => Boolean])]
-
-  def ramRefine(ram: Option[RamCorpus], spec: graft.filters.FilterDsl.Spec): RamRefine =
-    ram.flatMap(rc => RamCorpus.labelPredicate(spec).map((rc, _)))
 
   /** The best `n` code rows as (vec_id, adc_score), ranked by the rule. */
   def shortlist(scan: Scan, n: Int): DataFrame =
@@ -67,12 +60,12 @@ object CodeTier {
     refine(corpus, shortlist(scan, n), qvec, k)
 
   /** One served query as ranked (vec_id, score) pairs: the pinned-block
-    * refine of the collected shortlist when `ram` is given, else the
-    * broadcast refine under the Catalyst filter `pred`. */
+    * refine of the collected shortlist when the filter resolved to a RAM
+    * tier, else the broadcast refine under its Catalyst predicate. */
   def serve(scan: Scan, corpus: DataFrame, qvec: Array[Float], k: Int, n: Int,
-            pred: Option[Column], ram: RamRefine): Seq[(Long, Double)] = ram match {
+            f: ResolvedFilter): Seq[(Long, Double)] = f.ram match {
     case Some((rc, lp)) => rc.scoreIds(qvec, shortlistIds(scan, n), k, lp)
-    case None => refine(corpus, shortlist(scan, n), qvec, k, pred).collect()
+    case None => refine(corpus, shortlist(scan, n), qvec, k, f.pred).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
   }
 
@@ -80,12 +73,12 @@ object CodeTier {
     * caller that ranks several prefixes of one shortlist (the harness's
     * fused ivfpq ladder). */
   def scoreAll(corpus: DataFrame, ids: Array[Long], qvec: Array[Float],
-               pred: Option[Column], ram: RamRefine): Map[Long, Double] = ram match {
+               f: ResolvedFilter): Map[Long, Double] = f.ram match {
     case Some((rc, lp)) => rc.scoreIds(qvec, ids, ids.length, lp).toMap
     case None =>
       import corpus.sparkSession.implicits._
       val scored = VectorSearch.withScore(joined(corpus, ids.toSeq.toDF("vec_id")), qvec)
-      pred.map(scored.where).getOrElse(scored)
+      f.pred.map(scored.where).getOrElse(scored)
         .select(col("vec_id"), col("score")).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
   }

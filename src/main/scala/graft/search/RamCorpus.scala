@@ -163,8 +163,9 @@ object RamCorpus {
   /** Compile a filter-DSL spec into a LOCAL label predicate, when the spec
     * touches nothing but the int `label` column (the embeddings table's
     * only filterable metadata, QuerySet §3). None = not label-only — the
-    * caller must fall back to the Catalyst path. Semantics match
-    * FilterDsl.compile: AND of all ops, cast-failure excludes all rows. */
+    * request stays on the Catalyst path ([[ResolvedFilter]] asks once per
+    * request). Semantics match FilterDsl.compile: AND of all ops,
+    * cast-failure excludes all rows. */
   def labelPredicate(spec: FilterDsl.Spec): Option[Option[Int => Boolean]] = {
     if (spec.isEmpty) return Some(None)
     if (!spec.preds.forall(_._1 == "label")) return None

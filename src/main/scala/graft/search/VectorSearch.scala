@@ -89,9 +89,9 @@ object VectorSearch {
     * filter, and widen K′ up the ladder until ≥K survive (or the ladder is
     * exhausted); return the top-K survivors.
     *
-    * Scale shape: ONE distributed job — a TakeOrderedAndProject of the
-    * max rung (O(K′ₘₐₓ) rows to the driver, per-partition heaps, no cache,
-    * no global sort). The ladder logic then runs driver-side over those
+    * Scale shape: ONE distributed job — [[ladderCandidates]] of the max
+    * rung (O(K′ₘₐₓ) rows to the driver, per-partition heaps, no cache,
+    * no global sort). [[ladderWalk]] then runs driver-side over those
     * ≤K′ₘₐₓ rows, which is semantically identical to the reference's retry
     * loop (top-200 ⊆ top-500 ⊆ top-1000) without re-scanning per rung.
     */
@@ -103,19 +103,51 @@ object VectorSearch {
       ladder: Seq[Int] = Seq(200, 500, 1000)): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val maxRung = ladder.max
-    val cand = withScore(emb, qv)
-      .withColumn("pass", coalesce(pred, lit(false)))
+    val cand = ladderCandidates(emb, qv, Some(pred), ladder.max)
+    spark.createDataset(ladderWalk(cand, ladder, k, ladder.length).kept).toDF("vec_id", "score")
+  }
+
+  /** The post-filter ladder's input: the top `maxRung` rows of `emb` as
+    * (vec_id, score, pass), ranked by (score desc, vec_id), `pass` = the
+    * row passes `pred` (NULL fails; None passes every row). One
+    * TakeOrderedAndProject, ≤ `maxRung` rows to the driver. */
+  def ladderCandidates(emb: DataFrame, qv: Array[Float], pred: Option[Column],
+                       maxRung: Int): Array[(Long, Double, Boolean)] = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    withScore(emb, qv)
+      .withColumn("pass", coalesce(pred.getOrElse(lit(true)), lit(false)))
       .select(col("vec_id").cast("long"), col("score"), col("pass"))
       .orderBy(desc("score"), col("vec_id"))
       .limit(maxRung)
       .as[(Long, Double, Boolean)]
-      .collect() // ≤ maxRung rows by contract — the one driver-side hop
-    val chosen = ladder.sorted
-      .find(kp => cand.take(kp).count(_._3) >= k)
-      .getOrElse(maxRung)
-    val kept = cand.take(chosen).filter(_._3).take(k).map { case (id, s, _) => (id, s) }
-    spark.createDataset(kept.toSeq).toDF("vec_id", "score")
+      .collect()
+  }
+
+  /** Where a ladder walk stopped: the ≤K kept (vec_id, score) rows, the
+    * stopping rung K′, whether ≥K were kept there, and the retries spent. */
+  final case class LadderStop(kept: Seq[(Long, Double)], rung: Int, satisfied: Boolean,
+                              retries: Int)
+
+  /** The reference's rung walk (post_filter.py:60-99) over ranked
+    * candidates (`cand`, best first, each with its pass bit): a rung that
+    * keeps < K candidates is a retry (bump); stop when ≥ K are kept, when
+    * `maxSteps` retries have been spent, or when the ladder is exhausted.
+    * Rungs are walked in ascending order; O(K′) driver work. */
+  def ladderWalk(cand: Array[(Long, Double, Boolean)], ladder: Seq[Int], k: Int,
+                 maxSteps: Int): LadderStop = {
+    var retries = 0
+    var lastRung = 0
+    var satisfied = false
+    val it = ladder.sorted.iterator
+    while (it.hasNext && !satisfied && retries < maxSteps) {
+      val kp = it.next()
+      lastRung = kp
+      if (cand.take(kp).count(_._3) >= k) satisfied = true
+      else retries += 1
+    }
+    LadderStop(cand.take(lastRung).filter(_._3).take(k).map(c => (c._1, c._2)).toSeq,
+      lastRung, satisfied, retries)
   }
 
   /** Batch kNN join: top-k neighbors per query, all queries in one pass.

@@ -22,17 +22,32 @@ class CodeTierSpec extends AnyFunSuite {
     assert(CodeTier.shortlistIds(model.scan(q), 60).toSeq == byHamming)
   }
 
-  test("the shortlist ranking lives only in CodeTier") {
+  /** `file:line` of every line under src/main/scala that contains `needle`. */
+  private def sourceHits(needle: String): Seq[String] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the project root (cwd ${new java.io.File(".").getAbsolutePath})")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val hits = for {
+    for {
       f <- walk(root)
-      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().zipWithIndex
-      if line.contains("desc(\"adc_score\")")
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().zipWithIndex.toSeq
+      if line.contains(needle)
     } yield s"${f.getName}:${i + 1}"
+  }
+
+  test("the shortlist ranking lives only in CodeTier") {
+    val hits = sourceHits("desc(\"adc_score\")")
     assert(hits.nonEmpty && hits.forall(_.startsWith("CodeTier.scala:")), hits)
+    // the same guard for the request path: the post-filter ladder's
+    // filter-derived pass column is fetched only in VectorSearch, and a
+    // spec becomes a RAM label predicate only where it is defined and at
+    // the one resolution site
+    val pass = sourceHits("withColumn(\"pass\", coalesce(")
+    assert(pass.nonEmpty && pass.forall(_.startsWith("VectorSearch.scala:")), pass)
+    val label = sourceHits("labelPredicate(")
+    assert(label.exists(_.startsWith("ResolvedFilter.scala:")) &&
+      label.forall(h => h.startsWith("RamCorpus.scala:") || h.startsWith("ResolvedFilter.scala:")),
+      label)
   }
 }

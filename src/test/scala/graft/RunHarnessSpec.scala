@@ -151,10 +151,10 @@ class RunHarnessSpec extends AnyFunSuite {
 
   test("backend registry maps names; unknown backend rejected") {
     val emb = Tables.embeddings(spark, sf) // test_backend_registry_maps_names_correctly
-    assert(RunHarness.getBackend("exact", emb, 500).name == "exact")
-    assert(RunHarness.getBackend("pre_filter", emb, 500).name == "pre_filter")
-    assert(RunHarness.getBackend("post_filter", emb, 500).name == "post_filter")
-    assert(RunHarness.getBackend("random", emb, 500).name == "random")
+    assert(RunHarness.getBackend("exact", emb, 500).names == Seq("exact"))
+    assert(RunHarness.getBackend("pre_filter", emb, 500).names == Seq("pre_filter"))
+    assert(RunHarness.getBackend("post_filter", emb, 500).names == Seq("post_filter"))
+    assert(RunHarness.getBackend("random", emb, 500).names == Seq("random"))
     intercept[IllegalArgumentException] { RunHarness.getBackend("hnsw", emb, 500) }
   }
 
@@ -172,8 +172,8 @@ class RunHarnessSpec extends AnyFunSuite {
       case Ivf.UseIvf(m) => m.centroids.nonEmpty; case _ => false
     })
     // registry end-to-end: "auto" lands on the chain's pick
-    assert(RunHarness.getBackend("auto", emb, 500).name == "exact")
-    assert(RunHarness.getBackend("lsh", emb, 500).name == "lsh")
+    assert(RunHarness.getBackend("auto", emb, 500).names == Seq("exact"))
+    assert(RunHarness.getBackend("lsh", emb, 500).names == Seq("lsh"))
   }
 
   test("lsh backend: recall against exact within its probabilistic tier") {
@@ -189,7 +189,8 @@ class RunHarnessSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val emb = Tables.embeddings(spark, sf)
     val qvec = QueryVectors.qvec(1)
-    val pred = Some(col("label") === 0)
+    val label0 = graft.search.ResolvedFilter(emb,
+      graft.filters.FilterDsl.parseJson("""{"label":{"eq":0}}"""))
     // how many allowed candidates each rung yields, computed independently
     val scored = graft.search.VectorSearch.withScore(emb, qvec)
       .orderBy(org.apache.spark.sql.functions.desc("score"), col("vec_id"))
@@ -200,7 +201,7 @@ class RunHarnessSpec extends AnyFunSuite {
     val allowed = scored.count(_.getInt(1) == 0).toLong
     assume(k <= allowed)
     val backend = RunHarness.getBackend("post_filter", emb, 500)
-    val (_, stats) = backend.search(emb, qvec, pred, k, allowed)
+    val Seq(("post_filter", (_, stats))) = backend.search(emb, qvec, label0, k, allowed)
     val expectRetries = Seq(200, 500, 1000).indexWhere(keptAt(_) >= k) match {
       case -1 => 3 // exhausted: every rung bumped (reference counts the last bump too)
       case i => i
@@ -208,9 +209,65 @@ class RunHarnessSpec extends AnyFunSuite {
     assert(stats.retries == expectRetries, s"retries ${stats.retries} != $expectRetries")
     // max_ladder_steps=1: only the first rung may run (reference :60-66)
     val capped = RunHarness.getBackend("post_filter", emb, 500, maxLadderSteps = Some(1))
-    val (ids1, stats1) = capped.search(emb, qvec, pred, k, allowed)
+    val Seq(("post_filter", (ids1, stats1))) = capped.search(emb, qvec, label0, k, allowed)
     assert(stats1.scoredVectors == 200 && stats1.retries == 1)
     assert(ids1.length < k) // stopped short by the cap, not by satisfying K
+  }
+
+  test("post_filter ladder: pinned-block and corpus candidates walk alike") {
+    // one rung walk over two candidate sources: the RAM tier's pinned
+    // blocks (the filter resolves with the tier) and the Catalyst fetch
+    // over the corpus (resolved without it) must stop at the same rung
+    // with the same kept rows, kth and retries
+    import graft.filters.FilterDsl
+    import graft.search.ResolvedFilter
+    val emb = Tables.embeddings(spark, sf)
+    val ram = graft.queries.VectorQueries.servingTier(spark, sf)
+    assert(ram.isDefined, "sf0.001 fits the serving budget")
+    val qvec = QueryVectors.qvec(2)
+    val label7 = FilterDsl.parseJson("""{"label":{"eq":7}}""")
+    val n7 = emb.where(org.apache.spark.sql.functions.col("label") === 7).count().toInt
+    assume(n7 > 0 && n7 < 200, s"label 7 keeps $n7 rows")
+    def walk(spec: FilterDsl.Spec, k: Int, steps: Option[Int]) = Seq(ram, None).map { tier =>
+      val f = ResolvedFilter(emb, spec, tier)
+      assert(f.ram.isDefined == tier.isDefined)
+      val b = RunHarness.getBackend("post_filter", emb, 500, maxLadderSteps = steps)
+      val Seq(("post_filter", (ids, st))) = b.search(emb, qvec, f, k, f.allowed(500))
+      (ids, st.scoredVectors, st.kthAtStop, st.retries, st.notes)
+    }
+    // a filter that exhausts the ladder: fewer allowed rows than K
+    val Seq(exhaustedRam, exhaustedCat) = walk(label7, n7 + 1, None)
+    assert(exhaustedRam == exhaustedCat)
+    assert(exhaustedRam._2 == 1000 && exhaustedRam._3.isEmpty && exhaustedRam._4 == 3,
+      exhaustedRam)
+    assert(exhaustedRam._1.length == n7)
+    // maxLadderSteps = 1: the first rung only, stopped short by the cap
+    val Seq(cappedRam, cappedCat) = walk(label7, n7 + 1, Some(1))
+    assert(cappedRam == cappedCat)
+    assert(cappedRam._2 == 200 && cappedRam._3.isEmpty && cappedRam._4 == 1, cappedRam)
+    // an empty spec: every candidate passes, the first rung satisfies K
+    val Seq(openRam, openCat) = walk(FilterDsl.parseJson("{}"), 10, None)
+    assert(openRam == openCat)
+    assert(openRam._2 == 200 && openRam._3.nonEmpty && openRam._4 == 0 && openRam._1.length == 10,
+      openRam)
+  }
+
+  test("the CLI rejects unknown and dangling flags by name") {
+    assert(RunHarness.parseArgs(Array("--backends", "exact,pq", "--max_queries", "5")) ==
+      Map("--backends" -> "exact,pq", "--max_queries" -> "5"))
+    assert(RunHarness.parseArgs(Array.empty[String]).isEmpty)
+    val unknown = intercept[IllegalArgumentException] {
+      RunHarness.parseArgs(Array("--max-queries", "5"))
+    }
+    assert(unknown.getMessage.contains("--max-queries"), unknown.getMessage)
+    val trailing = intercept[IllegalArgumentException] {
+      RunHarness.parseArgs(Array("--backend", "exact", "--K"))
+    }
+    assert(trailing.getMessage.contains("--K"), trailing.getMessage)
+    val swallowed = intercept[IllegalArgumentException] {
+      RunHarness.parseArgs(Array("--out", "--K", "5"))
+    }
+    assert(swallowed.getMessage.contains("--out"), swallowed.getMessage)
   }
 
   test("random backend: K results, recall well below exact") {
@@ -416,8 +473,8 @@ class RunHarnessSpec extends AnyFunSuite {
 
   test("fused dial ladders: results identical to independent per-dial runs") {
     // the ivfpq shortlist ladder and the lsh radius×tables ladder fuse
-    // into one shared pass per query (GroupBackend); every per-dial
-    // OBSERVABLE — recall vs the same deterministic oracle, the scanned
+    // into one shared pass per query (one Backend answering every dial);
+    // every per-dial OBSERVABLE — recall vs the same deterministic oracle, the scanned
     // count, kth-at-stop, lists probed — must equal a standalone run of
     // that dial (which takes the unfused single-backend path)
     def observables(rows: Seq[RunHarness.ResultRow]) =
