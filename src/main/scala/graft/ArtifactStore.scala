@@ -74,6 +74,13 @@ object ArtifactStore {
       cache.compute(key, (_, cur) =>
         if (cur != null && cur.mtime == mtime && (cur.sc eq sc) && (sc == null || !sc.isStopped)) cur
         else Entry(mtime, sc, compute)).value
+
+    /** An entry that grows from its previous value (a resident table's
+      * pinned pieces): `next` sees the current value when it comes from
+      * live `sc`, else None, and its result replaces it. */
+    def update(key: String, sc: SparkContext)(next: Option[V] => V): V =
+      cache.compute(key, (_, cur) => Entry(0L, sc, next(
+        Option(cur).filter(c => (c.sc eq sc) && !sc.isStopped).map(_.value)))).value
   }
 
   /** One artifact family: its directory, its completion markers (paths

@@ -14,13 +14,17 @@ object Tables {
   /** Reads with the table's schema memoized per source mtime: inferring
     * it runs a footer-reading Spark job per read (≈95 ms warm at sf0.01
     * on a 4-core box), which every index-model lookup would pay before
-    * its memo hit. A rewritten table has a new mtime and is re-inferred;
-    * a path that is not a local dir (mtime 0) is always inferred. */
+    * its memo hit. A rewritten or appended-to table has a new mtime; its
+    * schema is then read from a data file's footer on the driver, and
+    * inferred only when that footer carries no Spark schema
+    * ([[graft.search.Serving.tableSchema]]). A path that is not a local
+    * dir (mtime 0) is always inferred. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     val mtime = sourceMtime(sfDir, name)
     if (mtime == 0L) spark.read.parquet(path)
-    else spark.read.schema(schemas(path, mtime)(spark.read.parquet(path).schema)).parquet(path)
+    else spark.read.schema(schemas(path, mtime)(
+      graft.search.Serving.tableSchema(spark, path))).parquet(path)
   }
 
   private val schemas = new ArtifactStore.Memo[org.apache.spark.sql.types.StructType]

@@ -101,11 +101,13 @@ object Dedup {
     *    pairs ≪ corpus by construction — at 100 TB halving the corpus
     *    tokenize+shuffle beats the extra pair-side exchange outright.
     *
-    * Both shapes produce the identical row set: callers' payloads cover
-    * every candidate id (they derive from the same docs), and the
-    * not-null guard applies to both branches, so a pair with a null
-    * payload column drops either way. */
-  private def withPayloads(pairs: DataFrame, docsPayload: DataFrame,
+    * Both shapes produce the identical row set: one row per DISTINCT
+    * pair (the melt folds duplicates back by pair; the per-side joins
+    * take the pairs distinct first), callers' payloads cover every
+    * candidate id (they derive from the same docs), and the not-null
+    * guard applies to both branches, so a pair with a null payload column
+    * drops either way. */
+  private[graft] def withPayloads(pairs: DataFrame, docsPayload: DataFrame,
                            idCol: String, cols: Seq[String]): DataFrame = {
     val small = smallSource(docsPayload)
     val l = s"${idCol}_l"
@@ -118,7 +120,7 @@ object Dedup {
     if (small) {
       val pl = p0.select(col(idCol).as(l) +: cols.map(c => col(c).as(s"${c}_l")): _*)
       val pr = p0.select(col(idCol).as(r) +: cols.map(c => col(c).as(s"${c}_r")): _*)
-      pairs.select(col(l), col(r))
+      pairs.select(col(l), col(r)).distinct()
         .join(pl.hint("SHUFFLE_HASH"), Seq(l))
         .join(pr.hint("SHUFFLE_HASH"), Seq(r))
         .where(notNullGuard)

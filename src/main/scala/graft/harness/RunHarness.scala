@@ -552,11 +552,22 @@ object RunHarness {
           val tbls = CosineLsh.tables(dim, CosineLsh.pickBits(total), parsed.map(_._3).max)
           out += new LshLadderBackend(parsed, tbls, signedTable(emb, tbls, corpusKey))
         }
-      case n => out += getBackend(n, emb, total, ladder, nprobe, maxLadderSteps,
-        corpusKey, knownDim)
+      case n => out += answeringAs(n, getBackend(n, emb, total, ladder, nprobe, maxLadderSteps,
+        corpusKey, knownDim))
     }
     out.toSeq
   }
+
+  /** `b` answering under the requested `name`: "auto" is served by the
+    * fallback chain's pick (ivf, lsh or exact), and its rows carry "auto". */
+  private def answeringAs(name: String, b: Backend): Backend =
+    if (b.names == Seq(name)) b
+    else new Backend {
+      def names: Seq[String] = Seq(name)
+      def search(emb: DataFrame, qvec: Array[Float], f: ResolvedFilter,
+                 k: Int, allowed: Long): Seq[(String, (Seq[Long], Stats))] =
+        b.search(emb, qvec, f, k, allowed).map { case (_, r) => name -> r }
+    }
 
   case class ResultRow(
       qid: Long, method: String, k: Int, latencyMs: Double, recallAtK: Double,

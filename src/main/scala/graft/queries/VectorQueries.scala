@@ -331,8 +331,7 @@ object VectorQueries {
     val tmp = java.nio.file.Files.createTempDirectory("graft-compact").toString
     try {
       val resident = model.indexed.where(pmod(col("vec_id"), lit(10)) =!= 0)
-      resident.repartition(col("list_id"))
-        .write.partitionBy("list_id").parquet(s"$tmp/data")
+      graft.search.Serving.writeLists(resident, s"$tmp/data", org.apache.spark.sql.SaveMode.ErrorIfExists)
       val b1 = emb(s, d).where(pmod(col("vec_id"), lit(20)) === 0)
       val b2 = emb(s, d).where(pmod(col("vec_id"), lit(20)) === 10)
       graft.search.Ivf.appendToPath(model, b1, tmp)

@@ -3,7 +3,7 @@ package graft.search
 import graft.functions.VectorFunctions._
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** IVF-Flat index for inner-product search, Spark-native.
@@ -112,12 +112,8 @@ final case class IvfModel(centroids: Array[Array[Float]], indexed: DataFrame) {
     * partition pruning) plus the centroid table, so a later JVM can
     * `Ivf.load(spark, path)` without retraining. */
   def write(path: String): Unit = {
-    // cluster rows by list before the partitioned write: without this every
-    // upstream task writes a file into every list directory (tasks × nlist
-    // small files — a metadata storm at any scale); with it each list's
-    // rows land in O(1) files
-    indexed.repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(s"$path/data")
+    // each list's rows land in O(1) files (Serving.writeLists)
+    Serving.writeLists(indexed, s"$path/data", SaveMode.Overwrite)
     val spark = indexed.sparkSession
     import spark.implicits._
     centroids.zipWithIndex
@@ -193,30 +189,39 @@ object Ivf {
   /** Load a persisted index: centroids (tiny — nlist ≤ 4096) + the
     * list_id-partitioned vector table, resident when it fits the serving
     * budget, partition-pruned at probe time above the serving budget
-    * ([[Serving.openLists]]). */
+    * ([[Serving.openLists]]). The centroids are read once per generation
+    * of their files: a reload after an append starts no job for them. */
   def load(spark: SparkSession, path: String): IvfModel =
     load(spark, path, Serving.BudgetBytes)
 
   private[graft] def load(spark: SparkSession, path: String, budgetBytes: Long): IvfModel = {
-    val cents = spark.read.parquet(s"$path/centroids")
-      .orderBy("list_id").collect()
-      .map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray)
+    val dir = new java.io.File(s"$path/centroids")
+    val stamp = Option(dir.listFiles()).getOrElse(Array.empty)
+      .foldLeft(dir.lastModified())((m, f) => math.max(m, f.lastModified()))
+    val cents = centroidTables(dir.getAbsolutePath, stamp) {
+      spark.read.parquet(s"$path/centroids")
+        .orderBy("list_id").collect()
+        .map(_.getAs[scala.collection.Seq[Float]]("centroid").toArray)
+    }
     IvfModel(cents, Serving.openLists(spark, s"$path/data", budgetBytes))
   }
+
+  private val centroidTables = new graft.ArtifactStore.Memo[Array[Array[Float]]]
 
   /** Persisted append — the warehouse-table form of IvfModel.append: the
     * batch's centroid assignments land as NEW files under their list_id
     * partition directories (mode append never rewrites resident files),
-    * so the next `load` serves resident ∪ batch: pinned again within the
-    * serving budget, with the same partition pruning above it. The
-    * clustering repartition keeps each touched list's new rows in O(1)
-    * files (IvfModel.write discipline). Concurrent appends of the SAME
-    * batch would duplicate rows — idempotence belongs to the ingest
-    * coordinator (e.g. streaming's exactly-once foreachBatch), same as
-    * any warehouse append. */
+    * so the next `load` serves resident ∪ batch: within the serving
+    * budget it pins only the new files next to the resident pieces
+    * ([[Serving.openLists]], delta pins), above it the same partition
+    * pruning applies. The write is [[Serving.writeLists]]: each touched
+    * list's new rows in O(1) files, written by one task per core for a
+    * small batch (not by the single task AQE would coalesce it to).
+    * Concurrent appends of the SAME batch would duplicate rows —
+    * idempotence belongs to the ingest coordinator (e.g. streaming's
+    * exactly-once foreachBatch), same as any warehouse append. */
   def appendToPath(model: IvfModel, batch: DataFrame, path: String): Unit =
-    model.assign(batch).repartition(col("list_id"))
-      .write.mode("append").partitionBy("list_id").parquet(s"$path/data")
+    Serving.writeLists(model.assign(batch), s"$path/data", SaveMode.Append)
 
   private val store = new graft.ArtifactStore.Family[IvfModel](
     "ivf", "data/_SUCCESS", "centroids/_SUCCESS")

@@ -1,6 +1,7 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** An IVF-partitioned code table (vec_id, list_id, pq_codes) over a
@@ -35,11 +36,19 @@ trait IvfCodes {
   /** list_id → row count, collected ONCE per model (O(nlist) rows — the
     * centroid discipline): serving-path stats (how many codes a probe
     * scans) come from this map as driver math, never from a per-query
-    * count() job re-scanning the probed partitions. */
-  lazy val listSizes: Map[Int, Long] =
-    coded.groupBy(col("list_id").cast("int").as("list_id"))
-      .agg(count(lit(1)).as("sz"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    * count() job re-scanning the probed partitions. One pass over the
+    * code rows with a per-task count map folded on the driver: no
+    * shuffle. */
+  lazy val listSizes: Map[Int, Long] = {
+    val ids = coded.select(col("list_id").cast("int"))
+    ids.sparkSession.sparkContext.runJob(ids.queryExecution.toRdd, (it: Iterator[InternalRow]) => {
+      val m = scala.collection.mutable.HashMap.empty[Int, Long]
+      it.foreach(r => if (!r.isNullAt(0)) m(r.getInt(0)) = m.getOrElse(r.getInt(0), 0L) + 1)
+      m.toMap
+    }).foldLeft(Map.empty[Int, Long]) { (acc, m) =>
+      m.foldLeft(acc) { case (a, (l, n)) => a.updated(l, a.getOrElse(l, 0L) + n) }
+    }
+  }
 
   /** Composed-index health: list-size skew (what kills nprobe recall)
     * over the composed table, with the PQ geometry alongside; per-subspace
@@ -191,12 +200,10 @@ object IvfPq {
       Pq.encodeCol(pq.codebook, pq.dsub).as("pq_codes")))
 
   /** Persist ONLY the composed code table — the halves persist themselves
-    * (Ivf.cached / Pq.cached); clustering by list before the partitioned
-    * write keeps each list's codes in O(1) files (same discipline as
-    * IvfModel.write). */
+    * (Ivf.cached / Pq.cached); each list's codes land in O(1) files
+    * ([[Serving.writeLists]], as IvfModel.write). */
   def write(model: IvfPqModel, path: String): Unit =
-    model.coded.repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(s"$path/codes")
+    Serving.writeLists(model.coded, s"$path/codes", SaveMode.Overwrite)
 
   /** Load the composed code table at `path` over its trained halves:
     * resident within the serving budget, partition-pruned at probe time
@@ -211,16 +218,16 @@ object IvfPq {
   /** Persisted append on the composed tier (Ivf.appendToPath twin): the
     * batch's (vec_id, list_id, pq_codes) rows land as NEW files under
     * their list_id partition directories — resident code files never
-    * rewritten; a reload pins them again within the serving budget and
-    * prunes them the same way above it. The refine-side vector table is
-    * the caller's corpus artifact and grows through its own ingest; this
-    * appends only the index's code rows. */
+    * rewritten; a reload within the serving budget pins only the new files
+    * as a delta ([[Serving.openLists]]) and above it prunes them the same
+    * way. The write is [[Serving.writeLists]]: O(1) files per touched
+    * list, one task per core for a small batch. The refine-side vector
+    * table is the caller's corpus artifact and grows through its own
+    * ingest; this appends only the index's code rows. */
   def appendToPath(model: IvfPqModel, batch: DataFrame, path: String): Unit =
-    model.ivf.assign(batch)
+    Serving.writeLists(model.ivf.assign(batch)
       .select(col("vec_id"), col("list_id"),
-        Pq.encodeCol(model.pq.codebook, model.pq.dsub).as("pq_codes"))
-      .repartition(col("list_id"))
-      .write.mode("append").partitionBy("list_id").parquet(s"$path/codes")
+        Pq.encodeCol(model.pq.codebook, model.pq.dsub).as("pq_codes")), s"$path/codes", SaveMode.Append)
 
   /** meta.json: the auto-picked shortlist + its probe recall, recorded in
     * the index metadata at build (the dial-default a serving layer reads

@@ -76,8 +76,7 @@ object IvfPqRes {
     * under every query — 2.6× the plain composition's latency — which
     * persistence removes. */
   def write(model: IvfPqResModel, path: String): Unit = {
-    model.coded.repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(s"$path/codes")
+    Serving.writeLists(model.coded, s"$path/codes", org.apache.spark.sql.SaveMode.Overwrite)
     val spark = model.coded.sparkSession
     import spark.implicits._
     model.codebook.zipWithIndex.flatMap { case (cents, s) =>

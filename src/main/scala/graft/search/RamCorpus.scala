@@ -3,7 +3,7 @@ package graft.search
 import graft.filters.FilterDsl
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, size}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.storage.StorageLevel
 
@@ -134,11 +134,13 @@ object RamCorpus {
 
   /** Pack (vec_id, embedding, label) into per-partition blocks and pin
     * them in executor memory. One-time cost, like the reference's artifact
-    * load; the returned corpus serves queries with zero decode. */
+    * load; the returned corpus serves queries with zero decode. One job:
+    * the pin itself reports each block's row count and dimension, and a
+    * row whose dimension differs from its block's or a block's from the
+    * first non-empty block's fails the build, naming a `vec_id`. */
   def build(emb: DataFrame): RamCorpus = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val dim = emb.select(size(col("embedding"))).first().getInt(0)
     val blocks = emb
       .select(col("vec_id").cast("long"), col("embedding"), col("label").cast("int"))
       .as[(Long, Array[Float], Int)]
@@ -147,18 +149,28 @@ object RamCorpus {
         val ids = Array.newBuilder[Long]
         val labels = Array.newBuilder[Int]
         val vecs = Array.newBuilder[Float]
+        var dim = -1
         it.foreach { case (id, v, l) =>
-          if (v.length != dim)
-            throw new IllegalArgumentException(
-              s"dot_f32: dimension mismatch (${v.length} vs $dim) packing vec_id=$id")
+          if (dim < 0) dim = v.length
+          else if (v.length != dim) throw mismatch(v.length, dim, id)
           ids += id; labels += l; vecs ++= v
         }
         Iterator.single(Block(ids.result(), labels.result(), vecs.result()))
       }
       .persist(StorageLevel.MEMORY_ONLY)
-    val total = blocks.map(_.ids.length.toLong).fold(0L)(_ + _) // materializes the pin
-    new RamCorpus(blocks, dim, total)
+    // (rows, dim, first vec_id) per block; materializes the pin
+    val shapes = blocks.map(b =>
+      (b.ids.length.toLong, if (b.ids.isEmpty) 0 else b.vecs.length / b.ids.length,
+        b.ids.headOption.getOrElse(0L))).collect().filter(_._1 > 0)
+    def fail(e: Exception): Nothing = { blocks.unpersist(); throw e }
+    val dim = shapes.headOption.map(_._2).getOrElse(
+      fail(new NoSuchElementException("RamCorpus.build: the corpus has no rows")))
+    shapes.find(_._2 != dim).foreach { case (_, d, id) => fail(mismatch(d, dim, id)) }
+    new RamCorpus(blocks, dim, shapes.map(_._1).sum)
   }
+
+  private def mismatch(got: Int, dim: Int, id: Long) =
+    new IllegalArgumentException(s"dot_f32: dimension mismatch ($got vs $dim) packing vec_id=$id")
 
   /** Compile a filter-DSL spec into a LOCAL label predicate, when the spec
     * touches nothing but the int `label` column (the embeddings table's

@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{SaveMode, SparkSession}
 
 /** Small-file compaction for partitionBy-layout parquet tables — the
   * maintenance op that completes the persisted-index lifecycle
@@ -11,13 +10,17 @@ import org.apache.spark.sql.functions._
   * problem, solved by OPTIMIZE/rewriteDataFiles in Delta/Iceberg).
   *
   * Shape: ONE distributed rewrite clustered by the partition column
-  * (repartition(col) → each partition's rows land in one task → one
-  * output file per partition dir), published by atomic rename with the
+  * ([[graft.search.Serving.writeLists]], the list tables' one writer:
+  * each partition's rows land in one task → one output file per
+  * partition dir), published by atomic rename with the
   * old directory kept until the new one is complete — readers of the old
   * path are never exposed to a half-written table, the same discipline
   * as the ArtifactStore publish. Content is untouched (same rows,
   * same schema, same partition pruning); only the file layout changes —
-  * reload-equivalence is spec-pinned (CompactionSpec).
+  * reload-equivalence is spec-pinned (CompactionSpec). Every file it
+  * replaces is gone afterwards, so the next resident load of the table
+  * pins it whole again as a new base instead of adding a delta
+  * ([[graft.search.Serving.openLists]]).
   *
   * At 100 TB: compaction is per-partition-parallel and touches only data
   * files (no quantizer retraining, no index rebuild); run it on the
@@ -50,9 +53,7 @@ object Compaction {
     val before = dataFiles(d).size
     val pid = s"${ProcessHandle.current().pid()}-${Thread.currentThread().getId}"
     val tmp = s"$dir.compact-$pid"
-    spark.read.parquet(dir)
-      .repartition(col(partitionCol))
-      .write.partitionBy(partitionCol).parquet(tmp)
+    graft.search.Serving.writeLists(spark.read.parquet(dir), tmp, SaveMode.ErrorIfExists, partitionCol)
     val old = new java.io.File(s"$dir.old-$pid")
     if (!d.renameTo(old))
       throw new IllegalStateException(s"compact: cannot stage out $dir")

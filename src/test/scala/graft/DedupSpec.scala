@@ -639,4 +639,28 @@ class DedupSpec extends AnyFunSuite {
     val deployed = got.find(_._6 == 1).get
     assert(deployed._5.get > 0.95, s"deployed recall ${deployed._5}")
   }
+  test("withPayloads: one row per distinct pair on both sides of the 16 MB smallSource boundary") {
+    val dir = java.nio.file.Files.createTempDirectory("payload-branches").toString
+    try {
+      val tsi = Seq(1L -> Seq(1, 2), 2L -> Seq(2, 3), 3L -> Seq(3, 4))
+      // the same three payload rows as a few-KB table and as a table whose
+      // file passes 16 MB through an unselected padding column
+      val rng = new scala.util.Random(3)
+      val pad = (0 until 18).map(i => (100L + i, Seq.empty[Int], Array.fill(1 << 20)(rng.nextInt().toByte)))
+      tsi.map { case (id, t) => (id, t, Array.emptyByteArray) }.toDF("doc_id", "tsi", "pad")
+        .coalesce(1).write.parquet(s"$dir/small")
+      (tsi.map { case (id, t) => (id, t, Array.emptyByteArray) } ++ pad).toDF("doc_id", "tsi", "pad")
+        .coalesce(1).write.parquet(s"$dir/big")
+      def bytes(t: String) = new java.io.File(s"$dir/$t").listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
+      assert(bytes("small") < (16L << 20) && bytes("big") > (16L << 20))
+      val pairs = Seq((1L, 2L), (1L, 2L), (2L, 3L), (2L, 3L), (2L, 3L)).toDF("doc_id_l", "doc_id_r")
+      val want = Seq((1L, 2L, Seq(1, 2), Seq(2, 3)), (2L, 3L, Seq(2, 3), Seq(3, 4)))
+      for (t <- Seq("small", "big")) {
+        val got = Dedup.withPayloads(pairs, spark.read.parquet(s"$dir/$t"), "doc_id", Seq("tsi"))
+          .as[(Long, Long, Seq[Int], Seq[Int])].collect().sortBy(_._1).toSeq
+        assert(got == want, t)
+      }
+    } finally graft.sources.LocalArtifacts.deleteRecursively(new java.io.File(dir))
+  }
 }

@@ -176,6 +176,33 @@ class RunHarnessSpec extends AnyFunSuite {
     assert(RunHarness.getBackend("lsh", emb, 500).names == Seq("lsh"))
   }
 
+  test("\"auto\" rows answer under the requested name, through runMany and the CLI") {
+    // 500 rows: the chain picks exact, so auto's answers are exact's
+    val rows = RunHarness.runMany(spark, sf, Seq("auto", "exact"))
+    val (auto, exact) = rows.partition(_.method == "auto")
+    assert(auto.length == QuerySet.default.length && exact.length == auto.length)
+    assert(auto.map(r => (r.qid, r.recallAtK, r.scoredVectors)) ==
+      exact.map(r => (r.qid, r.recallAtK, r.scoredVectors)))
+    assert(auto.forall(_.recallAtK == 1.0))
+    // the CLI in a child JVM (RunHarness.main stops its session)
+    val out = java.nio.file.Files.createTempFile("harness-auto", ".jsonl")
+    val jvmFlags = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.toArray.map(_.toString)
+      .filter(a => a.startsWith("--add-opens") || a.startsWith("-Dspark."))
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx768m") ++ jvmFlags ++
+      Seq("-cp", sys.props("java.class.path"), "graft.harness.RunHarness",
+        "--sf-dir", sf, "--backend", "auto", "--max_queries", "2", "--out", out.toString)
+    val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
+    pb.environment().put("SPARK_GRAFT_CPUS", "1")
+    val proc = pb.start()
+    val log = scala.io.Source.fromInputStream(proc.getInputStream, "UTF-8").mkString
+    try {
+      assert(proc.waitFor() == 0, log.linesIterator.toSeq.takeRight(40).mkString("\n"))
+      val lines = java.nio.file.Files.readAllLines(out).toArray.map(_.toString).toSeq
+      assert(lines.length == 2 && lines.forall(_.contains("\"method\": \"auto\"")), lines)
+    } finally java.nio.file.Files.deleteIfExists(out)
+  }
+
   test("lsh backend: recall against exact within its probabilistic tier") {
     val emb = Tables.embeddings(spark, sf)
     val rows = RunHarness.run(spark, sf, "lsh", qs = QuerySet.default.take(2))
