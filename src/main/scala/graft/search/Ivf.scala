@@ -169,13 +169,17 @@ object Ivf {
     * `maxTrainRows` — at 100 TB a ~1M-row sample converges to the same
     * centroid quality at a vanishing fraction of full-data training cost),
     * then assign every vector to its nearest centroid. Deterministic under
-    * a fixed seed. */
+    * a fixed seed and session parallelism, whatever files hold the rows:
+    * the sample is [[TrainingRows.sample]], and k-means trains on it hash
+    * partitioned by vec_id and sorted within each partition. */
   def build(emb: DataFrame, nlist: Int, seed: Long = 42L,
             maxIter: Int = 20, maxTrainRows: Long = 1000000L): IvfModel = {
     val n = emb.count()
-    val train0 = if (n <= maxTrainRows) emb
-                 else emb.sample(maxTrainRows.toDouble / n, seed)
-    val train = train0.select(array_to_vector(col("embedding")).as("features"))
+    val train = TrainingRows.sample(emb, n, maxTrainRows, seed)
+      .select(col("vec_id"), array_to_vector(col("embedding")).as("features"))
+      .repartition(emb.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
+      .sortWithinPartitions("vec_id")
+      .select("features")
     val km = new KMeans()
       .setK(nlist).setSeed(seed).setMaxIter(maxIter)
       .setFeaturesCol("features")

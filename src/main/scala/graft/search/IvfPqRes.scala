@@ -125,7 +125,8 @@ object IvfPqRes {
     * pairs — residuals computed driver-side against the coarse centroids
     * (ONE collect feeds all m local fits, the Pq.build discipline), then
     * encode the corpus row-locally with the codegen'd PqEncodeResidual.
-    * Deterministic under a fixed seed. */
+    * Deterministic under a fixed seed, whatever files hold the rows
+    * ([[TrainingRows]]). */
   def build(ivf: IvfModel, m: Int = 0, kCodes: Int = 256, seed: Long = 42L,
             maxIter: Int = 10, maxTrainRows: Long = 100000L): IvfPqResModel = {
     require(kCodes >= 2 && kCodes <= 256,
@@ -137,10 +138,11 @@ object IvfPqRes {
     require(dim % m0 == 0, s"ivfpq_res: dim $dim not divisible by m=$m0")
     val dsub = dim / m0
     val n = ivf.indexed.count()
-    val sample = (if (n <= maxTrainRows) ivf.indexed
-                  else ivf.indexed.sample(maxTrainRows.toDouble / n, seed))
-      .select(col("embedding"), col("list_id").cast("int"))
-      .as[(Array[Float], Int)].collect()
+    // in vec_id order: localKMeans seeds from sample positions
+    val sample = TrainingRows.sample(ivf.indexed, n, maxTrainRows, seed)
+      .select(col("vec_id").cast("long"), col("embedding"), col("list_id").cast("int"))
+      .as[(Long, Array[Float], Int)].collect()
+      .sortBy(_._1).map { case (_, v, l) => (v, l) }
     require(sample.nonEmpty, "ivfpq_res: empty training sample")
     val residuals = sample.map { case (v, l) =>
       val c = ivf.centroids(l)

@@ -173,9 +173,10 @@ object Pq {
   }
 
   /** Train on a bounded sample (ONE collect feeds all m local fits), then
-    * encode the corpus row-locally. Deterministic under a fixed seed.
-    * `m = 0` (the default) auto-sizes via [[pickM]]; kCodes = 256 is the
-    * FAISS-standard byte code. */
+    * encode the corpus row-locally. Deterministic under a fixed seed,
+    * whatever files hold the rows ([[TrainingRows]]). `m = 0` (the
+    * default) auto-sizes via [[pickM]]; kCodes = 256 is the FAISS-standard
+    * byte code. */
   def build(emb: DataFrame, m: Int = 0, kCodes: Int = 256, seed: Long = 42L,
             maxIter: Int = 10, maxTrainRows: Long = 100000L): PqModel = {
     require(kCodes >= 2 && kCodes <= 256,
@@ -187,9 +188,10 @@ object Pq {
     require(dim % m0 == 0, s"pq: dim $dim not divisible by m=$m0")
     val dsub = dim / m0
     val n = emb.count()
-    val sample = (if (n <= maxTrainRows) emb
-                  else emb.sample(maxTrainRows.toDouble / n, seed))
-      .select(col("embedding")).as[Array[Float]].collect()
+    // in vec_id order: localKMeans seeds from sample positions
+    val sample = TrainingRows.sample(emb, n, maxTrainRows, seed)
+      .select(col("vec_id").cast("long"), col("embedding")).as[(Long, Array[Float])].collect()
+      .sortBy(_._1).map(_._2)
     require(sample.nonEmpty, "pq: empty training sample")
     // effective code count is bounded by the sample (localKMeans seeds
     // centroids from distinct sample rows) — PqModel.kCodes must match the

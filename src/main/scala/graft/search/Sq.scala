@@ -88,13 +88,13 @@ final case class SqModel(dim: Int, vmin: Array[Float], delta: Array[Float],
 object Sq {
 
   /** Train per-dim (vmin, delta) on a bounded sample (ONE collect), then
-    * encode the corpus row-locally. Deterministic under a fixed seed. */
+    * encode the corpus row-locally. Deterministic under a fixed seed,
+    * whatever files hold the rows ([[TrainingRows]]). */
   def build(emb: DataFrame, seed: Long = 42L, maxTrainRows: Long = 100000L): SqModel = {
     val spark = emb.sparkSession
     import spark.implicits._
     val n = emb.count()
-    val sample = (if (n <= maxTrainRows) emb
-                  else emb.sample(maxTrainRows.toDouble / n, seed))
+    val sample = TrainingRows.sample(emb, n, maxTrainRows, seed)
       .select(col("embedding")).as[Array[Float]].collect()
     require(sample.nonEmpty, "sq: empty training sample")
     val dim = sample(0).length
