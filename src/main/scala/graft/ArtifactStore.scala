@@ -45,8 +45,10 @@ object ArtifactStore {
 
   /** On-disk format generation of every entry. Bump it when a family's
     * write layout or build semantics change: older generations are then
-    * unaddressable and reaped once aged. */
-  val Version = "v1"
+    * unaddressable and reaped once aged. v2: quantizers train on rows
+    * chosen by vec_id ([[graft.search.TrainingRows]]), so a v1 model of
+    * the same source is another model. */
+  val Version = "v2"
 
   /** Newest source-file mtime of `source` (0 for a non-file source): no
     * Spark job — the file list is the planned scan's. */

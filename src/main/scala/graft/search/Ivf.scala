@@ -169,17 +169,14 @@ object Ivf {
     * `maxTrainRows` — at 100 TB a ~1M-row sample converges to the same
     * centroid quality at a vanishing fraction of full-data training cost),
     * then assign every vector to its nearest centroid. Deterministic under
-    * a fixed seed and session parallelism, whatever files hold the rows:
-    * the sample is [[TrainingRows.sample]], and k-means trains on it hash
-    * partitioned by vec_id and sorted within each partition. */
+    * a fixed seed, whatever files hold the rows: k-means trains on
+    * [[TrainingRows.sample]] laid out by [[TrainingRows.partitioned]]. */
   def build(emb: DataFrame, nlist: Int, seed: Long = 42L,
             maxIter: Int = 20, maxTrainRows: Long = 1000000L): IvfModel = {
     val n = emb.count()
-    val train = TrainingRows.sample(emb, n, maxTrainRows, seed)
-      .select(col("vec_id"), array_to_vector(col("embedding")).as("features"))
-      .repartition(emb.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
-      .sortWithinPartitions("vec_id")
-      .select("features")
+    val train = TrainingRows.partitioned(TrainingRows.sample(emb, n, maxTrainRows, seed)
+      .select(col("vec_id"), array_to_vector(col("embedding")).as("features")),
+      math.min(n, maxTrainRows)).select("features")
     val km = new KMeans()
       .setK(nlist).setSeed(seed).setMaxIter(maxIter)
       .setFeaturesCol("features")

@@ -143,9 +143,9 @@ object Serving {
         Some((r, PinnedScan.scan(spark, r.output, pieces.head, pieces.tail, r.sizeInBytes), "unchanged"))
       else {
         val bytes = fresh.map(_.getLen).sum
-        val read = listedRead(spark, root, fresh)
-        if (read.schema != r.schema || r.pieces.length > r.baseParts ||
-            r.deltaBytes + bytes > r.baseBytes) None
+        lazy val read = listedRead(spark, root, fresh)
+        if (r.pieces.length > r.baseParts || r.deltaBytes + bytes > r.baseBytes ||
+            read.schema != r.schema) None
         else {
           val d = PinnedScan.piece(Pin(read.coalesce(r.baseParts)))
           val grown = r.copy(files = r.files ++ stamps(fresh),

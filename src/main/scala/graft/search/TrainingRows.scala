@@ -19,4 +19,15 @@ private[search] object TrainingRows {
     if (n <= maxRows) emb
     else emb.where(shiftrightunsigned(xxhash64(col("vec_id"), lit(seed)), 11).cast("double") <
       lit(maxRows.toDouble / n * (1L << 53)))
+
+  /** `train` (about `rows` rows) for a distributed fit: hash partitioned by
+    * vec_id into one partition per [[RowsPerPartition]] rows, sorted by
+    * vec_id within each — a layout fixed by the row set. */
+  def partitioned(train: DataFrame, rows: Long): DataFrame =
+    train.repartition(math.max(1L, (rows + RowsPerPartition - 1) / RowsPerPartition).toInt, col("vec_id"))
+      .sortWithinPartitions("vec_id")
+
+  /** Training rows per k-means partition: a 1M-row sample trains on 100
+    * tasks, a sample of at most 10,000 rows on one, in vec_id order. */
+  val RowsPerPartition = 10000L
 }

@@ -60,6 +60,11 @@ class DeltaPinSpec extends AnyFunSuite {
   private def pieces(df: DataFrame): Seq[RDD[_]] =
     if (isDelta(df)) served(df).dependencies.map(_.rdd) else Seq(served(df))
 
+  /** Keeps `models` strongly reachable up to this call: the memo holds
+    * pinned pieces weakly, and a piece no live frame serves may be
+    * collected, after which the next load pins the whole table again. */
+  private def held(models: AnyRef*): Unit = java.lang.ref.Reference.reachabilityFence(models)
+
   private def jobsOf(group: String)(body: => Any): Seq[Int] = {
     val sc = spark.sparkContext
     sc.setJobGroup(group, group)
@@ -71,8 +76,7 @@ class DeltaPinSpec extends AnyFunSuite {
   test("n append+reload cycles: the delta-served table is a fresh full pin, on every probe path") {
     withDir("delta-cycles") { dir =>
       stage(dir)
-      Ivf.load(spark, s"$dir/ivf")
-      IvfPq.load(spark, s"$dir/ivfpq", ivf, pq)
+      var last: Seq[AnyRef] = Seq(Ivf.load(spark, s"$dir/ivf"), IvfPq.load(spark, s"$dir/ivfpq", ivf, pq))
       var deltas = 0
       for (b <- 0 until 6) {
         append(dir, b)
@@ -111,7 +115,10 @@ class DeltaPinSpec extends AnyFunSuite {
           assert(served(df).getNumPartitions == pieces(df).head.getNumPartitions)
           assert(df.queryExecution.toRdd.getNumPartitions == pieces(df).head.getNumPartitions)
         }
+        held(last: _*)
+        last = Seq(m, c)
       }
+      held(last: _*)
       assert(deltas >= 4, s"only $deltas of 12 reloads were served as deltas")
     }
   }
@@ -119,10 +126,11 @@ class DeltaPinSpec extends AnyFunSuite {
   test("a reload after every pinned piece is released pins the table again and answers correctly") {
     withDir("delta-released") { dir =>
       stage(dir)
-      Ivf.load(spark, s"$dir/ivf")
+      val m0 = Ivf.load(spark, s"$dir/ivf")
       append(dir, 0)
       val m = Ivf.load(spark, s"$dir/ivf")
       assert(isDelta(m.indexed))
+      held(m0)
       // what a benchmark's between-reps release does: clear the cache and
       // unpersist every pinned RDD (here, every piece of this table)
       spark.catalog.clearCache()
@@ -141,9 +149,10 @@ class DeltaPinSpec extends AnyFunSuite {
   test("a rewritten file or outgrown deltas pin the whole table as a new base") {
     withDir("delta-repin") { dir =>
       stage(dir)
-      Ivf.load(spark, s"$dir/ivf")
+      val m0 = Ivf.load(spark, s"$dir/ivf")
       append(dir, 0)
       assert(isDelta(Ivf.load(spark, s"$dir/ivf").indexed))
+      held(m0)
       Compaction.compactPartitioned(spark, s"$dir/ivf/data", "list_id")
       val compacted = Ivf.load(spark, s"$dir/ivf")
       assert(!isDelta(compacted.indexed))
@@ -179,15 +188,16 @@ class DeltaPinSpec extends AnyFunSuite {
     withDir("delta-jobs") { dir =>
       stage(dir)
       val m0 = Ivf.load(spark, s"$dir/ivf")
-      IvfPq.load(spark, s"$dir/ivfpq", m0, pq)
+      val c0 = IvfPq.load(spark, s"$dir/ivfpq", m0, pq)
       append(dir, 0)
       // the centroids come from the memo; the new files are the one job
-      assert(jobsOf("delta-load")(Ivf.load(spark, s"$dir/ivf")).length == 1)
       var m: IvfModel = null
+      assert(jobsOf("delta-load") { m = Ivf.load(spark, s"$dir/ivf") }.length == 1)
       assert(jobsOf("unchanged-load") { m = Ivf.load(spark, s"$dir/ivf") }.isEmpty)
-      assert(jobsOf("delta-codes")(IvfPq.load(spark, s"$dir/ivfpq", m, pq)).length == 1)
       var c: IvfPqModel = null
+      assert(jobsOf("delta-codes") { c = IvfPq.load(spark, s"$dir/ivfpq", m, pq) }.length == 1)
       assert(jobsOf("unchanged-codes") { c = IvfPq.load(spark, s"$dir/ivfpq", m, pq) }.isEmpty)
+      held(m0, c0)
       val sizesJobs = jobsOf("list-sizes")(c.listSizes)
       val sc = spark.sparkContext
       assert(sizesJobs.nonEmpty &&
